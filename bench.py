@@ -1204,6 +1204,19 @@ def _load_prior_record(repo_detail_path: str, tree_id: str) -> dict:
     return prev
 
 
+def _may_write_repo_copy(sf: str, sf1: dict | None, prior_record: dict) -> bool:
+    """Whether this run may overwrite the repo's BENCH_FULL.json.
+
+    A run with an sf1 section always may. An sf1-disabled run may only
+    extend a same-tree record (its sf1 section is carried forward) of
+    the SAME headline sf: a smoke run at another sf would otherwise
+    replace the headline (sf, value, per-query detail) with
+    smoke-scale numbers."""
+    if sf1 is not None:
+        return True
+    return bool(prior_record) and prior_record.get("sf") == sf
+
+
 def _load_prior_runs(repo_detail_path: str, tree_id: str) -> list[dict]:
     """Per-run compact records accumulated by earlier bench invocations
     on the SAME tree (tree_id mismatch or unknown -> no merge)."""
@@ -2309,12 +2322,8 @@ def main() -> None:
         with open(detail_path, "w") as f:
             json.dump(full, f, indent=1)
         # a copy inside the repo survives the sandbox via the driver's
-        # end-of-round commit (the /tmp copy does not). An sf1-disabled
-        # run may write ONLY when it extends a same-tree record (the
-        # prior sf1 section is carried forward above); on a foreign
-        # tree it still refuses, so a smoke run cannot clobber the last
-        # full record with an sf1:null one.
-        if sf1 is not None or prior_record:
+        # end-of-round commit (the /tmp copy does not)
+        if _may_write_repo_copy(sf, sf1, prior_record):
             with open(repo_detail, "w") as f:
                 json.dump(full, f, indent=1)
     except OSError:

@@ -67,6 +67,17 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.unionByName(rev)
 
 
+def _by_dst(spark: SparkSession, edges: DataFrame) -> DataFrame:
+    """``edges`` hash-partitioned on ``dst`` into the session's
+    ``spark.sql.shuffle.partitions`` — one task wave per superstep over
+    the persisted cache (a count far above the slot count runs mostly
+    empty tasks). The count stays explicit: AQE never coalesces
+    a by-number repartition, so the cache keeps hashpartitioning(dst)
+    and the supersteps' groupBy(dst) stays exchange-free."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return edges.repartition(parts, "dst")
+
+
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Build the graph ONCE, shaped for iteration (measured 43s -> ~15s
     # at synthesized sf1, 11.8M directed edges):
@@ -78,7 +89,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   the dst outputPartitioning (localCheckpoint's Scan ExistingRDD
     #   drops it — measured round 10, correcting this comment's prior
     #   claim), so each superstep's groupBy(dst) aggregate needs NO
-    #   exchange at all.
+    #   exchange at all;
+    # * partitioned into the session's shuffle-partition count
+    #   (_by_dst), so each superstep is one task wave.
     # Per superstep the rank vector is vocabulary-sized (nodes, 16 B
     # each), so it broadcasts; the only repeated work is one pass over
     # the cached edge partitions + a map-side-combined, exchange-free
@@ -91,7 +104,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every node appears as a src (each edge has its reverse), so the
     # src side enumerates the node set and there are no dangling nodes
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    graph = edges.join(deg, "src").repartition(64, "dst").persist()
+    graph = _by_dst(spark, edges.join(deg, "src")).persist()
     try:
         n_nodes = deg.count()  # driver-side SCALAR (a count, never data)
         init_rank = PR_SCALE // n_nodes
@@ -332,6 +345,19 @@ def _lpa_superstep(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+def _lpa_first_round(edges: DataFrame) -> DataFrame:
+    """Round 1 of LPA from identity labels, in closed form: each node
+    takes its smallest neighbour id. Every node starts labelled with
+    its own id and ``_edges`` is distinct, so every (dst, src) vote
+    counts exactly 1 and the packed argmax reduces to ``min(src)``
+    (pinned against ``_lpa_superstep`` in tests). Exchange-free over
+    the dst-partitioned cache, like a superstep, but with no label
+    vector to build or broadcast."""
+    return edges.groupBy(F.col("dst").alias("node")).agg(
+        F.min("src").alias("lbl")
+    )
+
+
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (community detection) made
     hash-checkable: every node starts as its own label; each round it
@@ -365,15 +391,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocations re-pay the build (bench fairness). If labels outgrew
     broadcast, swap to a shuffle join on src with edges partitioned
     by src — one exchange per round, the classic trade.
+
+    Round 1 runs in closed form (``_lpa_first_round``): one job that
+    both materializes the edge cache and labels every node, with no
+    identity-label vector. The remaining rounds are supersteps.
     """
-    edges = _edges(spark, sf_dir).repartition(64, "dst").persist()
+    edges = _by_dst(spark, _edges(spark, sf_dir)).persist()
     try:
-        labels = (
-            edges.select("src").distinct()
-            .select(F.col("src").alias("node"), F.col("src").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        for _ in range(LPA_ITERS):
+        labels = _lpa_first_round(edges).localCheckpoint(eager=True)
+        for _ in range(LPA_ITERS - 1):
             # superseded round snapshots are released as we go
             # (checkpoints.py contract); the last is the result's own
             labels = checkpoint_replacing(
@@ -457,30 +483,40 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     per level the cached edges stream map-side through a
     BroadcastHashJoin and a broadcast anti join, and the only shuffle
     is the distinct over the expanded frontier. The per-level visited
-    checkpoint is also gone — visited is a union of <= depth already-
-    checkpointed frontiers, so its plan stays flat without one. At
-    100 TB with a frontier too big to broadcast (web-graph expansion
-    peak), drop the hints and pre-partition edges by src — the
-    classic shuffle-BFS trade, one exchange per level.
+    checkpoint is also gone — visited is the source row plus a union
+    of <= depth already-checkpointed frontiers, so its plan stays flat
+    without one. At 100 TB with a frontier too big to broadcast
+    (web-graph expansion peak), drop the hints and pre-partition edges
+    by src — the classic shuffle-BFS trade, one exchange per level.
 
-    sf0.1 ratio adjudication (r15, SCALE.md §30b): the 4.6x row is
-    per-round job tax, not plan — decomposed as edge build ~1.0 s
-    (the 2x-lineitem scan + pair distinct, vs DuckDB's ENTIRE
-    recursive CTE at 0.45 s in-process) plus 5 eager supersteps at
-    the ~0.28 s per-job floor. Both structural alternatives were
-    built and measured SLOWER: a fully lazy bounded-depth single-job
-    plan (5.1 s — frontier subtrees recompute exponentially without
-    per-level materialization) and a two-levels-per-superstep fold
-    (2.63 vs 2.42 s — the fold halves jobs but doubles stages per
-    job, so the wave count is unchanged). The constant amortizes at
-    cluster scale; folding is not the lever.
+    The first two levels cost no join. The one-row source is built in
+    the JVM (``spark.range``), so it runs no job; an uncheckpointed
+    ``createDataFrame`` would be a Python RDD re-evaluated at every
+    broadcast. Level 1 is the source's out-edges: edges are distinct
+    and the graph is bipartite (the source cannot be its own
+    neighbour), so the filter needs no distinct and no anti join.
+
+    Where the time goes (r15, SCALE.md §30b): per-level job tax, not
+    plan — the edge build (the 2x-lineitem scan + pair distinct) plus
+    one eager checkpoint per level from 1 to BFS_MAX_LEVEL at the
+    per-job floor. Both structural alternatives were built and
+    measured SLOWER: a fully lazy bounded-depth single-job plan (5.1 s
+    — frontier subtrees recompute exponentially without per-level
+    materialization) and a two-levels-per-superstep fold (2.63 vs
+    2.42 s — the fold halves jobs but doubles stages per job, so the
+    wave count is unchanged). Every level keeps its checkpoint.
     """
     edges = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    visited = spark.createDataFrame(
-        [(BFS_SOURCE, 0)], "node long, level int"
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for lvl in range(1, BFS_MAX_LEVEL + 1):
+    source = spark.range(1).select(
+        F.lit(BFS_SOURCE).cast("long").alias("node"), F.lit(0).alias("level")
+    )
+    frontier = (
+        edges.filter(F.col("src") == BFS_SOURCE)
+        .select(F.col("dst").alias("node"), F.lit(1).alias("level"))
+        .localCheckpoint(eager=True)
+    )
+    visited = source.unionByName(frontier)
+    for lvl in range(2, BFS_MAX_LEVEL + 1):
         nxt = (
             edges.join(
                 F.broadcast(frontier), edges["src"] == frontier["node"]

@@ -420,6 +420,19 @@ def test_load_prior_record_rejects_foreign_tree(tmp_path):
     assert bench._load_prior_record(str(p), "unknown") == {}
 
 
+def test_smoke_run_cannot_overwrite_headline():
+    """An sf1-disabled run extends the repo record only at the record's
+    own headline sf; a smoke run at another sf must not replace the
+    headline with smoke-scale numbers."""
+    prior = {"tree_id": "abc", "sf": "0.1", "sf1": {"queries": {"q": 1.0}}}
+    assert bench._may_write_repo_copy("0.1", None, prior)
+    assert not bench._may_write_repo_copy("0.001", None, prior)
+    # no same-tree record: nothing to extend, so no write without sf1
+    assert not bench._may_write_repo_copy("0.1", None, {})
+    # a run that measured sf1 is a full record and always writes
+    assert bench._may_write_repo_copy("0.001", {"queries": {}}, {})
+
+
 def test_stdout_line_carries_recheck_skip_count():
     """Deadline skips of already-covered pairs are counted separately
     (they are NOT missing measurements — the accumulated record has a

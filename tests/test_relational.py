@@ -1417,6 +1417,85 @@ def test_lpa_superstep_is_exchange_free(spark):
         edges.unpersist()
 
 
+def test_lpa_first_round_equals_superstep_from_identity(spark):
+    """graph_label_propagation replaces its first superstep by a
+    min(src) per dst. That is only sound while the edge list is
+    distinct (every vote counts 1); both facts are pinned here, row
+    for row against a real superstep from identity labels."""
+    from etl_verkada_spark.operators.graph import (
+        _edges,
+        _lpa_first_round,
+        _lpa_superstep,
+    )
+
+    edges = _edges(spark, SF_SMALL)
+    assert edges.count() == edges.distinct().count()
+    identity = edges.select("src").distinct().select(
+        F.col("src").alias("node"), F.col("src").alias("lbl")
+    )
+    closed = sorted(map(tuple, _lpa_first_round(edges).collect()))
+    voted = sorted(map(tuple, _lpa_superstep(edges, identity).collect()))
+    assert closed and closed == voted
+
+
+#: upper bounds on the Spark jobs one build + noop write runs at
+#: SF_SMALL (measured 10 / 14 / 21: one per eager checkpoint, broadcast
+#: and AQE query stage)
+GRAPH_JOB_BOUNDS = {
+    "graph_label_propagation": 10,
+    "graph_bfs_levels": 14,
+    "graph_pagerank": 21,
+}
+
+
+@pytest.mark.parametrize("name", sorted(GRAPH_JOB_BOUNDS))
+def test_graph_iteratives_job_bound(spark, name):
+    """The graph iteratives run their supersteps as eager jobs while
+    they build; the count of jobs (build plus the final action) must
+    not creep back up."""
+    from etl_verkada_spark.checkpoints import release
+    from etl_verkada_spark.operators.graph import QUERIES
+
+    sc = spark.sparkContext
+    group = f"job-bound-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = QUERIES[name].fn(spark, SF_SMALL)
+        df.write.mode("overwrite").format("noop").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    release(df)
+    assert 0 < n_jobs <= GRAPH_JOB_BOUNDS[name]
+
+
+def test_lpa_edge_cache_follows_shuffle_partitions(spark, monkeypatch):
+    """The LPA edge cache has exactly the session's
+    spark.sql.shuffle.partitions partitions (one task wave per
+    superstep), not a fixed count. The conf is set through
+    SPARK_GRAFT_SHUFFLE_PARTITIONS because every catalog read
+    re-applies the session defaults."""
+    from etl_verkada_spark.operators import graph
+
+    seen = []
+    superstep = graph._lpa_superstep
+
+    def spy(edges, labels):
+        seen.append(edges.rdd.getNumPartitions())
+        return superstep(edges, labels)
+
+    monkeypatch.setattr(graph, "_lpa_superstep", spy)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "5")
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert graph.graph_label_propagation(spark, SF_SMALL).count() > 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert seen == [5] * (graph.LPA_ITERS - 1)
+
+
 def test_global_rank_windows_are_bucket_partitioned(spark):
     """sort_orderby and maintain_zorder compute global positions via
     quantile-bucketed rank: every Window node in their plans must be
