@@ -8,7 +8,16 @@ All queries go through :func:`table` so that
   place;
 * column pruning / predicate pushdown reach the parquet scan — loaders
   return plain ``spark.read.parquet`` DataFrames, never cached/collected
-  copies, so Catalyst sees the full logical plan down to the file scan.
+  copies, so Catalyst sees the full logical plan down to the file scan;
+* a read runs no Spark job once its file's schema is known. Reading
+  parquet without a schema starts a one-task inference job on every
+  call, so :func:`_file_schema` infers each file's schema once and
+  every read passes it in. The memo key is the session (held weakly,
+  so a stopped session's entries are freed) plus the file's path,
+  length and modification time. Only the schema is kept: the data is
+  re-read on every action. A rewrite in place that keeps both length
+  and mtime is not detected, the same staleness as Spark's own
+  file-status cache.
 
 Schema-on-read validation (reference S3, ``task.ts:104-106,155-158``) is
 exposed via :func:`table_validated`, which applies an expected schema with
@@ -19,6 +28,7 @@ aborts the run on shape drift.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,18 +57,61 @@ def _path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: session -> {(path, length, mtime): inferred schema}. Sessions are
+#: held weakly so a stopped session's entries go with it; keying on the
+#: session keeps inference confs such as ``nanosAsLong`` per session.
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[tuple[str, int, int], T.StructType]
+] = weakref.WeakKeyDictionary()
+
+
+def _file_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The parquet schema Spark infers for ``path``, memoized in
+    ``_SCHEMAS``. The ``FileStatus`` comes from the path's own Hadoop
+    ``FileSystem``: about a millisecond, and it works for any URI the
+    reader accepts (for a directory, the directory's own status)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(
+        jpath
+    )
+    key = (path, status.getLen(), status.getModificationTime())
+    memo = _SCHEMAS.setdefault(spark, {})
+    if key not in memo:
+        memo[key] = spark.read.parquet(path).schema
+    return memo[key]
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_file_schema(spark, path)).parquet(path)
+
+
+def _micros_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` as Spark's native microsecond timestamp.
+
+    Parquet TIMESTAMP(NANOS) reads as long ns (``nanosAsLong``); the
+    data carries exactly microsecond precision, so the truncation is
+    lossless. A ``ts`` that is already a timestamp passes through.
+    """
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn(
+        "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
+    )
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table, normalizing engine-specific quirks."""
+    """Load one testdata table, normalizing engine-specific quirks.
+
+    Runs no Spark job when this session has already read the file at
+    its current length and mtime: the schema comes from the memo of
+    :func:`_file_schema` (keyed on the weakly held session, path,
+    length and mtime). The first read runs Spark's one-task schema
+    inference. An in-place rewrite that keeps length and mtime is not
+    detected, as with Spark's file-status cache.
+    """
     ensure_session_defaults(spark)
-    df = spark.read.parquet(_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # Parquet TIMESTAMP(NANOS) read as long ns (nanosAsLong); the data
-        # carries exactly microsecond precision so the truncation to
-        # Spark's native microsecond timestamp is lossless.
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    return df
+    df = _read(spark, _path(sf_dir, name))
+    return _micros_ts(df) if name == "events" else df
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -96,7 +149,7 @@ def table_validated(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     marking fields nullable here.
     """
     ensure_session_defaults(spark)
-    df = spark.read.parquet(_path(sf_dir, name))
+    df = _read(spark, _path(sf_dir, name))
     expected = EXPECTED_SCHEMAS.get(name)
     if expected is not None:
         have = {f.name: f.dataType for f in df.schema.fields}

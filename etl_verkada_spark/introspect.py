@@ -33,9 +33,12 @@ def query_schema(
     sf_dir: str = DEFAULT_SF_DIR,
     registry=None,
 ) -> T.StructType:
-    """Resolved output schema of one registered query (analysis only —
-    no job runs; lazy DataFrame construction may still land files for
-    the land-then-read scans)."""
+    """Resolved output schema of one registered query.
+
+    Analysis only — no job runs once the session has read the query's
+    tables — except for the callables named in ``BUILD_JOB_ALLOW``
+    (tests/test_relational.py), which run bounded jobs while they build
+    (eager supersteps, cell-sized driver reads, land-then-read scans)."""
     if registry is None:
         registry = build_registry()
     if name not in registry:

@@ -98,15 +98,6 @@ def _qnorm(qvec: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _sim_to_query(qvec: list[float]) -> F.Column:
-    """cosine(q, embedding) with the query norm folded to a literal
-    (interpreted HOF fold — kept as the pure-Catalyst reference path;
-    the hot path is :func:`_sim_to_query_udf`)."""
-    qlit = F.array(*[F.lit(v) for v in qvec])
-    embd = _as_double(F.col("embedding"))
-    return _dot(qlit, embd) / (F.lit(_qnorm(qvec)) * F.sqrt(_dot(embd, embd)))
-
-
 def _sim_to_query_udf(qvec: list[float]):
     """cosine(q, embedding) as ONE numpy matvec per Arrow batch.
 
@@ -796,25 +787,23 @@ def llm_embed_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the scalar gmax broadcast, no UDF, and integer-exact
     in both engines (sums bounded by 64*127). The projection matrix is
     seeded Python inlined into both plans, like the LSH oracle's
-    hyperplanes.
+    hyperplanes. The projection is built as SQL text: one string per
+    output dim is parsed once, where the same Column built call by call
+    costs ~520 Py4J round trips.
 
     At 100 TB: map-only over the embedding scan; output is 8 BIGINTs a
     row — the shape later stages (LSH banding on signs, coarse k-means)
     consume without touching the original vectors again.
     """
-    signs = _rp_signs()
-    q = _global_q(spark, sf_dir)
-    cols = [F.col("vec_id")]
-    for j in range(RP_DIMS):
-        sarr = F.array(*[F.lit(s) for s in signs[j]])
-        cols.append(
-            F.aggregate(
-                F.zip_with(F.col("q"), sarr, lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias(f"rp_{j}")
-        )
-    return q.select(*cols)
+    return _global_q(spark, sf_dir).selectExpr(
+        "vec_id",
+        *(
+            f"aggregate(zip_with(q, array({', '.join(map(str, signs))}),"
+            f" (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+            f" AS rp_{j}"
+            for j, signs in enumerate(_rp_signs())
+        ),
+    )
 
 
 def _rp_oracle() -> str:
@@ -1275,7 +1264,7 @@ ORACLE_LLM_SIM_ANN_PQ = _pq_oracle()
 QUERIES = {
     "llm_sim_search": spec(
         llm_sim_search, ORACLE_LLM_SIM_SEARCH, "llm",
-        doc="brute-force cosine top-k (JVM-side fold)",
+        doc="brute-force cosine top-k (numpy mapInArrow kernel)",
     ),
     "llm_sim_pairs": spec(
         llm_sim_pairs, ORACLE_LLM_SIM_PAIRS, "llm",

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import _path
+from ..catalog import _file_schema, _micros_ts, _path
 from ..operators.aggregates import unscale
 from ..registry import spec
 from ..session import ensure_session_defaults
@@ -56,20 +56,16 @@ STATE_SCHEMA = "n long, sv long"
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events table (file source, schema pinned from
-    the batch read; the nanos->micros conversion mirrors catalog.table)."""
+    """readStream over the events table: the file source's schema and
+    the nanos->micros conversion are catalog.table's, so the stream
+    runs no inference job once the session has read the events file."""
     ensure_session_defaults(spark)
-    batch = spark.read.parquet(_path(sf_dir, "events"))
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(_file_schema(spark, _path(sf_dir, "events")))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    return stream
+    return _micros_ts(stream)
 
 
 def _update_totals(
