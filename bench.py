@@ -1,28 +1,49 @@
-"""Benchmark harness (driver contract: one JSON line on stdout).
+"""Benchmark harness (driver contract: at most two JSON lines on stdout).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS]. Each query executes through a noop sink so
 the timing covers the full physical plan (scan -> shuffle -> sink)
 without driver-side row serialization skew. A DuckDB run of the same
 oracle SQL is timed alongside (informational: the BASELINE target is
-"within 2x of DuckDB per query").
+"within 2x of DuckDB per query"). A synthesized sf1 section runs in a
+fresh child process.
 
-Output contract (r5 verdict #1): stdout carries at most two JSON lines —
-an early ``{"partial": true, ...}`` snapshot after the sf0.1 section,
-then ONE compact final line (guaranteed <3.8 KB, inside the driver's
-~4 KB tail capture) with the headline numbers and the sf1 ratio summary.
-The full record (per-query min/median/n/spread for both engines, sf1
-detail, errors) is written to $SPARK_GRAFT_BENCH_DETAIL (default
-/tmp/bench_full.json) and mirrored to ./BENCH_FULL.json so it survives
-the sandbox via the end-of-round commit.
+The harness is three parts:
+
+* **measure** — ``measure`` turns one timing window (``_timed``:
+  min/med/n/spread) into a row, or into an error row when it raises.
+  Rows are keyed by (tree_id, cpus, sf, engine, kind, query) with
+  engine in {spark, duckdb} and kind in {warm, cold}. A row without a
+  query is a section outcome: floors and host telemetry, a skip
+  (``insufficient_disk``, ``no_time``) or an error such as a dead
+  child's exit code.
+* **log** — every row is appended to ``BENCH_LOG.jsonl`` and flushed the
+  moment it exists; the sf1 child appends to the same log as it goes.
+  A run starts by dropping the rows of other trees. Only appends reach
+  the repo: a run writes nothing else in the checkout.
+* **reduce** — one pure function turns the log into the detail record
+  and the final stdout line: per key, the minimum over this tree's rows
+  (this run's rows only when the tree is ``unknown``). Keys that should
+  have a row and have none are the sf1 ``deadline_skipped`` list, so
+  resuming is measuring what the log lacks: the sf1 child runs keys
+  with no row first, then keys whose every row is unstable.
+
+Stdout carries an early ``{"partial": true, ...}`` line after the sf0.1
+section, then ONE final line under STDOUT_LINE_BUDGET bytes. The detail
+record goes to $SPARK_GRAFT_BENCH_DETAIL (default /tmp/bench_full.json).
+``BENCH_FULL.json`` in the repo is the last record of the harness that
+preceded the log, kept frozen.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import statistics
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -368,6 +389,17 @@ def _duck_connect():
 SLOW_RUN_CUTOFF_S = 10.0
 
 
+def _stats(times: list[float]) -> dict:
+    """min/med/n/spread of one timing window (see _timed)."""
+    lo, hi = min(times), max(times)
+    return {
+        "min": round(lo, 3),
+        "med": round(statistics.median(times), 3),
+        "n": len(times),
+        "spread": round(hi / lo, 2) if lo > 0 else 1.0,
+    }
+
+
 def _timed(run_once, n_runs: int) -> dict:
     """Repeat ``run_once`` up to n_runs times and return the full
     dispersion record, not just a point estimate:
@@ -390,15 +422,12 @@ def _timed(run_once, n_runs: int) -> dict:
         times.append(time.perf_counter() - t0)
         if min(times) > SLOW_RUN_CUTOFF_S and i >= 1:
             break
-    times.sort()
-    n = len(times)
-    med = times[n // 2] if n % 2 else (times[n // 2 - 1] + times[n // 2]) / 2
-    return {
-        "min": round(times[0], 3),
-        "med": round(med, 3),
-        "n": n,
-        "spread": round(times[-1] / times[0], 2) if times[0] > 0 else 1.0,
-    }
+    return _stats(times)
+
+
+def _noop(fn, spark, sf_dir: str) -> None:
+    """One execution of a registry callable through the noop sink."""
+    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
 
 
 def run_spark(fn, spark, sf_dir: str, n_runs: int = N_RUNS) -> dict:
@@ -407,12 +436,8 @@ def run_spark(fn, spark, sf_dir: str, n_runs: int = N_RUNS) -> dict:
 
     DuckDB gets the same treatment in run_duckdb for a fair comparison.
     """
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    def once():
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    return _timed(once, n_runs)
+    _noop(fn, spark, sf_dir)
+    return _timed(lambda: _noop(fn, spark, sf_dir), n_runs)
 
 
 def run_duckdb(con, sql: str, n_runs: int = N_RUNS) -> dict:
@@ -476,104 +501,7 @@ def run_duckdb_budgeted(
     finally:
         done.set()
         timer.cancel()
-    times.sort()
-    n = len(times)
-    med = times[n // 2] if n % 2 else (times[n // 2 - 1] + times[n // 2]) / 2
-    return {
-        "min": round(times[0], 3),
-        "med": round(med, 3),
-        "n": n,
-        "spread": round(times[-1] / times[0], 2) if times[0] > 0 else 1.0,
-    }
-
-
-def _sf1_progress_path() -> str:
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), "bench_sf1_progress.jsonl")
-
-
-def _sf1_from_progress(err: str, run_id: str | None = None) -> dict:
-    """Reconstruct a partial sf1 record from the incremental progress
-    file when the subprocess died before writing its final JSON (the
-    round-9 failure mode: a 5400 s timeout erased 90 minutes of
-    completed measurements). Ratios are computed for every pair that
-    finished on both engines; the error is preserved so the record is
-    visibly partial.
-
-    ``run_id`` guards against the stale-file race (ADVICE r9): the
-    parent also unlinks the file before spawning, but if the child
-    died before bench_sf1's own write (e.g. during first-time sf1
-    synthesis) a file from an EARLIER run must not be published as
-    this run's measurements — the child stamps the file with its
-    run_id as the first record and a mismatch rejects the file."""
-    duck: dict[str, dict] = {}
-    sparkd: dict[str, dict] = {}
-    cold: dict[str, float] = {}
-    cold_duck: dict[str, float] = {}
-    floor_s = 0.0
-    seen_run_id: str | None = None
-    errors: dict[str, str] = {"section": err}
-    try:
-        with open(_sf1_progress_path()) as f:
-            for line in f:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                k, q, v = rec.get("k"), rec.get("q"), rec.get("v")
-                if k == "run_id":
-                    seen_run_id = str(v)
-                elif k == "duckdb":
-                    duck[q] = v
-                elif k == "spark":
-                    sparkd[q] = v
-                elif k == "spark_cold":
-                    cold[q] = v
-                elif k == "duckdb_cold":
-                    cold_duck[q] = v
-                elif k == "floor":
-                    floor_s = float(v)
-                elif k == "error":
-                    errors[q] = str(v)
-    except OSError:
-        return {"error": err}
-    if run_id is not None and seen_run_id != run_id:
-        return {"error": err, "stale_progress_rejected": True}
-    if not duck and not sparkd:
-        return {"error": err}
-    timings = {n: d["min"] for n, d in sparkd.items()}
-    dmin = {n: d["min"] for n, d in duck.items()}
-    unstable = sorted(
-        n
-        for n in set(sparkd) | set(duck)
-        if max(
-            sparkd.get(n, {}).get("spread", 1.0),
-            duck.get(n, {}).get("spread", 1.0),
-        )
-        > 2.0
-    )
-    return {
-        "partial_from_progress": True,
-        "queries": timings,
-        "duckdb": dmin,
-        "spark_detail": sparkd,
-        "duckdb_detail": duck,
-        "unstable": unstable,
-        "ratio": {
-            n: round(timings[n] / dmin[n], 2)
-            for n in dmin
-            if dmin[n] > 0 and n in timings
-        },
-        "ratio_floor_adjusted": {
-            n: round(max(timings[n] - floor_s, 0.0) / dmin[n], 2)
-            for n in dmin
-            if dmin[n] > 0 and n in timings
-        },
-        "cold_sec": cold,
-        "cold_duckdb_sec": cold_duck,
-        "errors": errors,
-    }
+    return _stats(times)
 
 
 # ---------------------------------------------------------------------------
@@ -1002,7 +930,6 @@ def ensure_sf1(spark, src_dir: str) -> str:
     Cached on a fingerprint of the source files + generator params;
     stale fingerprint dirs are pruned so /tmp holds at most one copy.
     """
-    import hashlib
     import shutil
 
     h = hashlib.md5(
@@ -1129,11 +1056,9 @@ def _err(e: Exception) -> str:
 def _tree_id() -> str:
     """Content hash of the benchable tree (engine package + harness +
     driver entry), commit-independent: ``git ls-files -s`` blob hashes
-    plus any uncommitted diff. Cross-run merging (r13 verdict item 6)
-    is only valid between runs of the IDENTICAL tree — a plan change
-    between runs would let a stale faster min misrepresent the shipped
-    code."""
-    import hashlib
+    plus any uncommitted diff. The reducer folds only rows of the
+    IDENTICAL tree (r13 verdict item 6) — a plan change between runs
+    would let a stale faster min misrepresent the shipped code."""
     import subprocess
 
     here = os.path.dirname(os.path.abspath(__file__))
@@ -1152,78 +1077,339 @@ def _tree_id() -> str:
                 return "unknown"
             h.update(out.stdout)
         return h.hexdigest()[:12]
-    except Exception:  # noqa: BLE001 - merging is best-effort
+    except Exception:  # noqa: BLE001 - "unknown" folds one run only
         return "unknown"
 
 
-def _min_intersect(maps: list[dict | None]) -> dict:
-    """Per-key minimum over the keys present in EVERY map — the
-    cross-run min-intersection (r13 verdict item 6: the headline the
-    close-note cites must be the headline the committed record
-    carries; per-run values are retained alongside)."""
-    present = [m for m in maps if m]
-    if len(present) != len(maps) or not present:
-        return {}
-    keys = set(present[0])
-    for m in present[1:]:
-        keys &= set(m)
-    return {k: min(m[k] for m in present) for k in keys}
+def measure(engine: str, kind: str, query: str | None, window) -> dict:
+    """One log row: the stats of the timing window ``window()`` returns,
+    or the root cause of its failure — an error row, so one failing
+    query never ends a pass."""
+    row = {"engine": engine, "kind": kind, "query": query}
+    try:
+        row.update(window())
+    except Exception as e:  # noqa: BLE001 - recorded as an error row
+        row["error"] = _err(e)
+    return row
 
 
-def _min_union(maps: list[dict | None]) -> dict:
-    """Per-key minimum over the keys present in ANY map — the sf1
-    cross-run merge (r15 verdict item 2). Unlike the sf0.1 headline
-    (min-INTERSECTION: every run times every HEADLINE query, and the
-    merged sum must be comparable run-over-run), the sf1 section
-    completes a budget-dependent PREFIX of its pair list per run, so
-    an intersection merge would shrink to the weakest run's coverage;
-    the union lets resume-aware runs accumulate full coverage. Each
-    pair's value is still a same-tree min, so no entry is less honest
-    than a single-run record."""
-    out: dict = {}
-    for m in maps:
-        for k, v in (m or {}).items():
-            if k not in out or v < out[k]:
-                out[k] = v
+#: the committed measurement log, one JSON row per line
+LOG_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_LOG.jsonl"
+)
+_KEY_FIELDS = ("tree_id", "cpus", "sf", "run_id", "engine", "kind", "query")
+UNSTABLE_SPREAD = 2.0  # window spread read as unmeasured (see _timed)
+
+
+def _parse(line: str) -> dict | None:
+    try:
+        row = json.loads(line)
+    except ValueError:
+        return None
+    return row if isinstance(row, dict) else None
+
+
+def _log_lines(path: str | None = None) -> list[str]:
+    try:
+        with open(path or LOG_PATH) as f:
+            return f.read().splitlines()
+    except OSError:
+        return []
+
+
+def read_log(path: str | None = None) -> list[dict]:
+    """Every parseable row of the log (default LOG_PATH), in append
+    order; a line cut short by a killed writer is skipped."""
+    return [r for r in map(_parse, _log_lines(path)) if r]
+
+
+def _append(row: dict) -> None:
+    """Append one row and flush it. A line left unterminated by a killed
+    writer is closed first, so the new row never merges into it."""
+    line = json.dumps(row, separators=(",", ":")) + "\n"
+    with open(LOG_PATH, "a+b") as f:
+        if f.seek(0, os.SEEK_END):
+            f.seek(-1, os.SEEK_END)
+            if f.read(1) != b"\n":
+                line = "\n" + line
+        f.write(line.encode())
+        f.flush()
+
+
+def _prune_log(tree_id: str) -> None:
+    """Drop the rows of other trees (and unparseable lines) as a run
+    starts: no reducer call can read them again."""
+    lines = _log_lines()
+    keep = [r for r in map(_parse, lines) if r and r.get("tree_id") == tree_id]
+    if len(keep) < len(lines):
+        with open(LOG_PATH + ".tmp", "w") as f:
+            f.writelines(json.dumps(r, separators=(",", ":")) + "\n" for r in keep)
+        os.replace(LOG_PATH + ".tmp", LOG_PATH)
+
+
+class RunLog:
+    """One run's writer for one section (sf) of the log: stamps each row
+    with its key fields and appends it."""
+
+    def __init__(self, tree_id: str, cpus: int, sf: str, run_id: str):
+        self.stamp = {"tree_id": tree_id, "cpus": cpus, "sf": sf, "run_id": run_id}
+
+    def append(self, row: dict) -> dict:
+        row = {**self.stamp, **row}
+        _append(row)
+        return row
+
+    def rows(self) -> list[dict]:
+        """This section's rows of every run of the tree (of this run only
+        when the tree is unknown): what a resuming run already has."""
+        same = ["tree_id", "cpus", "sf"]
+        if self.stamp["tree_id"] == "unknown":
+            same.append("run_id")
+        return [
+            r for r in read_log() if all(r.get(k) == self.stamp[k] for k in same)
+        ]
+
+
+def _sf1_label(sf: str) -> str:
+    """The sf of the sf1 section's rows: the headline sf, replicated."""
+    return f"{sf}x{SF1_REPLICAS}"
+
+
+def _run_key(sf_dir: str) -> tuple[str, int, str]:
+    """(tree_id, cpus, sf) of a run over ``sf_dir``."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
+    return _tree_id(), cpus, sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+
+
+def _detail_path() -> str:
+    return os.environ.get("SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_full.json")
+
+
+def last_run(rows: list[dict]) -> tuple | None:
+    """(tree_id, cpus, sf) of the newest headline row."""
+    for r in reversed(rows):
+        if not str(r.get("sf")).endswith(f"x{SF1_REPLICAS}"):
+            return r.get("tree_id"), r.get("cpus"), r.get("sf")
+    return None
+
+
+def _by_key(rows: list[dict]) -> dict[tuple, list[dict]]:
+    """Query rows grouped by (engine, kind, query), in append order."""
+    out: dict[tuple, list[dict]] = {}
+    for r in rows:
+        if r.get("query") is not None:
+            out.setdefault((r.get("engine"), r.get("kind"), r["query"]), []).append(r)
     return out
 
 
-def _load_prior_record(repo_detail_path: str, tree_id: str) -> dict:
-    """The previous bench record IF it belongs to the same tree
-    (tree_id mismatch or unknown -> empty: cross-run merging is only
-    valid between runs of the identical tree)."""
+def _best(rs: list[dict]) -> dict | None:
+    return min((r for r in rs if "min" in r), key=lambda r: r["min"], default=None)
+
+
+def _unstable(rs: list[dict]) -> bool:
+    timed = [r for r in rs if "min" in r]
+    return bool(timed) and all(r["spread"] > UNSTABLE_SPREAD for r in timed)
+
+
+def _resume_rank(rs: list[dict]) -> int:
+    """Measuring order of a key: 0 no row yet, 1 every row unstable,
+    2 measured (error rows included)."""
+    return 0 if not rs else 1 if _unstable(rs) else 2
+
+
+def _tag(engine: str, kind: str) -> str:
+    return engine if kind == "warm" else f"{engine}_cold"
+
+
+def _md5_names(names) -> str:
+    """Pins the pair set an aggregate is computed over (r11 verdict item
+    7: like-for-like round-over-round comparison)."""
+    return hashlib.md5(",".join(sorted(names)).encode()).hexdigest()[:10]
+
+
+def _reduce_section(rows: list[dict], cur: str | None) -> dict:
+    """One section's fold. ``best``: the minimum row per key; ``header``:
+    the current run's section rows merged in order, each floor the
+    minimum over all runs (a floor is a lower bound); plus error-only
+    keys, unstable keys and the runs that timed anything."""
+    header: dict = {}
+    floors: dict = {}
+    for r in rows:
+        if r.get("query") is None:
+            meta = {k: v for k, v in r.items() if k not in _KEY_FIELDS}
+            for k in ("floor_s", "floor_1row_s"):
+                if k in meta:
+                    floors[k] = min(floors.get(k, meta[k]), meta[k])
+            if r.get("run_id") == cur:
+                header.update(meta)
+    by_key = _by_key(rows)
+    best = {k: b for k, rs in by_key.items() if (b := _best(rs))}
+
+    def mins(engine: str, kind: str) -> dict[str, float]:
+        return {
+            q: b["min"] for (e, k, q), b in best.items() if (e, k) == (engine, kind)
+        }
+
+    def details(engine: str) -> dict[str, dict]:
+        return {
+            q: {f: b.get(f) for f in ("min", "med", "n", "spread", "run_id")}
+            for (e, k, q), b in best.items() if (e, k) == (engine, "warm")
+        }
+
+    return {
+        "header": {**header, **floors},
+        "keys": set(by_key),
+        "spark": mins("spark", "warm"),
+        "duckdb": mins("duckdb", "warm"),
+        "spark_cold": mins("spark", "cold"),
+        "duckdb_cold": mins("duckdb", "cold"),
+        "spark_detail": details("spark"),
+        "duckdb_detail": details("duckdb"),
+        "errors": {
+            f"{_tag(*k[:2])}:{k[2]}": rs[-1].get("error")
+            for k, rs in by_key.items() if k not in best
+        },
+        "unstable": {k for k, rs in by_key.items() if _unstable(rs)},
+        "runs": sorted({r.get("run_id") for r in rows if "min" in r}),
+    }
+
+
+def _sf1_expected() -> list[tuple]:
+    """Every key the sf1 section should have a row for."""
+    return (
+        [("duckdb", "warm", n) for n in SF1_QUERIES]
+        + [("duckdb", "cold", n) for n in SF1_COLD_QUERIES]
+        + [("spark", "warm", n) for n in SF1_QUERIES + SF1_SPARK_ONLY]
+        + [("spark", "cold", n) for n in SF1_COLD_QUERIES]
+    )
+
+
+def _sf1_record(rows: list[dict], cur: str | None) -> dict | None:
+    """The sf1 section of the detail record (None: no sf1 row at all)."""
+    if not rows:
+        return None
+    s = _reduce_section(rows, cur)
+    out = dict(s["header"])
+    if not s["keys"]:
+        return out  # a section outcome only: skipped or error
+    floor_s = out.get("floor_s", 0.0)
+    timings, duck = s["spark"], s["duckdb"]
+    paired = [n for n in duck if duck[n] > 0 and n in timings]
+
+    def adjusted(n: str) -> float:
+        return round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
+
+    ratio_fa = {n: adjusted(n) for n in paired if n not in SF1_TWIN_EXCLUDED}
+    out.update({
+        "replicas_of_sf0.1": SF1_REPLICAS,
+        "table_replica_overrides": SF1_TABLE_REPLICAS,
+        "queries": timings,
+        "duckdb": duck,
+        "spark_detail": s["spark_detail"],
+        "duckdb_detail": s["duckdb_detail"],
+        # a ratio is only as trustworthy as its noisiest side: a pair is
+        # unstable when either engine has no row with spread <= 2x
+        "unstable": sorted({q for _, k, q in s["unstable"] if k == "warm"}),
+        "ratio": {
+            n: round(timings[n] / duck[n], 2)
+            for n in paired if n not in SF1_TWIN_EXCLUDED
+        },
+        "ratio_floor_adjusted": ratio_fa,
+        # measured but aggregate-excluded (twin denominator, see
+        # SF1_TWIN_EXCLUDED): the honest number, outside the averages
+        "twin_ratio": {n: adjusted(n) for n in paired if n in SF1_TWIN_EXCLUDED},
+        "cold_sec": s["spark_cold"],
+        "cold_duckdb_sec": s["duckdb_cold"],
+        "spark_only": {n: timings[n] for n in SF1_SPARK_ONLY if n in timings},
+        "sql_overrides": sorted(n for n in _sf1_sql_overrides() if n in duck),
+        "twin_excluded": SF1_TWIN_EXCLUDED,
+        # sf0.1-only benched rows too: the adjudication report reads
+        # annotations from this record
+        "annotations": {
+            n: note for n, note in SF1_ANNOTATIONS.items()
+            if n in timings or n in duck or n in HEADLINE
+        },
+        "n_runs": N_RUNS_SF1,
+        "pairs_md5": _md5_names(ratio_fa),
+        "runs_merged": len(s["runs"]),
+    })
+    missing = [
+        f"{_tag(e, k)}:{q}" for e, k, q in _sf1_expected() if (e, k, q) not in s["keys"]
+    ]
+    if missing:
+        out["deadline_skipped"] = missing
+    if s["errors"]:
+        out["errors"] = s["errors"]
+    return out
+
+
+def reduce(
+    rows: list[dict], tree_id: str, cpus: int, sf: str, partial: bool = False
+) -> tuple[dict, str]:
+    """The detail record and the stdout line for (tree_id, cpus, sf).
+
+    Per key, the minimum over every row of the tree — of the current run
+    (the last matching row's) only when the tree is ``unknown``, which
+    cannot prove two runs measured the same code. The sf1 section is the
+    rows at ``_sf1_label(sf)``. Pure: reads and writes nothing."""
+    sf1_sf = _sf1_label(sf)
+    mine = [
+        r for r in rows
+        if (r.get("tree_id"), r.get("cpus")) == (tree_id, cpus)
+        and r.get("sf") in (sf, sf1_sf)
+    ]
+    cur = mine[-1].get("run_id") if mine else None
     if tree_id == "unknown":
-        return {}
-    try:
-        with open(repo_detail_path) as f:
-            prev = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    if prev.get("tree_id") != tree_id:
-        return {}
-    return prev
-
-
-def _may_write_repo_copy(sf: str, sf1: dict | None, prior_record: dict) -> bool:
-    """Whether this run may overwrite the repo's BENCH_FULL.json.
-
-    A run with an sf1 section always may. An sf1-disabled run may only
-    extend a same-tree record (its sf1 section is carried forward) of
-    the SAME headline sf: a smoke run at another sf would otherwise
-    replace the headline (sf, value, per-query detail) with
-    smoke-scale numbers."""
-    if sf1 is not None:
-        return True
-    return bool(prior_record) and prior_record.get("sf") == sf
-
-
-def _load_prior_runs(repo_detail_path: str, tree_id: str) -> list[dict]:
-    """Per-run compact records accumulated by earlier bench invocations
-    on the SAME tree (tree_id mismatch or unknown -> no merge)."""
-    runs = _load_prior_record(repo_detail_path, tree_id).get("runs")
-    if isinstance(runs, list) and runs:
-        return runs
-    return []
+        mine = [r for r in mine if r.get("run_id") == cur]
+    head_rows = [r for r in mine if r["sf"] == sf]
+    h = _reduce_section(head_rows, cur)
+    header, timings, duck = h["header"], h["spark"], h["duckdb"]
+    floor_s = header.get("floor_s", 0.0)
+    value = round(sum(timings.values()), 3)
+    detail = {
+        "metric": f"headline query wall-clock, noop sink, min-of-{N_RUNS}",
+        "value": value,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "duckdb": duck,
+        "spark_fixed_overhead_sec": floor_s,
+        "spark_fixed_overhead_1row_sec": header.get("floor_1row_s"),
+        # ratio with the fixed per-job floor subtracted: the scale signal
+        # (does the PLAN do more work than DuckDB's) as opposed to the
+        # raw ratio (which at sub-second local scale mostly measures JVM
+        # job orchestration). Clamped at 0 for queries at the floor.
+        "ratio_floor_adjusted": {
+            n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
+            for n in duck if duck[n] > 0 and n in timings
+        },
+        "sf1": _sf1_record([r for r in mine if r["sf"] == sf1_sf], cur),
+        "partial": partial,
+        "host": header.get("host"),
+        "cpus": cpus,
+        "tree_id": tree_id,
+        "run_id": cur,
+        "runs_merged": len(h["runs"]),
+        "queries_detail": h["spark_detail"],
+        "duckdb_detail": h["duckdb_detail"],
+        **({"errors": h["errors"]} if h["errors"] else {}),
+        **({"error": header["error"]} if "error" in header else {}),
+    }
+    n_current = sum(
+        1 for r in head_rows
+        if r.get("run_id") == cur and "min" in r
+        and (r.get("engine"), r.get("kind")) == ("spark", "warm")
+    )
+    line = compact_stdout_line(
+        value, sf, timings, floor_s, duck, detail["sf1"],
+        _detail_path(),
+        partial=partial,
+        floor_1row_s=header.get("floor_1row_s"),
+        host=header.get("host"),
+        runs_merged=len(h["runs"]) if len(h["runs"]) > 1 else None,
+        n_current_run=n_current,
+    )
+    return detail, line
 
 
 def _host_telemetry() -> dict:
@@ -1271,134 +1457,81 @@ def compact_stdout_line(
     runs_merged: int | None = None,
     n_current_run: int | None = None,
 ) -> str:
-    """One JSON line <= STDOUT_LINE_BUDGET bytes: the driver contract.
+    """One JSON line < STDOUT_LINE_BUDGET bytes: the driver contract.
 
-    Keeps (in drop order, least essential first): sf1 cold/spark_only/
-    unstable extras, then the sf1 ratio dict, then the per-query sf0.1
-    timings. The sf0.1 per-query DuckDB ratios never ride the line —
-    they are recomputable from queries/duckdb in the detail file; an
-    aggregate ratio scalar stays.
+    Sheds, least essential first: the sf1 cold/spark_only extras, sf1
+    error messages (to names), the unstable list (to a count), the sf1
+    ratio map (to its worst entries, and floor_bound names outside it),
+    the per-query sf0.1 timings (to the slowest), then the queries and
+    sf1 dicts whole. The per-query sf0.1 DuckDB ratios never ride the
+    line — they are recomputable from the detail file; an aggregate
+    ratio scalar stays.
     """
-    sf1_summary: dict | None = None
+    s1: dict | None = None
     if isinstance(sf1, dict):
-        sf1_summary = {}
+        s1 = {}
         if "ratio_floor_adjusted" in sf1:
-            sf1_summary["ratio"] = {
-                k: round(v, 1)
-                for k, v in sf1["ratio_floor_adjusted"].items()
+            s1["ratio"] = {
+                k: round(v, 1) for k, v in sf1["ratio_floor_adjusted"].items()
             }
         for k in ("unstable", "skipped", "error"):
             if sf1.get(k):
-                sf1_summary[k] = sf1[k]
+                s1[k] = sf1[k]
         if sf1.get("deadline_skipped"):
-            # r12 verdict item 2: the count alone made skips anonymous
-            # in the official record — carry the names (capped) too
-            sf1_summary["n_deadline_skipped"] = len(sf1["deadline_skipped"])
-            sf1_summary["skipped_q"] = sf1["deadline_skipped"][:8]
-        if sf1.get("deadline_skipped_recheck"):
-            # skips of pairs the accumulated record already covers
-            # (resume-aware ordering, r15 verdict item 2) — a count is
-            # enough, the pairs still carry same-tree measurements
-            sf1_summary["n_skip_recheck"] = len(
-                sf1["deadline_skipped_recheck"]
-            )
+            # the names too, capped (r12 verdict item 2: a bare count
+            # made skips anonymous in the official record)
+            s1["n_deadline_skipped"] = len(sf1["deadline_skipped"])
+            s1["skipped_q"] = sf1["deadline_skipped"][:8]
         if "free_disk_gb_at_start" in sf1:
-            sf1_summary["free_gb"] = round(sf1["free_disk_gb_at_start"], 1)
+            s1["free_gb"] = round(sf1["free_disk_gb_at_start"], 1)
         if "pairs_md5" in sf1:
-            sf1_summary["pairs_md5"] = sf1["pairs_md5"]
+            s1["pairs_md5"] = sf1["pairs_md5"]
         if sf1.get("twin_ratio"):
-            sf1_summary["twin_ratio"] = {
-                k: round(v, 1) for k, v in sf1["twin_ratio"].items()
-            }
+            s1["twin_ratio"] = {k: round(v, 1) for k, v in sf1["twin_ratio"].items()}
         if "errors" in sf1:
-            # named, classed, and capped (r12 verdict item 2: the r12
-            # record's `n_errors: 1` was anonymous). Tolerate both the
-            # dict form ({query: message}) and a bare name list.
+            # named, classed and capped (r12 verdict item 2); both the
+            # dict form ({query: message}) and a bare name list
             errs = sf1["errors"]
-            sf1_summary["n_errors"] = len(errs)
+            s1["n_errors"] = len(errs)
             if isinstance(errs, dict):
-                sf1_summary["errors"] = {
-                    k: str(v)[:60] for k, v in list(errs.items())[:6]
-                }
+                s1["errors"] = {k: str(v)[:60] for k, v in list(errs.items())[:6]}
             else:
-                sf1_summary["errors"] = [str(k)[:60] for k in errs][:6]
+                s1["errors"] = [str(k)[:60] for k in errs][:6]
         if "host_start" in sf1:
-            sf1_summary["load1"] = [
+            s1["load1"] = [
                 sf1["host_start"].get("load1"),
                 sf1.get("host_end", {}).get("load1"),
             ]
         if "spark_only" in sf1:
-            sf1_summary["spark_only"] = {
-                k: round(v, 2) for k, v in sf1["spark_only"].items()
-            }
+            s1["spark_only"] = {k: round(v, 2) for k, v in sf1["spark_only"].items()}
         if "cold_sec" in sf1:
-            sf1_summary["cold"] = {
-                k: round(v, 1) for k, v in sf1["cold_sec"].items()
-            }
-        # flag floor-bound rows (r10 verdict #6; cutoff widened per the
-        # r12 verdict item 8): a >2x sf1 ratio whose Spark absolute is
-        # ~1 s against a sub-250 ms DuckDB denominator prices fixed
-        # per-job scheduling, not the plan — with a ~0.2-0.35 s
-        # measured per-job floor, a 0.25 s denominator cannot show a
-        # sub-2x ratio even for a zero-work plan. Named so the worst-N
-        # list reads correctly without the detail file; the honesty
-        # trade is unchanged (absolutes stay in the record).
-        if sf1_summary.get("ratio") and sf1.get("queries") and sf1.get(
-            "duckdb"
-        ):
+            s1["cold"] = {k: round(v, 1) for k, v in sf1["cold_sec"].items()}
+        # floor-bound rows (r10 verdict #6, r12 item 8): a >2x ratio
+        # whose Spark absolute is ~1 s against a sub-250 ms DuckDB
+        # denominator prices the ~0.2-0.35 s per-job floor, not the
+        # plan. Named so the worst-N list reads correctly without the
+        # detail file; the absolutes stay in the record.
+        if s1.get("ratio") and sf1.get("queries") and sf1.get("duckdb"):
             fb = sorted(
-                n
-                for n, r in sf1_summary["ratio"].items()
+                n for n, r in s1["ratio"].items()
                 if r > 2.0
                 and sf1["queries"].get(n, 99.0) <= FLOOR_BAND_SPARK_S
                 and sf1["duckdb"].get(n, 99.0) <= FLOOR_BAND_DUCK_S
             )
             if fb:
-                sf1_summary["floor_bound"] = fb
+                s1["floor_bound"] = fb
     duck_total = sum(duck.values())
     covered = [n for n in duck if n in timings]
-    # r11 verdict item 7: round-over-round aggregates diverged purely
-    # on run composition (which pairs completed) and on which floor was
-    # subtracted. Pin both in the record: the md5 of the sorted covered
-    # pair set, and the name of the floor constant used by every
-    # ratio_* figure — like-for-like comparison is now checkable.
-    import hashlib
-
-    pairs_md5 = hashlib.md5(
-        ",".join(sorted(covered)).encode()
-    ).hexdigest()[:10]
-    # per-query floor-adjusted ratio distribution (r10 verdict #6): the
+    # the per-query floor-adjusted distribution (r10 verdict #6): the
     # aggregate sum is a composition artifact over mostly-20 ms DuckDB
     # denominators, so the line also carries the median and the >2x
     # count — the two numbers the 2x-per-query verdict actually uses.
-    per_q = sorted(
-        max(timings[n] - floor_s, 0.0) / duck[n]
-        for n in covered
-        if duck[n] > 0
-    )
-    ratio_median = (
-        round(
-            (
-                per_q[len(per_q) // 2]
-                if len(per_q) % 2
-                else (per_q[len(per_q) // 2 - 1] + per_q[len(per_q) // 2])
-                / 2
-            ),
-            2,
-        )
-        if per_q
-        else None
-    )
-    n_gt2x = sum(1 for r in per_q if r > 2.0)
+    per_q = [
+        max(timings[n] - floor_s, 0.0) / duck[n] for n in covered if duck[n] > 0
+    ]
     final = {
-        "metric": (
-            f"headline query wall-clock, noop sink, min-of-{N_RUNS}"
-            + (
-                f", min-intersection of {runs_merged} same-tree runs"
-                if runs_merged
-                else ""
-            )
-        ),
+        "metric": f"headline query wall-clock, noop sink, min-of-{N_RUNS}"
+        + (f", min of {runs_merged} same-tree runs" if runs_merged else ""),
         "value": value,
         "unit": "sec",
         "sf": sf,
@@ -1406,115 +1539,72 @@ def compact_stdout_line(
         "spark_fixed_overhead_sec": floor_s,
         "spark_fixed_overhead_1row_sec": floor_1row_s,
         "duckdb_total_sec": round(duck_total, 3),
-        "ratio_agg_floor_adjusted": (
-            round(
-                max(
-                    sum(timings[n] for n in covered)
-                    - floor_s * len(covered),
-                    0.0,
-                )
-                / duck_total,
-                2,
-            )
-            if duck_total > 0
-            else None
+        "ratio_agg_floor_adjusted": round(
+            max(sum(timings[n] for n in covered) - floor_s * len(covered), 0.0)
+            / duck_total, 2,
+        ) if duck_total > 0 else None,
+        "ratio_median_floor_adjusted": (
+            round(statistics.median(per_q), 2) if per_q else None
         ),
-        "ratio_median_floor_adjusted": ratio_median,
-        "n_queries_gt2x": n_gt2x,
+        "n_queries_gt2x": sum(1 for r in per_q if r > 2.0),
         "n_ratio_pairs": len(per_q),
-        # intersection-size transparency (r14 advice): a prior run that
-        # lost a query to a deadline silently shrinks the merged query
-        # set for every later merged record — name both counts so a
-        # shrinking intersection is visible in the stdout record itself
-        "pairs_md5": pairs_md5,
+        # r11 verdict item 7: round-over-round aggregates diverged on run
+        # composition and on the floor subtracted — pin both
+        "pairs_md5": _md5_names(covered),
         "floor_used": "spark_fixed_overhead_sec",
         "host": host,
-        "sf1": sf1_summary,
+        "sf1": s1,
         "detail_file": detail_path,
     }
     if runs_merged:
-        # intersection-size transparency (r14 advice): a prior run that
-        # lost a query to a deadline silently shrinks the merged query
-        # set for every later merged record — name both counts so a
-        # shrinking intersection is visible in the stdout record itself
+        # a query lost in one run would otherwise change the merged set
+        # silently (r14 advice): name both counts
         final["n_queries_merged"] = len(timings)
         final["n_queries_current_run"] = n_current_run
     if partial:
         final["partial"] = True
         final.pop("sf1", None)
-    line = json.dumps(final, separators=(",", ":"))
+
+    def fits() -> bool:
+        return len(json.dumps(final, separators=(",", ":"))) < STDOUT_LINE_BUDGET
+
     for drop in ("cold", "spark_only"):
-        if len(line) < STDOUT_LINE_BUDGET:
+        if fits():
             break
-        if sf1_summary:
-            sf1_summary.pop(drop, None)
-        line = json.dumps(final, separators=(",", ":"))
+        if s1:
+            s1.pop(drop, None)
     # error MESSAGES degrade to names before anything else goes — the
     # names are the adjudication payload, the text lives in the detail
-    if len(line) >= STDOUT_LINE_BUDGET and sf1_summary and (
-        sf1_summary.get("errors")
-    ):
-        sf1_summary["errors"] = sorted(sf1_summary["errors"])
-        line = json.dumps(final, separators=(",", ":"))
-    # the unstable list is adjudication-critical (it marks which ratios
-    # NOT to trust) — degrade it to a count rather than dropping it
-    if len(line) >= STDOUT_LINE_BUDGET and sf1_summary and (
-        "unstable" in sf1_summary
-    ):
-        sf1_summary["n_unstable"] = len(sf1_summary.pop("unstable"))
-        line = json.dumps(final, separators=(",", ":"))
-    # before dropping the sf1 dict wholesale, truncate its ratio map to
-    # the WORST entries (they are the adjudication target; sub-1x wins
-    # already ride SCALE.md + the detail file) — 5 at a time until fit
-    while (
-        len(line) >= STDOUT_LINE_BUDGET
-        and sf1_summary
-        and len(sf1_summary.get("ratio", {})) > 10
-    ):
-        worst = sorted(
-            sf1_summary["ratio"].items(), key=lambda kv: -kv[1]
-        )[: len(sf1_summary["ratio"]) - 5]
-        sf1_summary["ratio"] = dict(worst)
-        sf1_summary["ratio_truncated"] = True
-        line = json.dumps(final, separators=(",", ":"))
-    # the floor_bound NAME list exists to tag rows in the worst-N ratio
-    # map — once that map is truncated, names outside it are dead bytes
-    # (the r13 run-1 line spent ~600 B on 42 names and squeezed the
-    # ratio map to 7 entries); keep the full count, trim the names.
-    if sf1_summary and sf1_summary.get("floor_bound") and (
-        sf1_summary.get("ratio_truncated") or len(line) >= STDOUT_LINE_BUDGET
-    ):
-        sf1_summary["n_floor_bound"] = len(sf1_summary["floor_bound"])
-        sf1_summary["floor_bound"] = [
-            n
-            for n in sf1_summary["floor_bound"]
-            if n in sf1_summary.get("ratio", {})
-        ]
-        line = json.dumps(final, separators=(",", ":"))
-    # the per-query sf0.1 timings are the LEAST essential payload: they
-    # are fully recomputable from the detail file, while the sf1 ratios
-    # are the adjudication target (r5 verdict #1). With 66 headline
-    # queries the timings dict alone nearly fills the budget and the
-    # round-9 run-2 line shed the whole sf1 section — so truncate
-    # queries (slowest first, they carry the information) and, if ever
-    # needed, drop queries BEFORE sf1.
-    while (
-        len(line) >= STDOUT_LINE_BUDGET
-        and len(final.get("queries", {})) > 15
-    ):
-        slowest = sorted(
-            final["queries"].items(), key=lambda kv: -kv[1]
-        )[: len(final["queries"]) - 10]
-        final["queries"] = dict(slowest)
+    if not fits() and s1 and s1.get("errors"):
+        s1["errors"] = sorted(s1["errors"])
+    # the unstable list marks which ratios NOT to trust: degrade it to
+    # a count rather than dropping it
+    if not fits() and s1 and "unstable" in s1:
+        s1["n_unstable"] = len(s1.pop("unstable"))
+    # truncate the sf1 ratio map to its WORST entries (the adjudication
+    # target), 5 at a time, before dropping the sf1 dict wholesale
+    while not fits() and s1 and len(s1.get("ratio", {})) > 10:
+        worst = sorted(s1["ratio"].items(), key=lambda kv: -kv[1])
+        s1["ratio"] = dict(worst[: len(worst) - 5])
+        s1["ratio_truncated"] = True
+    # floor_bound names outside a truncated ratio map are dead bytes
+    # (the r13 run-1 line spent ~600 B on 42 names): keep the count
+    if s1 and s1.get("floor_bound") and (s1.get("ratio_truncated") or not fits()):
+        s1["n_floor_bound"] = len(s1["floor_bound"])
+        s1["floor_bound"] = [n for n in s1["floor_bound"] if n in s1.get("ratio", {})]
+    # the per-query sf0.1 timings are the LEAST essential payload (the
+    # detail file has them; the sf1 ratios are the adjudication target,
+    # r5 verdict #1): keep the slowest, and drop queries BEFORE sf1
+    while not fits() and len(final.get("queries", {})) > 15:
+        slowest = sorted(final["queries"].items(), key=lambda kv: -kv[1])
+        final["queries"] = dict(slowest[: len(slowest) - 10])
         final["queries_truncated"] = True
-        line = json.dumps(final, separators=(",", ":"))
     for drop in ("queries", "sf1"):
-        if len(line) < STDOUT_LINE_BUDGET:
+        if fits():
             break
         final.pop(drop, None)
         final["dropped_for_size"] = final.get("dropped_for_size", []) + [drop]
-        line = json.dumps(final, separators=(",", ":"))
-    return line
+    return json.dumps(final, separators=(",", ":"))
 
 
 #: timed runs per engine per query at sf1. 3, not the sf0.1 section's
@@ -1534,394 +1624,151 @@ SF1_DEADLINE_RESERVE_S = 45.0
 
 
 def bench_sf1(
-    spark,
-    registry,
-    src_dir: str,
-    floor_s: float,
-    deadline: float | None = None,
-    run_id: str | None = None,
-    covered: set[str] | None = None,
-) -> dict:
-    """Spark-vs-DuckDB timings for the worst-ratio set at the
-    synthesized sf1 (min-of-N_RUNS_SF1 per engine; dispersion recorded
-    per query).
+    spark, registry, src_dir: str, log: RunLog, deadline: float | None = None
+) -> None:
+    """Spark-vs-DuckDB rows for the sf1 lists at the synthesized sf1
+    (min-of-N_RUNS_SF1 per engine, one cold run per SF1_COLD_QUERIES
+    query), appended to ``log`` as each completes. The log is the resume
+    state: each engine's keys run in _resume_rank order, so successive
+    runs of a tree cover every key and a re-measure is another row.
 
-    Measurement hygiene (r5 verdict #2): refuse to start when free disk
-    is below SF1_MIN_FREE_BYTES; drop DuckDB's spill temp before AND
-    after its pass so it never coexists with Spark shuffle files; and
-    record per-query dispersion — any query whose max/min spread
-    exceeds 2x lands in ``unstable`` and its ratio should be read as
-    unmeasured, not as a result.
+    ``deadline`` (a time.monotonic() timestamp) degrades the section PER
+    QUERY (the round-9 rc:124 failure lost it wholesale): no key starts
+    past the deadline minus reserve; keys left without a row are the
+    reducer's ``deadline_skipped``."""
 
-    ``deadline`` (a time.monotonic() timestamp) makes the section
-    degrade PER QUERY instead of being killed wholesale (the round-9
-    rc:124 failure): no new query starts past the deadline minus
-    reserve; everything not reached lands in ``deadline_skipped``; the
-    Spark pass runs DuckDB-paired queries first so whatever time
-    remains completes RATIOS, not orphan absolutes.
+    def over(limit: float | None) -> bool:
+        return limit is not None and time.monotonic() > limit - SF1_DEADLINE_RESERVE_S
 
-    ``covered`` (r15 verdict item 2 — resume-aware ordering): pair
-    names that already carry a same-tree measurement in the
-    accumulated record. Not-yet-covered pairs run FIRST (within the
-    existing evidence ordering), so successive default-budget runs
-    accumulate full coverage instead of re-measuring the same prefix;
-    a deadline skip of an already-covered pair is recorded under
-    ``deadline_skipped_recheck`` (the record still has a same-tree
-    number for it), keeping ``deadline_skipped`` = genuinely missing
-    measurements."""
+    prior = _by_key(log.rows())
 
-    def over_deadline(reserve: float = SF1_DEADLINE_RESERVE_S) -> bool:
-        return deadline is not None and time.monotonic() > deadline - reserve
-
-    covered = covered or set()
-    #: fresh-first iteration order (stable within each group)
-    sf1_order_all = [n for n in SF1_QUERIES if n not in covered] + [
-        n for n in SF1_QUERIES if n in covered
-    ]
+    def record(key: tuple, window) -> None:
+        prior.setdefault(key, []).append(log.append(measure(*key, window)))
 
     sf1_dir = ensure_sf1(spark, src_dir)
-    errors: dict[str, str] = {}
-    skipped_deadline: list[str] = []
-    skipped_recheck: list[str] = []
-
-    def skip(tag: str, name: str) -> None:
-        (skipped_recheck if name in covered else skipped_deadline).append(
-            f"{tag}:{name}"
-        )
     _clean_tmp()
-    free0 = _free_bytes()
-    if free0 < SF1_MIN_FREE_BYTES:
-        return {
+    free = _free_bytes()
+    free_gb = round(free / 1024**3, 1)
+    if free < SF1_MIN_FREE_BYTES:
+        log.append({
             "skipped": "insufficient_disk",
-            "free_gb": round(free0 / 1024**3, 1),
+            "free_gb": free_gb,
             "needed_gb": round(SF1_MIN_FREE_BYTES / 1024**3, 1),
-        }
+        })
+        return
+    log.append({"free_disk_gb_at_start": free_gb})
 
     # DuckDB FIRST: its big window sorts spill multi-GB temp; running
     # them before Spark's sf1 queries means that spill never coexists
     # with Spark's accumulated shuffle files (the combination filled
-    # the disk and killed this section in two round-5 runs). Errors are
-    # captured PER QUERY so one failure cannot erase the section.
-    #
-    # The duck pass is additionally capped at HALF the remaining
-    # deadline: when first-time fixture synthesis has eaten most of the
-    # budget, a full-budget duck pass leaves the Spark pass NOTHING and
-    # the record ends up all-denominator/no-numerator (this round's
-    # run 2: 64 duck rows, 0 spark rows). Half/half guarantees complete
-    # RATIO pairs for whatever prefix of SF1_QUERIES fits; the Spark
-    # pass runs duck-paired queries first, so the pairs line up.
+    # the disk and killed this section in two round-5 runs). The duck
+    # pass is capped at HALF the remaining deadline, so first-time
+    # fixture synthesis cannot leave the Spark pass nothing (a run once
+    # ended with 64 duck rows and 0 spark rows).
     duck_deadline = deadline
     if deadline is not None:
-        duck_deadline = min(
-            deadline, time.monotonic() + (deadline - time.monotonic()) / 2
-        )
-
-    def duck_over_deadline(reserve: float = SF1_DEADLINE_RESERVE_S) -> bool:
-        return (
-            duck_deadline is not None
-            and time.monotonic() > duck_deadline - reserve
-        )
-
-    duck: dict[str, float] = {}
-    cold_duck: dict[str, float] = {}
-    con = _duck_connect()
-    # cap the comparison engine's memory: its default (80% of RAM)
-    # overlaps the Spark JVM's heap on this shared box; 32 GB trades a
-    # little extra spill for never racing the JVM into the OOM killer
-    con.execute("SET memory_limit='32GB'")
-    for t in TABLES:
-        con.execute(
-            "CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')".format(
-                t=t, p=f"{sf1_dir}/{t}.parquet/*.parquet"
+        duck_deadline = min(deadline, (time.monotonic() + deadline) / 2)
+    with _duck_connect() as con:
+        # cap the comparison engine's memory: its default (80% of RAM)
+        # overlaps the Spark JVM's heap on this shared box; 32 GB trades a
+        # little extra spill for never racing the JVM into the OOM killer
+        con.execute("SET memory_limit='32GB'")
+        for t in TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{sf1_dir}/{t}.parquet/*.parquet')"
             )
-        )
-    # every completed measurement is APPENDED to the progress file the
-    # moment it exists: the round-9 run proved that an end-only write
-    # loses 90 minutes of data to a subprocess timeout
-    progress = _sf1_progress_path()
-    try:
-        os.unlink(progress)
-    except OSError:
-        pass
-
-    def _record(kind: str, name: str, payload) -> None:
-        with open(progress, "a") as f:
-            f.write(json.dumps({"k": kind, "q": name, "v": payload}) + "\n")
-
-    if run_id is not None:
-        _record("run_id", "run_id", run_id)
-    _record("floor", "floor_s", floor_s)
-
-    overrides = _sf1_sql_overrides()
-    duck_detail: dict[str, dict] = {}
-    for name in sf1_order_all:
-        sql = overrides.get(name) or registry[name].oracle
-        if not sql:
-            continue
-        if duck_over_deadline():
-            skip("duckdb", name)
-            continue
-        budget = SF1_DUCK_BUDGET_OVERRIDES.get(
-            name, SF1_DUCK_QUERY_BUDGET_S
-        )
-        if duck_deadline is not None:
-            budget = min(
-                budget,
-                max(
-                    duck_deadline
-                    - time.monotonic()
-                    - SF1_DEADLINE_RESERVE_S,
-                    5.0,
-                ),
-            )
-        try:
-            duck_detail[name] = run_duckdb_budgeted(
-                con, sql, n_runs=N_RUNS_SF1, budget_s=budget
-            )
-            duck[name] = duck_detail[name]["min"]
-            _record("duckdb", name, duck_detail[name])
-        except Exception as e:  # noqa: BLE001 - record and continue
-            errors[f"duckdb:{name}"] = _err(e)
-            _record("error", f"duckdb:{name}", _err(e))
-    # warm-retry protocol (r13 verdict item 5): a pair flagged unstable
-    # by ONE polluted 3-run window often measures clean immediately
-    # after — give every >2x-spread duck window one more (already-warm)
-    # window and keep whichever has the smaller spread (tie: smaller
-    # min). "unstable" should mean "unmeasurable this session", not
-    # "the scheduler hiccuped once".
-    for name in [
-        n for n in sf1_order_all
-        if duck_detail.get(n, {}).get("spread", 1.0) > 2.0
-    ]:
-        if duck_over_deadline():
-            break
-        sql = overrides.get(name) or registry[name].oracle
-        try:
-            retry = run_duckdb_budgeted(
-                con, sql, n_runs=N_RUNS_SF1,
-                budget_s=SF1_DUCK_BUDGET_OVERRIDES.get(
-                    name, SF1_DUCK_QUERY_BUDGET_S
-                ),
-            )
-        except Exception:  # noqa: BLE001 - keep the first window
-            continue
-        old = duck_detail[name]
-        if (retry["spread"], retry["min"]) < (old["spread"], old["min"]):
-            retry["retried"] = True
-            duck_detail[name] = retry
-            duck[name] = retry["min"]
-            _record("duckdb", name, retry)
-    for name in SF1_COLD_QUERIES:
-        sql = registry[name].oracle
-        if sql:
-            if duck_over_deadline():
-                skip("duckdb_cold", name)
+        overrides = _sf1_sql_overrides()
+        for key in sorted(
+            (k for k in _sf1_expected() if k[0] == "duckdb"),
+            key=lambda k: _resume_rank(prior.get(k, [])),
+        ):
+            if over(duck_deadline):
+                break
+            _, kind, name = key
+            if kind == "cold":
+                sql = registry[name].oracle
+                record(key, lambda: _timed(lambda: con.execute(sql).fetchall(), 1))
                 continue
-            try:
-                t0 = time.perf_counter()
-                con.execute(sql).fetchall()
-                cold_duck[name] = round(time.perf_counter() - t0, 3)
-                _record("duckdb_cold", name, cold_duck[name])
-            except Exception as e:  # noqa: BLE001
-                errors[f"duckdb_cold:{name}"] = _err(e)
-                _record("error", f"duckdb_cold:{name}", _err(e))
-    con.close()
-    # DuckDB's pass is over: its spill temp must not share the disk
-    # with Spark's sf1 shuffle files (the r5 ENOSPC cause).
+            sql = overrides.get(name) or registry[name].oracle
+            budget = SF1_DUCK_BUDGET_OVERRIDES.get(name, SF1_DUCK_QUERY_BUDGET_S)
+            if duck_deadline is not None:
+                budget = min(budget, max(
+                    duck_deadline - time.monotonic() - SF1_DEADLINE_RESERVE_S, 5.0
+                ))
+            record(key, lambda: run_duckdb_budgeted(
+                con, sql, n_runs=N_RUNS_SF1, budget_s=budget
+            ))
     _clean_tmp()
 
-    timings: dict[str, float] = {}
-    spark_detail: dict[str, dict] = {}
-    # ratio-completing order: queries whose DuckDB twin finished first,
-    # then the rest — a deadline mid-pass costs absolutes, not pairs
-    # (fresh-first within each group, same as the duck pass)
-    spark_order = [n for n in sf1_order_all if n in duck] + [
-        n for n in sf1_order_all if n not in duck
-    ] + SF1_SPARK_ONLY
-    for name in spark_order:
-        if over_deadline():
-            skip("spark", name)
-            continue
-        try:
-            spark_detail[name] = run_spark(
-                registry[name].fn, spark, sf1_dir, n_runs=N_RUNS_SF1
-            )
-            timings[name] = spark_detail[name]["min"]
-            _record("spark", name, spark_detail[name])
-        except Exception as e:  # noqa: BLE001
-            errors[f"spark:{name}"] = _err(e)
-            _record("error", f"spark:{name}", _err(e))
-    # spark-side warm-retry (same protocol as the duck pass above)
-    for name in [
-        n for n in spark_order
-        if spark_detail.get(n, {}).get("spread", 1.0) > 2.0
-    ]:
-        if over_deadline():
-            break
-        try:
-            retry = run_spark(
-                registry[name].fn, spark, sf1_dir, n_runs=N_RUNS_SF1
-            )
-        except Exception:  # noqa: BLE001 - keep the first window
-            continue
-        old = spark_detail[name]
-        if (retry["spread"], retry["min"]) < (old["spread"], old["min"]):
-            retry["retried"] = True
-            spark_detail[name] = retry
-            timings[name] = retry["min"]
-            _record("spark", name, retry)
-    cold: dict[str, float] = {}
-    for name in SF1_COLD_QUERIES:
-        if over_deadline():
-            skip("spark_cold", name)
-            continue
-        try:
-            t0 = time.perf_counter()
-            registry[name].fn(spark, sf1_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            cold[name] = round(time.perf_counter() - t0, 3)
-            _record("spark_cold", name, cold[name])
-        except Exception as e:  # noqa: BLE001
-            errors[f"spark_cold:{name}"] = _err(e)
-            _record("error", f"spark_cold:{name}", _err(e))
-    # a ratio is only as trustworthy as its noisiest side: flag any
-    # pair where either engine's window spread exceeds 2x
-    unstable = sorted(
-        n
-        for n in set(spark_detail) | set(duck_detail)
-        if max(
-            spark_detail.get(n, {}).get("spread", 1.0),
-            duck_detail.get(n, {}).get("spread", 1.0),
-        )
-        > 2.0
-    )
-    out = {
-        "replicas_of_sf0.1": SF1_REPLICAS,
-        "table_replica_overrides": SF1_TABLE_REPLICAS,
-        "free_disk_gb_at_start": round(free0 / 1024**3, 1),
-        "queries": timings,
-        "duckdb": duck,
-        "spark_detail": spark_detail,
-        "duckdb_detail": duck_detail,
-        "unstable": unstable,
-        "ratio": {
-            n: round(timings[n] / duck[n], 2)
-            for n in duck
-            if duck[n] > 0 and n in timings
-            and n not in SF1_TWIN_EXCLUDED
-        },
-        "ratio_floor_adjusted": {
-            n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
-            for n in duck
-            if duck[n] > 0 and n in timings
-            and n not in SF1_TWIN_EXCLUDED
-        },
-        # measured but aggregate-excluded (twin denominator, see
-        # SF1_TWIN_EXCLUDED): the honest number, outside the averages
-        "twin_ratio": {
-            n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
-            for n in SF1_TWIN_EXCLUDED
-            if n in duck and duck[n] > 0 and n in timings
-        },
-        "cold_sec": cold,
-        "cold_duckdb_sec": cold_duck,
-        "spark_only": {
-            n: timings[n] for n in SF1_SPARK_ONLY if n in timings
-        },
-        "sql_overrides": sorted(
-            n for n in _sf1_sql_overrides() if n in duck
+    # within a resume rank, keys whose DuckDB twin has a timing first: a
+    # deadline mid-pass then costs absolutes, not pairs
+    for key in sorted(
+        (k for k in _sf1_expected() if k[0] == "spark"),
+        key=lambda k: (
+            _resume_rank(prior.get(k, [])),
+            _best(prior.get(("duckdb",) + k[1:], [])) is None,
         ),
-        "twin_excluded": SF1_TWIN_EXCLUDED,
-        # include sf0.1-only benched rows too (r15: the prefixfilter /
-        # dq_referential class is annotated but absent from the sf1
-        # section, and the adjudication report reads annotations from
-        # this record)
-        "annotations": {
-            n: note
-            for n, note in SF1_ANNOTATIONS.items()
-            if n in timings or n in duck or n in HEADLINE
-        },
-        "n_runs": N_RUNS_SF1,
-    }
-    # pin the pair set the sf1 aggregates are computed over (verdict
-    # item 7: like-for-like round-over-round comparison)
-    import hashlib
-
-    out["pairs_md5"] = hashlib.md5(
-        ",".join(sorted(out["ratio_floor_adjusted"])).encode()
-    ).hexdigest()[:10]
-    if skipped_deadline:
-        out["deadline_skipped"] = skipped_deadline
-    if skipped_recheck:
-        out["deadline_skipped_recheck"] = skipped_recheck
-    if covered:
-        out["n_covered_by_prior_runs"] = len(covered)
-    if errors:
-        out["errors"] = errors
-    return out
+    ):
+        if over(deadline):
+            break
+        fn = registry[key[2]].fn
+        if key[1] == "cold":
+            record(key, lambda: _timed(lambda: _noop(fn, spark, sf1_dir), 1))
+        else:
+            record(key, lambda: run_spark(fn, spark, sf1_dir, n_runs=N_RUNS_SF1))
 
 
-def sf1_main(
-    sf_dir: str,
-    out_path: str,
-    deadline_s: float | None = None,
-    run_id: str | None = None,
-) -> None:
-    """Entry point for the sf1 section's isolated subprocess (fresh JVM;
-    see main() for why). Writes the bench_sf1 dict as JSON to out_path;
-    stdout stays silent so the parent's driver contract is untouched.
-
-    ``deadline_s`` is the wall budget measured from THIS entry point
-    (it covers session startup, warmup, first-time sf1 synthesis and
-    the measurement passes): bench_sf1 degrades per-query as it nears
-    and the result file is ALWAYS written — the parent should never
-    need its subprocess-timeout kill."""
-    deadline = (
-        time.monotonic() + deadline_s if deadline_s is not None else None
-    )
-    host_start = _host_telemetry()
-    # resume-aware ordering (r15 verdict item 2): the parent passes the
-    # already-covered pair names of the accumulated same-tree record
-    covered = {
-        n
-        for n in os.environ.get("SPARK_GRAFT_SF1_COVERED", "").split(",")
-        if n
-    }
-    registry = build_registry()
-    # the parent stopped its session before spawning us, so its scratch
-    # dirs are dead; prune BEFORE creating our own session (age guard
-    # kept: never touch dirs of unrelated live Spark processes)
-    _clean_tmp(prune_spark_dirs=True)
-    spark = get_spark("etl-verkada-spark-bench-sf1")
-    # same warmup + floor protocol as the sf0.1 section
-    registry["agg_count"].fn(spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
+def _warm_up(spark, registry, sf_dir: str) -> None:
+    """JVM/codegen warmup on an off-headline query, then several noop
+    jobs: a single warmup under-trains the JIT, and the first headline
+    query (plus the floor itself) absorbs the remainder — measured
+    r3->r4 as a 3x floor swing and a 2.7x phantom agg_groupby
+    regression that vanished in isolation."""
+    _noop(registry["agg_count"].fn, spark, sf_dir)
     for _ in range(4):
         spark.range(1).write.mode("overwrite").format("noop").save()
-    floor_s = float("inf")
-    for _ in range(5):
+
+
+def _floor(job, n: int = 5) -> float:
+    """Min-of-n wall time of ``job``: a fixed-overhead floor."""
+    best = float("inf")
+    for _ in range(n):
         t0 = time.perf_counter()
-        spark.range(1).write.mode("overwrite").format("noop").save()
-        floor_s = min(floor_s, time.perf_counter() - t0)
-    floor_s = round(floor_s, 3)
+        job()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def _floor_1row(spark) -> float:
+    """Plan + schedule + noop-commit a single-stage 1-row range job: the
+    absolute lower bound of a Spark query."""
+    return _floor(lambda: spark.range(1).write.mode("overwrite").format("noop").save())
+
+
+def sf1_main(sf_dir: str, deadline_s: float | None = None, run_id: str = "") -> None:
+    """Entry point of the sf1 section's child process (fresh JVM; see
+    main()): appends rows under the parent's ``run_id``, prints nothing.
+    ``deadline_s`` is the wall budget from THIS entry point, covering
+    startup and first-time sf1 synthesis too."""
+    deadline = time.monotonic() + deadline_s if deadline_s is not None else None
+    tree_id, cpus, sf = _run_key(sf_dir)
+    log = RunLog(tree_id, cpus, _sf1_label(sf), run_id or uuid.uuid4().hex[:12])
+    meta = {"host_start": _host_telemetry(), "deadline_s": deadline_s}
     try:
-        res = bench_sf1(
-            spark, registry, sf_dir, floor_s, deadline=deadline,
-            run_id=run_id, covered=covered,
-        )
-    except Exception as e:  # noqa: BLE001 - report, never crash silently
-        # _err already leads with the class name — no second prefix
-        # (ADVICE r13: "ValueError: ValueError: ..." wasted line bytes)
-        res = {"error": _err(e)}
-    res["floor_s_subprocess"] = floor_s
-    res["host_start"] = host_start
-    res["host_end"] = _host_telemetry()
-    if deadline_s is not None:
-        res["deadline_s"] = round(deadline_s, 1)
-    with open(out_path, "w") as f:
-        json.dump(res, f)
+        registry = build_registry()
+        # the parent stopped its session before spawning us, so its
+        # scratch dirs are dead; prune BEFORE creating our own session
+        # (age guard kept: never touch dirs of unrelated live Spark
+        # processes)
+        _clean_tmp(prune_spark_dirs=True)
+        spark = get_spark("etl-verkada-spark-bench-sf1")
+        _warm_up(spark, registry, sf_dir)  # the sf0.1 section's protocol
+        log.append({**meta, "floor_s": round(_floor_1row(spark), 3)})
+        bench_sf1(spark, registry, sf_dir, log, deadline=deadline)
+    except Exception as e:  # noqa: BLE001 - a section row, never silence
+        log.append({**meta, "error": _err(e)})
+    log.append({"host_end": _host_telemetry()})
 
 
 #: whole-bench wall budget (seconds). The driver kills the bench
@@ -1934,421 +1781,167 @@ def sf1_main(
 BENCH_BUDGET_S = 2700.0
 
 
+def headline_spark(spark, registry, sf_dir: str, log: RunLog) -> dict:
+    """One spark row per HEADLINE query; returns this run's minima."""
+    rows = [
+        log.append(measure("spark", "warm", name, lambda: run_spark(
+            registry[name].fn, spark, sf_dir
+        )))
+        for name in HEADLINE
+    ]
+    return {r["query"]: r["min"] for r in rows if "min" in r}
+
+
+def headline_duckdb(spark, registry, sf_dir: str, log: RunLog, spark_mins) -> dict:
+    """One duckdb row per HEADLINE oracle, then the warm canary, which it
+    returns: one already-warm pair re-timed at section end (r12 verdict
+    item 1). Spark drifting while DuckDB holds marks the run contended,
+    not the code regressed."""
+    try:
+        con = _duck_connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    except Exception as e:  # noqa: BLE001 - a section row
+        log.append({"error": f"duckdb: {_err(e)}"})
+        return {}
+    with con:
+        rows = [
+            log.append(measure("duckdb", "warm", name, lambda: run_duckdb(
+                con, registry[name].oracle
+            )))
+            for name in HEADLINE
+            if registry[name].oracle
+        ]
+        duck_mins = {r["query"]: r["min"] for r in rows if "min" in r}
+        cq = "flagship_flat"
+        if cq not in spark_mins or cq not in duck_mins:
+            return {}
+        try:
+            c_s = run_spark(registry[cq].fn, spark, sf_dir, n_runs=3)
+            c_d = run_duckdb(con, registry[cq].oracle, n_runs=3)
+        except Exception as e:  # noqa: BLE001
+            return {"q": cq, "error": _err(e)}
+    return {
+        "q": cq,
+        "spark_drift": round(c_s["min"] / spark_mins[cq], 2),
+        "duckdb_drift": round(c_d["min"] / duck_mins[cq], 2),
+    }
+
+
+def bench_headline(spark, registry, sf_dir: str, log: RunLog) -> None:
+    """The sf0.1 section: warmup, floors, both engines' rows, then one
+    section row with the floors and host telemetry."""
+    from pyspark.sql import functions as F
+
+    from etl_verkada_spark.catalog import table
+
+    host_start = _host_telemetry()
+    _warm_up(spark, registry, sf_dir)
+
+    # two floors (r11: a 1-row probe at 0.025 s against a 0.152 s
+    # cheapest headline query left "floor-adjusted" ratios pricing
+    # harness fixed cost): floor_1row, the absolute lower bound kept for
+    # cross-round comparability, and the floor used for adjustment — a
+    # REAL minimal query (scan the 5-row region parquet through the
+    # catalog, one hash aggregate, noop sink): two stages, a parquet
+    # reader, codegen and an exchange, the fixed machinery EVERY
+    # headline query pays. DuckDB's side is not floor-adjusted at all.
+    def region_floor() -> float:
+        return _floor(lambda: table(spark, sf_dir, "region").groupBy().agg(
+            F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").format("noop").save())
+
+    floor_1row_s, floor_s = _floor_1row(spark), region_floor()
+    spark_mins = headline_spark(spark, registry, sf_dir, log)
+    # floor re-measured at full steady state; keep the smaller — the
+    # floor is a LOWER bound on fixed overhead (an inflated floor
+    # flatters every ratio).
+    floor_s = round(min(floor_s, region_floor()), 3)
+    floor_1row_s = round(min(floor_1row_s, _floor_1row(spark)), 3)
+    canary = headline_duckdb(spark, registry, sf_dir, log, spark_mins)
+    host_end = _host_telemetry()
+    host = {
+        "load1": [host_start.get("load1"), host_end.get("load1")],
+        "mem_gb": [host_start.get("mem_avail_gb"), host_end.get("mem_avail_gb")],
+        **({"canary": canary} if canary else {}),
+    }
+    log.append({"floor_s": floor_s, "floor_1row_s": floor_1row_s, "host": host})
+
+
 def main() -> None:
     t_start = time.monotonic()
-    budget = float(
-        os.environ.get("SPARK_GRAFT_BENCH_BUDGET", str(BENCH_BUDGET_S))
-    )
+    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", str(BENCH_BUDGET_S)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    registry = build_registry()
+    tree_id, cpus, sf = _run_key(sf_dir)
+    run_id = uuid.uuid4().hex[:12]
+    _prune_log(tree_id)
+    log = RunLog(tree_id, cpus, sf, run_id)
     # drop scratch left by prior rounds (DuckDB spill temp, dead Spark
     # local dirs) before any timing — stale files were half the r5
     # ENOSPC story. Spark-dir pruning is ONLY safe here, before this
     # process creates its session (see _clean_tmp).
     _clean_tmp(prune_spark_dirs=True)
-    host_start = _host_telemetry()
-    spark = get_spark("etl-verkada-spark-bench")
-
-    # JVM/codegen warmup on an off-headline query, then several noop
-    # jobs: a single warmup under-trains the JIT, and the first headline
-    # query (plus the floor itself) absorbs the remainder — measured
-    # r3->r4 as a 3x floor swing and a 2.7x phantom agg_groupby
-    # regression that vanished in isolation.
-    registry["agg_count"].fn(spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    for _ in range(4):
-        spark.range(1).write.mode("overwrite").format("noop").save()
-
-    # fixed per-query floor, TWO probes (r11 — the r10 record's 1-row
-    # probe measured 0.025 s while the CHEAPEST real headline query was
-    # 0.152 s, so "floor-adjusted" ratios at sf0.1 still mostly priced
-    # harness fixed cost, not plans):
-    # * floor_1row — plan + schedule + noop-commit a single-stage 1-row
-    #   range job: the absolute lower bound, kept for cross-round
-    #   comparability;
-    # * floor (used for adjustment) — the same min-of-5 over a REAL
-    #   minimal query: scan the 5-row region parquet through the
-    #   catalog, one hash aggregate, noop sink. Two stages, a parquet
-    #   reader, codegen, an exchange — the fixed machinery EVERY
-    #   headline query pays before touching data. DuckDB's side is not
-    #   floor-adjusted at all (its fixed cost stays in its timings), so
-    #   the comparison remains conservative.
-    from etl_verkada_spark.catalog import table as _cat_table
-
-    def measure_floor_1row(n: int = 5) -> float:
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            spark.range(1).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    def measure_floor(n: int = 5) -> float:
-        from pyspark.sql import functions as _F
-
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            _cat_table(spark, sf_dir, "region").groupBy().agg(
-                _F.count(_F.lit(1)).alias("n")
-            ).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    floor_1row_s = measure_floor_1row()
-    floor_s = measure_floor()
-
-    timings: dict[str, float] = {}
-    spark_detail: dict[str, dict] = {}
-    for name in HEADLINE:
-        spark_detail[name] = run_spark(registry[name].fn, spark, sf_dir)
-        timings[name] = spark_detail[name]["min"]
-
-    # floor re-measured at full steady state; keep the smaller — the
-    # floor is a LOWER bound on fixed overhead, so the min is the
-    # honest estimate (an inflated floor flatters every ratio).
-    floor_s = round(min(floor_s, measure_floor()), 3)
-    floor_1row_s = round(min(floor_1row_s, measure_floor_1row()), 3)
-
-    duck: dict[str, float] = {}
-    duck_detail: dict[str, dict] = {}
-    canary: dict = {}
+    spark = None
     try:
-        import duckdb
-
-        con = _duck_connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        for name in HEADLINE:
-            sql = registry[name].oracle
-            if sql:
-                duck_detail[name] = run_duckdb(con, sql)
-                duck[name] = duck_detail[name]["min"]
-        # warm canary (r12 verdict item 1): re-time ONE already-warm
-        # pair at section end. Its drift vs the recorded min is the
-        # in-record host-bias detector — Spark drifting while DuckDB
-        # holds (the r12 signature: +30-400% vs +5%) marks the run
-        # contended, not the code regressed.
-        cq = "flagship_flat"
-        if timings.get(cq) and duck.get(cq):
-            c_s = run_spark(registry[cq].fn, spark, sf_dir, n_runs=3)
-            c_d = run_duckdb(con, registry[cq].oracle, n_runs=3)
-            canary = {
-                "q": cq,
-                "spark_drift": round(c_s["min"] / timings[cq], 2),
-                "duckdb_drift": round(c_d["min"] / duck[cq], 2),
-            }
-    except Exception:
-        pass
-
-    # ratio with the fixed per-job floor subtracted: the scale signal
-    # (does the PLAN do more work than DuckDB's) as opposed to the raw
-    # ratio (which at sub-second local scale mostly measures JVM job
-    # orchestration). Clamped at 0 for queries at the floor.
-    ratios = {
-        n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
-        for n in duck
-        if duck[n] > 0
-    }
-
-    headline = {
-        "metric": (
-            f"headline query wall-clock, noop sink, min-of-{N_RUNS}"
-        ),
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "duckdb": duck,
-        "spark_fixed_overhead_sec": floor_s,
-        "spark_fixed_overhead_1row_sec": floor_1row_s,
-        "ratio_floor_adjusted": ratios,
-        "sf1": "pending",
-        # tagged so a first-JSON-line consumer cannot mistake this for
-        # the final record (ADVICE r5 #3)
-        "partial": True,
-    }
+        registry = build_registry()
+        spark = get_spark("etl-verkada-spark-bench")
+        bench_headline(spark, registry, sf_dir, log)
+    except Exception as e:  # noqa: BLE001 - the lines must still print
+        log.append({"error": _err(e)})
     # the sf1 section runs for tens of minutes; print (and flush) a
-    # COMPACT headline line FIRST so a harness timeout mid-sf1 still
-    # records a parseable sf0.1 record — the final line supersedes it.
-    host = {
-        "load1": [host_start.get("load1"), _host_telemetry().get("load1")],
-        "mem_gb": [
-            host_start.get("mem_avail_gb"),
-            _host_telemetry().get("mem_avail_gb"),
-        ],
-    }
-    if canary:
-        host["canary"] = canary
-    print(
-        compact_stdout_line(
-            headline["value"], sf, timings, floor_s, duck, None,
-            os.environ.get("SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_full.json"),
-            partial=True,
-            floor_1row_s=floor_1row_s,
-            host=host,
-        ),
-        flush=True,
-    )
+    # partial line FIRST so a harness timeout mid-sf1 still records a
+    # parseable sf0.1 record — the final line supersedes it.
+    print(reduce(read_log(), tree_id, cpus, sf, partial=True)[1], flush=True)
 
-    # sf1 crossover section (disable with SPARK_GRAFT_SF1=0); never let
-    # it break the headline JSON line. It runs in a FRESH SUBPROCESS
-    # (own JVM): the r6 full run lost 31 of 34 sf1 queries because one
-    # heavy query wedged the then-1000-stage-old shared JVM and every
-    # later task died with "Lost task" — fault isolation plus a clean
-    # heap is worth the ~30 s of subprocess warmup.
-    # tree identity + accumulated same-tree record, resolved BEFORE the
-    # sf1 subprocess so its pair ordering can be resume-aware (r15
-    # verdict item 2): pairs with no same-tree measurement yet run
-    # first in the child.
-    tree_id = _tree_id()
-    repo_detail = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
-    prior_record = _load_prior_record(repo_detail, tree_id)
-    prior_runs = prior_record.get("runs") or []
-    # cross-run merging additionally requires same sf AND same cpus
-    # (r15 verdict item 2 / what's-wrong #4: the r15 working-tree
-    # record min-merged a 32-core and an 8-core run of the same sf).
-    # Runs that predate the cpus field never merge (tree_id changes
-    # with bench.py anyway, so none exist in practice).
-    merge_runs = [
-        r
-        for r in prior_runs
-        if r.get("sf") == sf and r.get("cpus") == cpus
-    ]
-    covered_pairs = sorted(
-        set(_min_union([r.get("sf1_queries") for r in merge_runs]))
-        & set(_min_union([r.get("sf1_duckdb") for r in merge_runs]))
-    )
-
-    sf1: dict | None = None
+    # sf1 crossover section (disable with SPARK_GRAFT_SF1=0) in a FRESH
+    # SUBPROCESS (own JVM): the r6 full run lost 31 of 34 sf1 queries
+    # when one heavy query wedged the shared JVM. The child appends its
+    # own rows; one that cannot run or dies leaves a section row here.
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
-        spark.stop()  # free the 16g heap + shuffle dirs for the child
         import subprocess
-        import tempfile
-        import uuid
 
-        # the sf1 section gets whatever the whole-bench budget has
-        # left, minus margin to assemble + print the final line; the
-        # child degrades per-query against this deadline and writes
-        # its result file itself — the subprocess timeout below is a
-        # last-resort backstop, not the control mechanism (round 9's
-        # control-by-kill lost the ratios).
+        if spark is not None:
+            spark.stop()  # free the 16g heap + shuffle dirs for the child
+        sf1_log = RunLog(tree_id, cpus, _sf1_label(sf), run_id)
+        # the child gets what the whole-bench budget has left, minus
+        # margin to reduce + print; it degrades per-query against this
+        # deadline — the subprocess timeout is only a backstop (round
+        # 9's control-by-kill lost the ratios).
         elapsed = time.monotonic() - t_start
         deadline_s = min(
             budget - elapsed - 120.0,
             float(os.environ.get("SPARK_GRAFT_SF1_TIMEOUT", "3300")),
         )
-        run_id = uuid.uuid4().hex[:12]
-        # stale-progress guard, belt half (ADVICE r9): a file from a
-        # previous run must be gone before the child can die early
-        try:
-            os.unlink(_sf1_progress_path())
-        except OSError:
-            pass
-        out_path = os.path.join(tempfile.gettempdir(), "bench_sf1_result.json")
-        try:
-            os.unlink(out_path)
-        except OSError:
-            pass
         if deadline_s < 240.0:
-            sf1 = {
+            sf1_log.append({
                 "skipped": "no_time",
                 "budget_s": budget,
                 "elapsed_before_sf1_s": round(elapsed, 1),
-            }
+            })
         else:
             try:
-                child_env = dict(os.environ)
-                child_env["SPARK_GRAFT_SF1_COVERED"] = ",".join(
-                    covered_pairs
-                )
                 proc = subprocess.run(
                     [sys.executable, os.path.abspath(__file__), "--sf1-only",
-                     sf_dir, out_path, f"{deadline_s:.0f}", run_id],
-                    capture_output=True,
-                    text=True,
-                    timeout=deadline_s + 180,
-                    env=child_env,
+                     sf_dir, f"{deadline_s:.0f}", run_id],
+                    capture_output=True, text=True, timeout=deadline_s + 180,
                 )
-                if os.path.exists(out_path):
-                    with open(out_path) as f:
-                        sf1 = json.load(f)
-                else:
-                    sf1 = _sf1_from_progress(
-                        f"sf1 subprocess rc={proc.returncode}: "
-                        f"{proc.stderr[-400:]}",
-                        run_id,
-                    )
+                if proc.returncode != 0:
+                    sf1_log.append({"error": f"sf1 subprocess rc={proc.returncode}: "
+                                             f"{proc.stderr[-400:]}"})
             except Exception as e:  # noqa: BLE001
-                sf1 = _sf1_from_progress(f"{type(e).__name__}: {e}", run_id)
+                sf1_log.append({"error": _err(e)})
 
-    # -- driver contract (r5 verdict #1): the FINAL stdout line must fit
-    # the driver's ~4 KB tail capture (BENCH_r02-r05 were parsed:null
-    # because the full record outgrew it). Full detail goes to a file;
-    # the final line carries the headline numbers + the sf1 SUMMARY.
-    host["load1"][1] = _host_telemetry().get("load1")
-    host["mem_gb"][1] = _host_telemetry().get("mem_avail_gb")
-
-    # -- cross-run min-intersection (r13 verdict item 6): earlier runs
-    # of the IDENTICAL tree (content-hashed) accumulate in the repo
-    # detail file; the headline this run emits is the per-pair minimum
-    # over the intersection of completed pairs across ALL runs, so the
-    # committed stdout record IS the multi-run number the close-note
-    # cites. Per-run values stay in the detail under "runs"; a pair is
-    # flagged unstable only if it looked unstable in EVERY run (more
-    # samples -> fewer false flags, r13 verdict item 5).
-    sf1_is_dict = isinstance(sf1, dict)
-    cur_run = {
-        "sf": sf,
-        "cpus": cpus,
-        "value": headline["value"],
-        "queries": timings,
-        "duckdb": duck,
-        "floor_s": floor_s,
-        "host": host,
-        "sf1_queries": sf1.get("queries") if sf1_is_dict else None,
-        "sf1_duckdb": sf1.get("duckdb") if sf1_is_dict else None,
-        "sf1_unstable": sf1.get("unstable") if sf1_is_dict else None,
-    }
-    # same-SCALE same-CPUS guard: a smoke run at another sf shares
-    # query NAMES with prior sf0.1 runs, and an 8-core scaling run
-    # shares names with the 32-core primary — min-merging across either
-    # axis mixes configurations (r15 what's-wrong #4), so only
-    # same-sf/same-cpus prior runs (merge_runs, resolved above the sf1
-    # subprocess) participate; everything else is carried through to
-    # the written detail file UNCHANGED (r14 advice).
-    other_runs = [r for r in prior_runs if r not in merge_runs]
-    runs = merge_runs + [cur_run]
-    line_timings, line_duck, line_sf1 = timings, duck, sf1
-    if len(runs) > 1:
-        m_q = _min_intersect([r.get("queries") for r in runs])
-        m_d = _min_intersect([r.get("duckdb") for r in runs])
-        if m_q and m_d:
-            line_timings, line_duck = m_q, m_d
-        # sf1 merge is union-with-min (r15 verdict item 2): each run
-        # completes a budget-dependent subset of pairs; the union lets
-        # resume-aware runs accumulate full coverage while every entry
-        # stays a same-tree/same-config min.
-        ms_q = _min_union([r.get("sf1_queries") for r in runs])
-        ms_d = _min_union([r.get("sf1_duckdb") for r in runs])
-        if ms_q and ms_d:
-            line_sf1 = dict(sf1) if sf1_is_dict else {
-                "carried_forward": True
-            }
-            line_sf1["queries"] = ms_q
-            line_sf1["duckdb"] = ms_d
-            line_sf1["ratio"] = {
-                n: round(ms_q[n] / ms_d[n], 2)
-                for n in ms_d
-                if ms_d[n] > 0 and n in ms_q
-                and n not in SF1_TWIN_EXCLUDED
-            }
-            line_sf1["ratio_floor_adjusted"] = {
-                n: round(max(ms_q[n] - floor_s, 0.0) / ms_d[n], 2)
-                for n in ms_d
-                if ms_d[n] > 0 and n in ms_q
-                and n not in SF1_TWIN_EXCLUDED
-            }
-
-            def _present(r: dict, n: str) -> bool:
-                return n in (r.get("sf1_queries") or {}) or n in (
-                    r.get("sf1_duckdb") or {}
-                )
-
-            # unstable iff flagged in EVERY run that measured the pair
-            # (a pair seen by one run keeps that run's verdict)
-            line_sf1["unstable"] = sorted(
-                n
-                for n in set(ms_q) | set(ms_d)
-                if any(_present(r, n) for r in runs)
-                and all(
-                    n in (r.get("sf1_unstable") or [])
-                    for r in runs
-                    if _present(r, n)
-                )
-            )
-            import hashlib as _hl
-
-            line_sf1["pairs_md5"] = _hl.md5(
-                ",".join(
-                    sorted(line_sf1["ratio_floor_adjusted"])
-                ).encode()
-            ).hexdigest()[:10]
-            line_sf1["runs_merged"] = len(runs)
-    merged_value = round(sum(line_timings.values()), 3)
-
-    full = {
-        **headline,
-        "value": merged_value,
-        "partial": False,
-        "host": host,
-        "cpus": cpus,
-        "queries_detail": spark_detail,
-        "duckdb_detail": duck_detail,
-        # carry a prior same-tree sf1 section forward through an
-        # sf1-disabled run instead of refusing the write (r15 verdict
-        # item 2): the accumulated runs list must keep growing
-        "sf1": sf1 if sf1 is not None else prior_record.get("sf1"),
-        "tree_id": tree_id,
-        "runs": other_runs + runs,
-        "runs_merged": len(runs),
-    }
-    if sf1 is None and prior_record.get("sf1") is not None:
-        full["sf1_carried_forward"] = True
-    if line_timings is not timings:
-        full["merged"] = {
-            "queries": line_timings,
-            "duckdb": line_duck,
-            "sf1": None if line_sf1 is sf1 else {
-                "queries": line_sf1.get("queries"),
-                "duckdb": line_sf1.get("duckdb"),
-                "ratio_floor_adjusted": line_sf1.get(
-                    "ratio_floor_adjusted"
-                ),
-                "unstable": line_sf1.get("unstable"),
-            },
-        }
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_full.json"
-    )
+    detail, line = reduce(read_log(), tree_id, cpus, sf)
     try:
-        with open(detail_path, "w") as f:
-            json.dump(full, f, indent=1)
-        # a copy inside the repo survives the sandbox via the driver's
-        # end-of-round commit (the /tmp copy does not)
-        if _may_write_repo_copy(sf, sf1, prior_record):
-            with open(repo_detail, "w") as f:
-                json.dump(full, f, indent=1)
+        with open(_detail_path(), "w") as f:
+            json.dump(detail, f, indent=1)
     except OSError:
         pass
-
-    print(
-        compact_stdout_line(
-            merged_value, sf, line_timings, floor_s, line_duck, line_sf1,
-            detail_path,
-            floor_1row_s=floor_1row_s,
-            host=host,
-            runs_merged=len(runs) if len(runs) > 1 else None,
-            n_current_run=len(timings),
-        ),
-        flush=True,
-    )
+    print(line, flush=True)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--sf1-only":
-        sf1_main(
-            sys.argv[2],
-            sys.argv[3],
-            float(sys.argv[4]) if len(sys.argv) > 4 else None,
-            sys.argv[5] if len(sys.argv) > 5 else None,
-        )
+    if sys.argv[1:2] == ["--sf1-only"]:
+        sf1_main(sys.argv[2], float(sys.argv[3]), sys.argv[4])
     else:
         main()

@@ -30,7 +30,7 @@ def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     VIEWS into the original bytes (no copy), so this is cheaper than the
     replace-and-diff space count it replaces, which copies every string:
     measured at synthesized sf1 the split form adds ~0.01s over a bare
-    sum(length(text)) scan vs +0.12s for replace (tools/profile_textops).
+    sum(length(text)) scan vs +0.12s for replace.
     Identical value: #tokens == #spaces + 1, empty pieces included on
     both sides.
     """
@@ -728,7 +728,7 @@ def llm_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf via split + array_remove: split(text,' ') produces VIEWS into
     # the original UTF8String bytes (no copy), and size(ws) -
     # size(array_remove(ws, t)) counts exact token equality. Measured
-    # per pass at synthesized sf1 (tools/profile_bm25): 0.43s vs 1.22s
+    # per pass at synthesized sf1: 0.43s vs 1.22s
     # for the padded-substring-count it replaces (whose
     # replace(' ','  ') rewrote every byte of the corpus per pass) and
     # 0.78s for the interpreted higher-order filter form. dl =

@@ -1,48 +1,18 @@
-"""Regression pins for the bench harness's failure-recovery paths —
-round 9 lost an entire 90-minute sf1 section to one infeasible oracle;
-these tests keep the fixes honest. No Spark session needed."""
+"""Regression pins for the bench harness: the measure -> append-only
+log -> pure reducer design and its failure-recovery paths (round 9 lost
+an entire 90-minute sf1 section to one infeasible oracle). No Spark
+session needed."""
 
 import json
 import os
 import sys
+from types import SimpleNamespace
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-
-
-def test_sf1_progress_reconstruction(tmp_path, monkeypatch):
-    p = tmp_path / "progress.jsonl"
-    monkeypatch.setattr(bench, "_sf1_progress_path", lambda: str(p))
-    rows = [
-        {"k": "floor", "q": "floor_s", "v": 0.03},
-        {"k": "duckdb", "q": "q1", "v": {"min": 0.1, "med": 0.1, "n": 5, "spread": 1.1}},
-        {"k": "spark", "q": "q1", "v": {"min": 0.53, "med": 0.6, "n": 5, "spread": 1.2}},
-        {"k": "spark", "q": "q2", "v": {"min": 1.0, "med": 1.0, "n": 5, "spread": 2.5}},
-        {"k": "duckdb_cold", "q": "qc", "v": 6.8},
-        {"k": "error", "q": "duckdb:bad", "v": "boom"},
-    ]
-    with open(p, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    out = bench._sf1_from_progress("section timeout")
-    assert out["partial_from_progress"] is True
-    # floor subtracted before the ratio
-    assert out["ratio_floor_adjusted"]["q1"] == round(0.5 / 0.1, 2)
-    # q2 has no duck pair -> no ratio, but its spread flags it unstable
-    assert "q2" not in out["ratio_floor_adjusted"]
-    assert "q2" in out["unstable"]
-    assert out["cold_duckdb_sec"]["qc"] == 6.8
-    assert out["errors"]["duckdb:bad"] == "boom"
-    assert out["errors"]["section"] == "section timeout"
-
-
-def test_sf1_progress_missing_file_degrades(monkeypatch, tmp_path):
-    monkeypatch.setattr(
-        bench, "_sf1_progress_path", lambda: str(tmp_path / "absent.jsonl")
-    )
-    out = bench._sf1_from_progress("err msg")
-    assert out == {"error": "err msg"}
 
 
 def test_duckdb_budget_interrupts_runaway():
@@ -116,31 +86,6 @@ def test_stdout_line_budget_worst_case():
     )
     assert len(line) < bench.STDOUT_LINE_BUDGET
     json.loads(line)
-
-
-def test_sf1_progress_rejects_stale_run_id(tmp_path, monkeypatch):
-    """ADVICE r9: if the child died before stamping THIS run's id, a
-    leftover progress file from an earlier run must not be published
-    as this run's partial measurements."""
-    p = tmp_path / "progress.jsonl"
-    monkeypatch.setattr(bench, "_sf1_progress_path", lambda: str(p))
-    rows = [
-        {"k": "run_id", "q": "run_id", "v": "oldrun"},
-        {"k": "duckdb", "q": "q1",
-         "v": {"min": 0.1, "med": 0.1, "n": 3, "spread": 1.1}},
-        {"k": "spark", "q": "q1",
-         "v": {"min": 0.5, "med": 0.6, "n": 3, "spread": 1.2}},
-    ]
-    with open(p, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    out = bench._sf1_from_progress("child died early", "newrun")
-    assert out.get("stale_progress_rejected") is True
-    assert "ratio_floor_adjusted" not in out
-    # matching id still reconstructs
-    ok = bench._sf1_from_progress("late death", "oldrun")
-    assert ok["partial_from_progress"] is True
-    assert "q1" in ok["ratio_floor_adjusted"]
 
 
 def test_stdout_line_carries_deadline_skip_count():
@@ -237,28 +182,6 @@ def test_floor_bound_names_trim_to_truncated_ratio_map():
     assert set(s1["floor_bound"]) <= set(s1["ratio"])
 
 
-def test_min_intersect_takes_per_key_minimum_over_common_keys():
-    runs = [
-        {"a": 1.0, "b": 2.0, "c": 9.0},
-        {"a": 0.8, "b": 2.5},
-    ]
-    assert bench._min_intersect(runs) == {"a": 0.8, "b": 2.0}
-    # any missing/empty map disables the merge entirely (a run that
-    # lost its sf1 section must not shrink the intersection silently)
-    assert bench._min_intersect([{"a": 1.0}, None]) == {}
-    assert bench._min_intersect([]) == {}
-
-
-def test_load_prior_runs_rejects_foreign_tree(tmp_path):
-    p = tmp_path / "BENCH_FULL.json"
-    runs = [{"value": 1.0, "queries": {"q": 1.0}}]
-    p.write_text(json.dumps({"tree_id": "abc", "runs": runs}))
-    assert bench._load_prior_runs(str(p), "abc") == runs
-    assert bench._load_prior_runs(str(p), "other") == []
-    assert bench._load_prior_runs(str(p), "unknown") == []
-    assert bench._load_prior_runs(str(tmp_path / "nope.json"), "abc") == []
-
-
 def test_tree_id_is_stable_within_a_tree():
     a, b = bench._tree_id(), bench._tree_id()
     assert a == b
@@ -271,11 +194,11 @@ def test_stdout_metric_names_merged_run_count():
         runs_merged=3,
     )
     rec = json.loads(line)
-    assert "min-intersection of 3 same-tree runs" in rec["metric"]
+    assert "min of 3 same-tree runs" in rec["metric"]
     line1 = bench.compact_stdout_line(
         1.0, 0.1, {"q": 1.0}, 0.02, {"q": 0.5}, None, "/tmp/x.json",
     )
-    assert "min-intersection" not in json.loads(line1)["metric"]
+    assert "same-tree runs" not in json.loads(line1)["metric"]
 
 
 def test_stdout_line_names_merged_intersection_size():
@@ -397,57 +320,329 @@ def test_shuffle_partitions_follow_cpu_knob(monkeypatch):
     assert _local_shuffle_partitions() == "4096"
 
 
+# --- log and reducer -------------------------------------------------------
+
+SF1 = bench._sf1_label("0.1")
+
+
+def _row(run, engine, kind, q, mn=None, spread=1.1, tree="t1", sf="0.1",
+         error=None, cpus=4):
+    r = {"tree_id": tree, "cpus": cpus, "sf": sf, "run_id": run,
+         "engine": engine, "kind": kind, "query": q}
+    if error is not None:
+        r["error"] = error
+    else:
+        r.update({"min": mn, "med": mn, "n": 5, "spread": spread})
+    return r
+
+
+def _meta(run, tree="t1", sf="0.1", cpus=4, **fields):
+    return {"tree_id": tree, "cpus": cpus, "sf": sf, "run_id": run, **fields}
+
+
+def _headline_run(run, t, d, tree="t1", sf="0.1", floor=0.1):
+    """One headline run: a spark and a duckdb row per query, then the
+    section row with the floors."""
+    rows = []
+    for q in t:
+        rows.append(_row(run, "spark", "warm", q, t[q], tree=tree, sf=sf))
+        rows.append(_row(run, "duckdb", "warm", q, d[q], tree=tree, sf=sf))
+    return rows + [_meta(run, tree=tree, sf=sf, floor_s=floor,
+                         floor_1row_s=0.02)]
+
+
+@pytest.fixture
+def log_path(tmp_path, monkeypatch):
+    p = tmp_path / "BENCH_LOG.jsonl"
+    monkeypatch.setattr(bench, "LOG_PATH", str(p))
+    return p
+
+
+def test_stats_is_the_one_window_summary():
+    """_timed and run_duckdb_budgeted share one min/med/n/spread helper."""
+    assert bench._stats([0.2, 0.1, 0.4]) == {
+        "min": 0.1, "med": 0.2, "n": 3, "spread": 4.0,
+    }
+    assert bench._stats([0.3, 0.1])["med"] == 0.2
+    assert bench._timed(lambda: None, 3)["n"] == 3
+
+
+def test_reduce_ignores_foreign_tree_rows():
+    rows = (
+        _headline_run("r1", {"q": 1.0}, {"q": 0.5})
+        + _headline_run("r2", {"q": 0.1}, {"q": 0.05}, tree="other")
+    )
+    detail, line = bench.reduce(rows, "t1", 4, "0.1")
+    assert detail["queries"] == {"q": 1.0}
+    assert detail["runs_merged"] == 1
+    assert json.loads(line)["queries"] == {"q": 1.0}
+    # another core count is another configuration
+    assert bench.reduce(rows, "t1", 8, "0.1")[0]["queries"] == {}
+
+
 def test_min_union_accumulates_coverage_across_runs():
-    """r15 verdict item 2: the sf1 merge is union-with-min so
-    budget-limited runs ACCUMULATE coverage (an intersection merge
-    shrinks to the weakest run's subset)."""
-    runs = [
-        {"a": 1.0, "b": 2.0},
-        {"b": 1.5, "c": 3.0},
-        None,
+    """Per key, the minimum over every same-tree run: budget-limited sf1
+    runs accumulate coverage instead of shrinking to the weakest run."""
+    rows = _headline_run("r1", {"q": 1.0}, {"q": 0.5})
+    rows += [
+        _row("r1", "spark", "warm", "ts_streaks", 1.0, sf=SF1),
+        _row("r1", "duckdb", "warm", "ts_streaks", 0.5, sf=SF1),
+        _row("r1", "spark", "warm", "agg_gini", 2.0, sf=SF1),
     ]
-    assert bench._min_union(runs) == {"a": 1.0, "b": 1.5, "c": 3.0}
-    assert bench._min_union([]) == {}
-    assert bench._min_union([None]) == {}
-
-
-def test_load_prior_record_rejects_foreign_tree(tmp_path):
-    p = tmp_path / "BENCH_FULL.json"
-    rec = {"tree_id": "abc", "sf1": {"queries": {"q": 1.0}}, "runs": []}
-    p.write_text(json.dumps(rec))
-    assert bench._load_prior_record(str(p), "abc") == rec
-    assert bench._load_prior_record(str(p), "other") == {}
-    assert bench._load_prior_record(str(p), "unknown") == {}
+    rows += _headline_run("r2", {"q": 0.8}, {"q": 0.6})
+    rows += [
+        _row("r2", "spark", "warm", "agg_gini", 1.5, sf=SF1),
+        _row("r2", "duckdb", "warm", "agg_gini", 0.5, sf=SF1),
+        _row("r2", "spark", "warm", "geo_knn", 3.0, sf=SF1),
+    ]
+    detail, line = bench.reduce(rows, "t1", 4, "0.1")
+    assert detail["queries"] == {"q": 0.8}
+    assert detail["duckdb"] == {"q": 0.5}
+    s1 = detail["sf1"]
+    assert s1["queries"] == {"ts_streaks": 1.0, "agg_gini": 1.5, "geo_knn": 3.0}
+    assert set(s1["ratio"]) == {"ts_streaks", "agg_gini"}
+    assert s1["runs_merged"] == 2
+    rec = json.loads(line)
+    assert "min of 2 same-tree runs" in rec["metric"]
+    assert rec["n_queries_current_run"] == 1
 
 
 def test_smoke_run_cannot_overwrite_headline():
-    """An sf1-disabled run extends the repo record only at the record's
-    own headline sf; a smoke run at another sf must not replace the
-    headline with smoke-scale numbers."""
-    prior = {"tree_id": "abc", "sf": "0.1", "sf1": {"queries": {"q": 1.0}}}
-    assert bench._may_write_repo_copy("0.1", None, prior)
-    assert not bench._may_write_repo_copy("0.001", None, prior)
-    # no same-tree record: nothing to extend, so no write without sf1
-    assert not bench._may_write_repo_copy("0.1", None, {})
-    # a run that measured sf1 is a full record and always writes
-    assert bench._may_write_repo_copy("0.001", {"queries": {}}, {})
-
-
-def test_stdout_line_carries_recheck_skip_count():
-    """Deadline skips of already-covered pairs are counted separately
-    (they are NOT missing measurements — the accumulated record has a
-    same-tree number for each)."""
-    sf1 = {
-        "ratio_floor_adjusted": {"q": 1.5},
-        "queries": {"q": 3.0},
-        "duckdb": {"q": 2.0},
-        "deadline_skipped": ["spark:fresh_q"],
-        "deadline_skipped_recheck": ["spark:old_q", "duckdb:old_q"],
-    }
-    line = bench.compact_stdout_line(
-        1.0, 1, {"q": 1.0}, 0.02, {"q": 0.5}, sf1, "/tmp/x.json"
+    """An sf0.001 smoke run of the same tree appends rows at its own sf:
+    the sf0.1 reduction is unchanged by them."""
+    base = _headline_run("r1", {"q": 1.0, "p": 2.0}, {"q": 0.5, "p": 1.0})
+    smoke = _headline_run("r2", {"q": 0.1, "p": 0.2}, {"q": 0.05, "p": 0.1},
+                          sf="0.001", floor=0.01)
+    assert bench.reduce(base + smoke, "t1", 4, "0.1") == bench.reduce(
+        base, "t1", 4, "0.1"
     )
-    rec = json.loads(line)
-    assert rec["sf1"]["n_deadline_skipped"] == 1
-    assert rec["sf1"]["skipped_q"] == ["spark:fresh_q"]
-    assert rec["sf1"]["n_skip_recheck"] == 2
+    assert bench.reduce(base + smoke, "t1", 4, "0.001")[0]["queries"] == {
+        "q": 0.1, "p": 0.2,
+    }
+
+
+def test_reduce_unknown_tree_uses_only_this_run():
+    rows = (
+        _headline_run("r1", {"q": 0.5}, {"q": 0.1}, tree="unknown")
+        + _headline_run("r2", {"q": 1.0}, {"q": 0.2}, tree="unknown")
+    )
+    detail, _ = bench.reduce(rows, "unknown", 4, "0.1")
+    assert detail["queries"] == {"q": 1.0}
+    assert detail["run_id"] == "r2"
+    assert detail["runs_merged"] == 1
+
+
+def test_read_log_skips_truncated_last_line(log_path):
+    good = [_row("r1", "spark", "warm", "q", 1.0),
+            _row("r1", "duckdb", "warm", "q", 0.5)]
+    log_path.write_text(
+        "".join(json.dumps(r) + "\n" for r in good)
+        + '{"tree_id": "t1", "cpus": 4, "sf": "0.1", "run_'
+    )
+    assert bench.read_log() == good
+    # the next append starts a fresh line instead of merging into the
+    # cut one
+    bench.RunLog("t1", 4, "0.1", "r2").append({"floor_s": 0.1})
+    rows = bench.read_log()
+    assert len(rows) == 3 and rows[-1]["floor_s"] == 0.1
+
+
+def test_prune_log_drops_other_trees(log_path):
+    rows = [_row("r1", "spark", "warm", "q", 1.0, tree="old"),
+            _row("r2", "spark", "warm", "q", 2.0, tree="t1")]
+    log_path.write_text("".join(json.dumps(r) + "\n" for r in rows) + "{cut")
+    bench._prune_log("t1")
+    assert bench.read_log() == rows[1:]
+    assert log_path.read_text().count("\n") == 1
+
+
+def test_reduce_pair_unstable_only_if_every_row_unstable():
+    rows = _headline_run("r1", {"q": 1.0}, {"q": 0.5}) + [
+        # spark re-measured clean in a later row: stable
+        _row("r1", "spark", "warm", "a", 1.0, spread=2.5, sf=SF1),
+        _row("r2", "spark", "warm", "a", 1.1, spread=1.2, sf=SF1),
+        _row("r1", "duckdb", "warm", "a", 0.5, sf=SF1),
+        # duckdb unstable in every row: the pair is unstable
+        _row("r1", "spark", "warm", "b", 1.0, sf=SF1),
+        _row("r1", "duckdb", "warm", "b", 0.5, spread=3.0, sf=SF1),
+        _row("r2", "duckdb", "warm", "b", 0.4, spread=2.2, sf=SF1),
+    ]
+    assert bench.reduce(rows, "t1", 4, "0.1")[0]["sf1"]["unstable"] == ["b"]
+
+
+def test_reduce_lists_missing_cold_row_as_skipped():
+    """ADVICE: a missing cold measurement must be reported missing, not
+    filed as covered because warm rows of the same query exist."""
+    rows = _headline_run("r1", {"q": 1.0}, {"q": 0.5})
+    for n in bench.SF1_QUERIES:
+        rows.append(_row("r1", "duckdb", "warm", n, 0.5, sf=SF1))
+    for n in bench.SF1_QUERIES + bench.SF1_SPARK_ONLY:
+        rows.append(_row("r1", "spark", "warm", n, 1.0, sf=SF1))
+    for n in bench.SF1_COLD_QUERIES:
+        rows.append(_row("r1", "duckdb", "cold", n, 3.0, sf=SF1))
+    rows.append(_row("r1", "spark", "cold", "scd2_build", 4.0, sf=SF1))
+    assert "graph_pagerank" in bench.SF1_QUERIES + bench.SF1_COLD_QUERIES
+    detail, line = bench.reduce(rows, "t1", 4, "0.1")
+    assert detail["sf1"]["deadline_skipped"] == ["spark_cold:graph_pagerank"]
+    assert detail["sf1"]["cold_sec"] == {"scd2_build": 4.0}
+    assert json.loads(line)["sf1"]["skipped_q"] == ["spark_cold:graph_pagerank"]
+
+
+def test_reduce_child_death_keeps_pairs_and_error():
+    """ADVICE: when the sf1 child dies, the detail record and the stdout
+    line carry the same accumulated pairs and the same error."""
+    rows = _headline_run("r1", {"q": 1.0}, {"q": 0.5}) + [
+        _meta("r1", sf=SF1, floor_s=0.05),
+        _row("r1", "spark", "warm", "ts_streaks", 2.0, sf=SF1),
+        _row("r1", "duckdb", "warm", "ts_streaks", 0.5, sf=SF1),
+        _row("r1", "spark", "warm", "agg_gini", 3.0, sf=SF1),
+        _row("r1", "duckdb", "warm", "agg_gini", 1.0, sf=SF1),
+    ]
+    rows += _headline_run("r2", {"q": 1.1}, {"q": 0.5})
+    rows.append(_meta("r2", sf=SF1, error="sf1 subprocess rc=-9: killed"))
+    detail, line = bench.reduce(rows, "t1", 4, "0.1")
+    s1, l1 = detail["sf1"], json.loads(line)["sf1"]
+    assert s1["error"] == l1["error"] == "sf1 subprocess rc=-9: killed"
+    assert set(s1["ratio_floor_adjusted"]) == set(l1["ratio"]) == {
+        "ts_streaks", "agg_gini",
+    }
+    assert s1["ratio_floor_adjusted"]["ts_streaks"] == round(1.95 / 0.5, 2)
+
+
+class _Clock:
+    """Stands in for the ``time`` module: every measurement advances it
+    by ``step`` seconds."""
+
+    def __init__(self, step=10.0):
+        self.t, self.step = 0.0, step
+
+    def monotonic(self):
+        return self.t
+
+    def perf_counter(self):
+        return self.t
+
+    def tick(self):
+        self.t += self.step
+        return {"min": 1.0, "med": 1.0, "n": 3, "spread": 1.1}
+
+
+class _Chain:
+    """A DataFrame / DuckDB connection double: any call chain ends in a
+    tick of the clock."""
+
+    def __init__(self, clock):
+        self.clock = clock
+
+    def __getattr__(self, name):
+        return self
+
+    def __call__(self, *a, **k):
+        return self
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def save(self):
+        self.clock.tick()
+
+    def fetchall(self):
+        self.clock.tick()
+
+
+def test_sf1_resume_measures_missing_keys_first(log_path, monkeypatch):
+    clock = _Clock()
+    monkeypatch.setattr(bench, "time", clock)
+    monkeypatch.setattr(bench, "ensure_sf1", lambda spark, src: "/sf1")
+    monkeypatch.setattr(bench, "_free_bytes", lambda: 100 * 1024**3)
+    monkeypatch.setattr(bench, "_clean_tmp", lambda **k: None)
+    monkeypatch.setattr(bench, "_duck_connect", lambda: _Chain(clock))
+    monkeypatch.setattr(bench, "_sf1_sql_overrides", lambda: {})
+    monkeypatch.setattr(
+        bench, "run_spark", lambda fn, spark, d, n_runs: clock.tick()
+    )
+    monkeypatch.setattr(
+        bench, "run_duckdb_budgeted",
+        lambda con, sql, n_runs, budget_s: clock.tick(),
+    )
+    names = bench.SF1_QUERIES + bench.SF1_SPARK_ONLY + bench.SF1_COLD_QUERIES
+    registry = {
+        n: SimpleNamespace(fn=lambda s, d: _Chain(clock), oracle="SELECT 1")
+        for n in names
+    }
+    # the DuckDB pass gets half the deadline: it measures k keys, and
+    # the Spark pass completes those k pairs first
+    k = 5
+    deadline = 2 * (bench.SF1_DEADLINE_RESERVE_S + 10 * k - 5)
+    log1 = bench.RunLog("t1", 4, SF1, "r1")
+    bench.bench_sf1(None, registry, "/src", log1, deadline=deadline)
+    first = [r for r in bench.read_log() if r.get("query")]
+    duck1 = [r["query"] for r in first if r["engine"] == "duckdb"]
+    spark1 = [r["query"] for r in first if r["engine"] == "spark"]
+    assert duck1 == bench.SF1_QUERIES[:k]
+    assert spark1[:k] == duck1
+    s1 = bench.reduce(bench.read_log(), "t1", 4, "0.1")[0]["sf1"]
+    assert set(s1["ratio"]) == set(duck1)
+    assert len(s1["deadline_skipped"]) == (
+        len(bench._sf1_expected()) - len(first)
+    )
+
+    missing = {
+        (e, kind, q) for e, kind, q in bench._sf1_expected()
+        if (e, kind, q) not in {(r["engine"], r["kind"], r["query"])
+                                for r in first}
+    }
+    clock.t = 0.0
+    bench.bench_sf1(None, registry, "/src", bench.RunLog("t1", 4, SF1, "r2"))
+    second = [r for r in bench.read_log() if r.get("run_id") == "r2"
+              and r.get("query")]
+    for engine in ("duckdb", "spark"):
+        mine = [(r["engine"], r["kind"], r["query"]) for r in second
+                if r["engine"] == engine]
+        n_missing = sum(1 for m in missing if m[0] == engine)
+        assert set(mine[:n_missing]) == {m for m in missing if m[0] == engine}
+        assert len(mine) == len(set(mine))  # one row per key per run
+    s1 = bench.reduce(bench.read_log(), "t1", 4, "0.1")[0]["sf1"]
+    assert "deadline_skipped" not in s1
+    assert set(s1["ratio"]) | set(s1["twin_ratio"]) == set(bench.SF1_QUERIES)
+    assert s1["runs_merged"] == 2
+
+
+def test_sf1_insufficient_disk_is_a_section_row(log_path, monkeypatch):
+    monkeypatch.setattr(bench, "ensure_sf1", lambda spark, src: "/sf1")
+    monkeypatch.setattr(bench, "_free_bytes", lambda: 20 * 1024**3)
+    monkeypatch.setattr(bench, "_clean_tmp", lambda **k: None)
+    log = bench.RunLog("t1", 4, SF1, "r1")
+    bench.bench_sf1(None, {}, "/src", log)
+    _, line = bench.reduce(bench.read_log(), "t1", 4, "0.1")
+    assert json.loads(line)["sf1"]["skipped"] == "insufficient_disk"
+
+
+def test_headline_passes_isolate_failures(log_path, monkeypatch):
+    """A raising callable and a failing oracle each become one error row;
+    the other queries are still timed and the line still prints."""
+    monkeypatch.setattr(bench, "HEADLINE", ["bad_q", "good_q"])
+    clock = _Clock(step=0.0)
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("boom")
+
+    registry = {
+        "bad_q": SimpleNamespace(fn=boom, oracle="SELECT * FROM no_such_table"),
+        "good_q": SimpleNamespace(
+            fn=lambda s, d: _Chain(clock), oracle="SELECT count(*) FROM region"
+        ),
+    }
+    sf_dir = "/root/testdata/sf0.001"
+    log = bench.RunLog("t1", 4, "0.001", "r1")
+    spark_mins = bench.headline_spark(None, registry, sf_dir, log)
+    assert set(spark_mins) == {"good_q"}
+    assert bench.headline_duckdb(None, registry, sf_dir, log, spark_mins) == {}
+    detail, line = bench.reduce(bench.read_log(), "t1", 4, "0.001")
+    assert set(detail["errors"]) == {"spark:bad_q", "duckdb:bad_q"}
+    assert "boom" in detail["errors"]["spark:bad_q"]
+    assert set(detail["queries"]) == set(detail["duckdb"]) == {"good_q"}
+    assert set(json.loads(line)["queries"]) == {"good_q"}

@@ -1,38 +1,32 @@
-"""Adjudicate bench reproducibility: compare two BENCH detail records
-(the full JSON written by bench.py) per query and report whether the two
-runs agree within a tolerance (r5 verdict #2: two consecutive full runs
-must agree within +-30% per query or the ratios are environment noise,
-not measurements).
+"""Adjudicate bench reproducibility: reduce two runs of the bench log
+separately and compare them per query, reporting whether they agree
+within a tolerance (r5 verdict #2: two consecutive full runs must agree
+within +-30% per query or the ratios are environment noise, not
+measurements).
 
-Usage: python tools/bench_agreement.py run1.json run2.json [tol]
+Usage: python tools/bench_agreement.py RUN_ID_A RUN_ID_B [tol]
 
-Compares the sf0.1 per-query Spark minima and, when both records carry a
-completed sf1 section, the sf1 minima for both engines. Queries flagged
-``unstable`` (spread > 2x) in either run are reported separately — their
-disagreement is already declared by the record itself.
+Compares the sf0.1 per-query Spark minima and, when both runs carry
+sf1 rows, the sf1 minima for both engines. Queries flagged ``unstable``
+(spread > 2x) in either run are reported separately — their
+disagreement is already declared by the record itself. Without
+arguments it lists the run ids in the log.
 """
 
 from __future__ import annotations
 
-import json
+import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def _section(rec: dict, *path):
-    cur = rec
-    for p in path:
-        if not isinstance(cur, dict) or p not in cur:
-            return {}
-        cur = cur[p]
-    return cur if isinstance(cur, dict) else {}
+import bench  # noqa: E402
 
 
 def compare(a: dict, b: dict, label: str, tol: float, unstable: set):
     rows = []
     for name in sorted(set(a) & set(b)):
         x, y = a[name], b[name]
-        if not (isinstance(x, (int, float)) and isinstance(y, (int, float))):
-            continue
         if min(x, y) <= 0:
             continue
         rel = max(x, y) / min(x, y) - 1.0
@@ -47,26 +41,30 @@ def compare(a: dict, b: dict, label: str, tol: float, unstable: set):
     return len(bad)
 
 
+def run_record(rows: list[dict], run_id: str) -> dict:
+    """The detail record of one run's rows alone."""
+    mine = [r for r in rows if r.get("run_id") == run_id]
+    key = bench.last_run(mine)
+    if key is None:
+        sys.exit(f"run {run_id} has no headline rows in {bench.LOG_PATH}")
+    return bench.reduce(mine, *key)[0]
+
+
 def main() -> int:
-    p1, p2 = sys.argv[1], sys.argv[2]
+    rows = bench.read_log()
+    if len(sys.argv) < 3:
+        for run_id in dict.fromkeys(r.get("run_id") for r in rows):
+            print(run_id)
+        return 0
     tol = float(sys.argv[3]) if len(sys.argv) > 3 else 0.30
-    r1 = json.load(open(p1))
-    r2 = json.load(open(p2))
-    unstable = set(_section(r1, "sf1").get("unstable", []) or []) | set(
-        _section(r2, "sf1").get("unstable", []) or []
-    )
-    n_bad = compare(
-        r1.get("queries", {}), r2.get("queries", {}),
-        "sf0.1 spark (min)", tol, set(),
-    )
-    n_bad += compare(
-        _section(r1, "sf1", "queries"), _section(r2, "sf1", "queries"),
-        "sf1 spark (min)", tol, unstable,
-    )
-    n_bad += compare(
-        _section(r1, "sf1", "duckdb"), _section(r2, "sf1", "duckdb"),
-        "sf1 duckdb (min)", tol, unstable,
-    )
+    r1, r2 = (run_record(rows, run_id) for run_id in sys.argv[1:3])
+    s1, s2 = r1.get("sf1") or {}, r2.get("sf1") or {}
+    unstable = set(s1.get("unstable", [])) | set(s2.get("unstable", []))
+    n_bad = compare(r1["queries"], r2["queries"], "sf0.1 spark (min)", tol, set())
+    n_bad += compare(s1.get("queries", {}), s2.get("queries", {}),
+                     "sf1 spark (min)", tol, unstable)
+    n_bad += compare(s1.get("duckdb", {}), s2.get("duckdb", {}),
+                     "sf1 duckdb (min)", tol, unstable)
     print(f"\nverdict: {'AGREE' if n_bad == 0 else f'{n_bad} DISAGREEMENTS'}"
           f" at tol={tol:.0%} (unstable-declared excluded: {sorted(unstable)})")
     return 0 if n_bad == 0 else 1

@@ -1,23 +1,24 @@
-"""Print the adjudicated bench weak set from a BENCH_FULL record.
+"""Print the adjudicated bench weak set from the bench log.
 
 The per-round grading question is always the same: which pairs are
 >2x floor-adjusted, NOT floor-bound, and what does the record already
 say about them (annotation / unstable flag / twin exclusion)? This
-reads the committed detail file and answers it in one table, for both
-the merged cross-run maps (when present) and the current run.
+reduces the log (``bench.reduce``) for the newest run's tree, core
+count and sf, and answers it in one table per section.
 
-    python tools/weak_set.py [BENCH_FULL.json]
+    python tools/weak_set.py [BENCH_LOG.jsonl]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+import bench  # noqa: E402
+
 # the in-record floor-band policy — ONE definition, owned by bench.py
 # (r14 advice: a local copy could drift from the committed record's
 # floor_bound tags)
@@ -60,33 +61,24 @@ def report(label, queries, duck, floor_s, annotations, unstable):
 
 
 def main() -> None:
-    path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_FULL.json"
-    with open(path) as f:
-        d = json.load(f)
-    floor = d.get("spark_fixed_overhead_sec", 0.0)
+    path = sys.argv[1] if len(sys.argv) > 1 else bench.LOG_PATH
+    rows = bench.read_log(path)
+    key = bench.last_run(rows)
+    if key is None:
+        sys.exit(f"no headline rows in {path}")
+    d, _ = bench.reduce(rows, *key)
+    floor = d["spark_fixed_overhead_sec"]
     s1 = d.get("sf1") or {}
     ann = s1.get("annotations") or {}
     report(
-        "sf0.1 (current run)", d.get("queries", {}), d.get("duckdb", {}),
+        f"sf{d['sf']} ({d['runs_merged']} runs)", d["queries"], d["duckdb"],
         floor, ann, [],
     )
     if s1.get("queries"):
         report(
-            "sf1 (current run)", s1["queries"], s1.get("duckdb", {}),
-            floor, ann, s1.get("unstable"),
-        )
-    m = d.get("merged") or {}
-    if m.get("queries"):
-        report(
-            f"sf0.1 (merged, {d.get('runs_merged')} runs)",
-            m["queries"], m.get("duckdb", {}), floor, ann, [],
-        )
-    ms1 = m.get("sf1") or {}
-    if ms1 and ms1.get("queries"):
-        report(
-            f"sf1 (merged, {d.get('runs_merged')} runs)",
-            ms1["queries"], ms1.get("duckdb", {}), floor, ann,
-            ms1.get("unstable"),
+            f"sf1 ({s1['runs_merged']} runs)", s1["queries"],
+            s1.get("duckdb", {}), s1.get("floor_s", floor), ann,
+            s1.get("unstable"),
         )
 
 
