@@ -2,8 +2,10 @@
 
 All queries go through :func:`table` so that
 
-* runtime session defaults are always applied (the correctness driver
-  passes its own SparkSession);
+* a session gets the runtime defaults of :mod:`.session` before its
+  first read (the correctness driver passes its own SparkSession).
+  Each session is configured once, so a conf set after that with
+  ``spark.conf.set`` sticks;
 * the ``events`` nanosecond-timestamp quirk is handled in exactly one
   place;
 * column pruning / predicate pushdown reach the parquet scan — loaders
@@ -69,7 +71,12 @@ def _file_schema(spark: SparkSession, path: str) -> T.StructType:
     """The parquet schema Spark infers for ``path``, memoized in
     ``_SCHEMAS``. The ``FileStatus`` comes from the path's own Hadoop
     ``FileSystem``: about a millisecond, and it works for any URI the
-    reader accepts (for a directory, the directory's own status)."""
+    reader accepts (for a directory, the directory's own status).
+
+    Every read passes through here, so this is where a session built
+    elsewhere gets its defaults: before inference, because ``events``
+    must be inferred with ``nanosAsLong`` set."""
+    ensure_session_defaults(spark)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(
         jpath
@@ -109,7 +116,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     inference. An in-place rewrite that keeps length and mtime is not
     detected, as with Spark's file-status cache.
     """
-    ensure_session_defaults(spark)
     df = _read(spark, _path(sf_dir, name))
     return _micros_ts(df) if name == "events" else df
 
@@ -148,7 +154,6 @@ def table_validated(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     v1.17.0 fix for optional/null tolerance on the last page maps to
     marking fields nullable here.
     """
-    ensure_session_defaults(spark)
     df = _read(spark, _path(sf_dir, name))
     expected = EXPECTED_SCHEMAS.get(name)
     if expected is not None:

@@ -124,20 +124,36 @@ def spec(
 # clause (b); the last five clause (c) fill rows (llm_shard,
 # llm_sim_ann_ivf, llm_sim_pairs, llm_winnowing, mm_resize_stub) give
 # up their seats so the window stays at 50.
+# ONCE-PER-SESSION DEFAULTS CHANGE, clause (b): the six upsert stream
+# callables (stream_mv_refresh, stream_mv_apply, stream_drift,
+# stream_drift_apply, stream_topk, stream_topk_apply) no longer apply
+# the session defaults themselves; a foreign session gets them on the
+# catalog read of their landing helper. Those six seat first in clause
+# (b); the last six clause (c) fill rows (llm_dedup_fuzzy,
+# llm_dedup_ngram, llm_dedup_prefixfilter, llm_eval_ngram_recall,
+# llm_quality_repetition, llm_sample_reservoir) give up their seats so
+# the window stays at 50.
 PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
-    # -- 3a. job-free-read implementation changes (clause b) --
+    # -- 3a. once-per-session defaults (clause b) --
+    "stream_mv_refresh",
+    "stream_mv_apply",
+    "stream_drift",
+    "stream_drift_apply",
+    "stream_topk",
+    "stream_topk_apply",
+    # -- 3b. job-free-read implementation changes (clause b) --
     "llm_embed_rp",
     "stream_stateful",
     "stream_dedup",
     "stream_stream_join",
     "stream_static_join",
-    # -- 3b. graph-superstep implementation changes (clause b) --
+    # -- 3c. graph-superstep implementation changes (clause b) --
     "graph_label_propagation",
     "graph_bfs_levels",
     "graph_pagerank",
-    # -- 3c. round-15 implementation changes (clause b) --
+    # -- 3d. round-15 implementation changes (clause b) --
     "llm_tfidf",
     "llm_dedup_containment",
     "graph_degree_hist",
@@ -163,7 +179,7 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "validate_expectations",
     "win_pattern_match",
     "win_sessionize",
-    # -- 4b. r10-evidence cohort (clause c fill, 17 of 36, alphabetical) --
+    # -- 4b. r10-evidence cohort (clause c fill, 11 of 36, alphabetical) --
     "agg_collect",
     "agg_gini",
     "agg_mode",
@@ -175,12 +191,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "join_bucketed",
     "join_range",
     "llm_clean_pipeline",
-    "llm_dedup_fuzzy",
-    "llm_dedup_ngram",
-    "llm_dedup_prefixfilter",
-    "llm_eval_ngram_recall",
-    "llm_quality_repetition",
-    "llm_sample_reservoir",
 )
 
 

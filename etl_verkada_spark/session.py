@@ -5,9 +5,11 @@ Two layers:
 * builder-time confs — only for sessions this package creates itself
   (tests, bench.py). The correctness driver passes its *own* session into
   ``queries()`` callables, so nothing correctness-critical may live here.
-* runtime (SQLConf) defaults — settable on ANY session at any time via
-  :func:`ensure_session_defaults`; the catalog applies them before every
-  read so driver-provided sessions behave identically to ours.
+* runtime (SQLConf) defaults — settable on ANY session at any time.
+  Each session is configured exactly once: by :func:`get_spark` for
+  the sessions it builds, or on the first catalog read for a session
+  someone else built (the driver's). A conf a caller sets afterwards
+  with ``spark.conf.set`` sticks.
 
 Scale notes (100 TB design point, local[32] test point):
 
@@ -15,12 +17,12 @@ Scale notes (100 TB design point, local[32] test point):
   partition coalescing replace hand-tuned shuffle partition counts on a
   real cluster (SURVEY.md §4 O1–O3).
 * ``spark.sql.shuffle.partitions`` matches the local core count: one
-  task wave per shuffle stage. An ABA-ordered sf1 matrix (r5) measured
-  64 vs 32 as 0.37->0.28s on agg_groupby, 0.73->0.59s on
-  llm_text_stats, neutral on join_large/dedup_lastwins — the extra
-  wave is pure scheduling overhead at this data size. On a
-  1000-executor cluster set ~2-3x total cores and let AQE coalesce —
-  the operators themselves never depend on the value.
+  task wave per shuffle stage. An ABA-ordered sf1 matrix measured 64 vs
+  32 as 0.37->0.28s on agg_groupby, 0.73->0.59s on llm_text_stats,
+  neutral on join_large/dedup_lastwins — the extra wave is pure
+  scheduling overhead at this data size. On a 1000-executor cluster
+  set ~2-3x total cores and let AQE coalesce — the operators
+  themselves never depend on the value.
 * The session timezone is pinned to UTC so TIMESTAMP_LTZ values coincide
   with the naive timestamps DuckDB (the correctness oracle) produces.
 * ``nanosAsLong`` is required because the driver's ``events`` table is
@@ -32,24 +34,9 @@ Scale notes (100 TB design point, local[32] test point):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
-
-def _local_shuffle_partitions() -> str:
-    """One task wave per shuffle stage at the *actual* local core count.
-
-    The bench driver re-runs at lower ``SPARK_GRAFT_CPUS`` to measure
-    scaling; a constant (the pre-r15 hard-coded 32) forces 4 waves per
-    shuffle on an 8-core run, polluting that measurement with pure
-    scheduling overhead. ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides
-    for cluster deployments (SCALE.md: ~2-4x total executor cores and
-    let AQE coalesce).
-    """
-    explicit = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if explicit:
-        return explicit
-    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
-
 
 #: Confs that are runtime-settable (plain SQLConf) and required for
 #: correct + fast behavior regardless of who built the session.
@@ -75,43 +62,43 @@ RUNTIME_DEFAULTS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "67108864",
 }
 
+#: Sessions that already carry the runtime defaults, held weakly so a
+#: stopped session goes with it (as ``catalog._SCHEMAS`` does).
+_CONFIGURED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime defaults to an externally provided session.
+    """Apply the runtime defaults once per session.
 
-    Safe to call repeatedly; silently skips confs the session refuses
-    (e.g. static confs on some builds).
+    A session already configured returns at once, so a conf the caller
+    set after that (``spark.conf.set``) is never overwritten. Confs the
+    session refuses (e.g. static confs on some builds) are skipped.
 
-    ``spark.sql.shuffle.partitions`` is computed at call time, not
-    frozen in RUNTIME_DEFAULTS: one wave per shuffle stage at the
-    *current* ``SPARK_GRAFT_CPUS`` (the module docstring has the
-    measured 64-vs-32 matrix at 32 cores). Derived, not constant, so
-    the driver's lower-core bench runs keep one wave too; a cluster
-    deployment overrides via ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
-    (SCALE.md: ~2-4x total executor cores, AQE coalesces).
-
-    The derivation applies ONLY to local[*] masters (r15 ADVICE): on a
-    small-driver/large-cluster session the driver host's cpu_count says
-    nothing about executor parallelism and silently capping shuffle
-    partitions at it would be a regression — there the explicit
-    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` env still applies, and absent
-    that the cluster's own configuration is left untouched.
+    On a local[*] master ``spark.sql.shuffle.partitions`` is one wave
+    per shuffle stage at ``SPARK_GRAFT_CPUS`` (default: the host's CPU
+    count; the module docstring has the measured 64-vs-32 matrix at 32
+    cores): derived, not constant, so lower-core bench runs keep one
+    wave too. On any other master the driver host's cpu_count says
+    nothing about executor parallelism, so the cluster's own setting is
+    left untouched.
     """
+    if spark in _CONFIGURED:
+        return spark
     defaults = dict(RUNTIME_DEFAULTS)
-    explicit = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     try:
         master = spark.conf.get("spark.master", "")
     except Exception:  # pragma: no cover - Connect sessions hide it
         master = ""
-    if explicit:
-        defaults["spark.sql.shuffle.partitions"] = explicit
-    elif master.startswith("local"):
-        defaults["spark.sql.shuffle.partitions"] = _local_shuffle_partitions()
+    if master.startswith("local"):
+        defaults["spark.sql.shuffle.partitions"] = os.environ.get(
+            "SPARK_GRAFT_CPUS"
+        ) or str(os.cpu_count() or 8)
     for key, value in defaults.items():
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - conf rejected; keep going
             pass
+    _CONFIGURED.add(spark)
     return spark
 
 
@@ -129,6 +116,4 @@ def get_spark(app_name: str = "etl-verkada-spark") -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )
-    for key, value in RUNTIME_DEFAULTS.items():
-        builder = builder.config(key, value)
     return ensure_session_defaults(builder.getOrCreate())

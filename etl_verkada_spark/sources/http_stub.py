@@ -32,6 +32,14 @@ class StubStats:
             self.in_flight -= 1
 
 
+class _Server(ThreadingHTTPServer):
+    # A listen backlog with room for every concurrent connect a test
+    # makes (sink partitions x max_in_flight). At the default of 5 the
+    # kernel drops SYNs it cannot queue, and each drop costs the client
+    # a retransmit of a second or more.
+    request_queue_size = 64
+
+
 def make_server(items: list[dict], cursor_page_size: int = 7,
                 repeat_last_token: bool = False,
                 api_key: str | None = None,
@@ -157,7 +165,7 @@ def make_server(items: list[dict], cursor_page_size: int = 7,
             finally:
                 stats.leave()
 
-    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    server = _Server(("127.0.0.1", 0), Handler)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server, server.server_address[1], stats

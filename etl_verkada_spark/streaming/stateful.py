@@ -49,7 +49,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..catalog import _file_schema, _micros_ts, _path
 from ..operators.aggregates import unscale
 from ..registry import spec
-from ..session import ensure_session_defaults
 
 OUT_SCHEMA = "user_id long, n_events long, sum_value_c long"
 STATE_SCHEMA = "n long, sv long"
@@ -59,7 +58,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table: the file source's schema and
     the nanos->micros conversion are catalog.table's, so the stream
     runs no inference job once the session has read the events file."""
-    ensure_session_defaults(spark)
     stream = (
         spark.readStream.schema(_file_schema(spark, _path(sf_dir, "events")))
         .option("pathGlobFilter", "events.parquet")

@@ -434,9 +434,6 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..operators.aggregates import unscale
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     land = _ensure_mv_landing(spark, sf_dir)
     state_dir = land + "_state"
     shutil.rmtree(state_dir, ignore_errors=True)
@@ -495,9 +492,6 @@ def stream_mv_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.aggregates import scaled_long, unscale
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     land = _ensure_mv_landing(spark, sf_dir)
     groups = _chunk_groups(land, MV_CHUNKS)
     prior = [f for g in groups[: MV_CHUNKS - 1] for f in g]
@@ -638,9 +632,6 @@ def stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..operators.quality import drift_tvd
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     # landing is the "drops arriving" fixture (see stream_mv_refresh):
     # build once per sf_dir, reuse across calls; the fold is fresh.
     land = _ensure_drift_landing(spark, sf_dir)
@@ -701,9 +692,6 @@ def stream_drift_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.quality import drift_pairs, drift_tvd
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     # same landing fixture as stream_drift (build once per sf_dir)
     land = _ensure_drift_landing(spark, sf_dir)
     groups = _chunk_groups(land, DRIFT_CHUNKS)
@@ -853,9 +841,6 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..operators.aggregates import unscale
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     land = _ensure_topk_landing(spark, sf_dir)
     state_dir = land + "_state"
     shutil.rmtree(state_dir, ignore_errors=True)
@@ -926,9 +911,6 @@ def stream_topk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators.aggregates import scaled_long, unscale
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     # same landing fixture as stream_topk (build once per sf_dir)
     land = _ensure_topk_landing(spark, sf_dir)
     groups = _chunk_groups(land, TOPK_CHUNKS)

@@ -308,16 +308,23 @@ def test_stream_topk_twin_equals_one_shot_oracle():
 
 def test_shuffle_partitions_follow_cpu_knob(monkeypatch):
     """The driver benches at lower SPARK_GRAFT_CPUS to measure scaling;
-    shuffle partitions must track the knob (one wave per stage) rather
-    than stay pinned at the 32 of the primary bench host (r15)."""
-    from etl_verkada_spark.session import _local_shuffle_partitions
+    on a local master shuffle partitions must track the knob (one wave
+    per stage) rather than stay pinned at the 32 of the primary bench
+    host. A cluster master keeps its own setting."""
+    from etl_verkada_spark.session import ensure_session_defaults
+
+    class Conf(dict):
+        set = dict.__setitem__
+
+    class Session:
+        def __init__(self, master):
+            self.conf = Conf({"spark.master": master})
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-    assert _local_shuffle_partitions() == "8"
-    # cluster override wins (SCALE.md: ~2-4x total executor cores)
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4096")
-    assert _local_shuffle_partitions() == "4096"
+    local = ensure_session_defaults(Session("local[*]"))
+    assert local.conf["spark.sql.shuffle.partitions"] == "8"
+    cluster = ensure_session_defaults(Session("yarn"))
+    assert "spark.sql.shuffle.partitions" not in cluster.conf
 
 
 # --- log and reducer -------------------------------------------------------

@@ -1278,11 +1278,10 @@ def test_runtime_bloom_filter_injects_on_shuffle_join(spark):
     }
     saved = {k: spark.conf.get(k) for k in confs}
     try:
-        o = table(spark, SF_SMALL, "orders")
-        l = table(spark, SF_SMALL, "lineitem")
-        # re-apply AFTER table() (it re-applies session defaults)
         for k, v in confs.items():
             spark.conf.set(k, v)
+        o = table(spark, SF_SMALL, "orders")
+        l = table(spark, SF_SMALL, "lineitem")
         j = l.join(
             o.filter(F.col("o_totalprice") > 500000.0),
             l.l_orderkey == o.o_orderkey,
@@ -1354,24 +1353,32 @@ def test_streaks_match_pandas_recount(spark):
 
 def test_label_propagation_deterministic_and_sane(spark):
     """LPA's packed-vote tie-break must make the labeling a pure
-    function of the graph: repartitioning the input cannot change any
+    function of the graph: neither the shuffle partition count (1 or 7
+    against the session default) nor turning AQE off can change any
     community assignment, and every community id is a real node id."""
     from etl_verkada_spark.operators.graph import graph_label_propagation
 
-    a = {
-        (r["node_type"], r["node_key"]): r["community"]
-        for r in graph_label_propagation(spark, SF_SMALL).collect()
-    }
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        b = {
+    def labels():
+        return {
             (r["node_type"], r["node_key"]): r["community"]
             for r in graph_label_propagation(spark, SF_SMALL).collect()
         }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-    assert a == b
+
+    a = labels()
+    for confs in (
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.shuffle.partitions": "7"},
+        {"spark.sql.adaptive.enabled": "false"},
+    ):
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            assert labels() == a, confs
+            assert all(spark.conf.get(k) == v for k, v in confs.items())
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
     nodes = {
         2 * k if t == "part" else 2 * k + 1 for (t, k) in a
     }
@@ -1485,9 +1492,7 @@ def test_graph_iteratives_job_bound(spark, name):
 def test_lpa_edge_cache_follows_shuffle_partitions(spark, monkeypatch):
     """The LPA edge cache has exactly the session's
     spark.sql.shuffle.partitions partitions (one task wave per
-    superstep), not a fixed count. The conf is set through
-    SPARK_GRAFT_SHUFFLE_PARTITIONS because every catalog read
-    re-applies the session defaults."""
+    superstep), not a fixed count."""
     from etl_verkada_spark.operators import graph
 
     seen = []
@@ -1498,9 +1503,9 @@ def test_lpa_edge_cache_follows_shuffle_partitions(spark, monkeypatch):
         return superstep(edges, labels)
 
     monkeypatch.setattr(graph, "_lpa_superstep", spy)
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "5")
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
         assert graph.graph_label_propagation(spark, SF_SMALL).count() > 0
         assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
     finally:
@@ -2633,6 +2638,40 @@ def test_events_nanos_ts_read_as_micros(spark, tmp_path):
         assert sorted(r["ts"] for r in df.collect()) == ts
     stream = events_stream(spark, str(tmp_path))
     assert dict(stream.dtypes)["ts"] == "timestamp_ntz"
+
+
+def test_conf_set_after_first_read_survives_later_reads(spark):
+    """A session is configured once: a conf set after get_spark and
+    after a first catalog read still holds after later reads, of the
+    same table or another. A session built elsewhere (own SQLConf,
+    shared context) gets the defaults on its first read, before the
+    events schema is inferred."""
+    from etl_verkada_spark.catalog import table
+
+    confs = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    table(spark, SF_SMALL, "orders")
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        table(spark, SF_SMALL, "orders")
+        table(spark, SF_SMALL, "lineitem")
+        assert {k: spark.conf.get(k) for k in confs} == confs
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    foreign = spark.newSession()
+    foreign.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    foreign.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    events = table(foreign, SF_SMALL, "events")
+    assert foreign.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert foreign.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert dict(events.dtypes)["ts"] == "timestamp_ntz"
+    assert events.limit(1).count() == 1
 
 
 #: Spark jobs a registered callable may run while it BUILDS, at
