@@ -13,7 +13,8 @@ helpers below expose that per registered query, as both a
 Caveat: a handful of registered callables perform side effects while
 *building* the plan (landing files, starting a streaming query), so
 ``schemas()`` resolves lazily per name rather than eagerly snapshotting
-all 114 — a consumer asks for the queries it will actually wire up.
+every registered query — a consumer asks for the queries it will
+actually wire up.
 """
 
 from __future__ import annotations

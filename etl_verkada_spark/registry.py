@@ -15,9 +15,10 @@ Conventions (BASELINE.md / driver contract):
   banding, streaming state, pandas-UDF ANN) -> driver runs the weaker
   rows-only check;
 * driver surfaces must be FLAT: array/struct cells are unhashable in
-  the driver's canonicalizer (r4's flagship_features crash) — emit
-  ``to_json(...)`` / ``array_join(...)`` string columns instead, with
-  the oracle producing the identical serialization.
+  the driver's canonicalizer (an array column of flagship_features
+  crashed it) — emit ``to_json(...)`` / ``array_join(...)`` string
+  columns instead, with the oracle producing the identical
+  serialization.
 * EAGER-CONSTRUCTION contract: building a callable runs no Spark job
   once the session has read its tables (``catalog.table`` memoizes each
   file's inferred schema), except for the named allow-list
@@ -67,93 +68,35 @@ def spec(
 
 
 # The correctness driver hard-checks only the FIRST 50 insertion-order
-# entries of build_registry() (verified round 1: CORRECTNESS_r01.json ==
-# first 50 names exactly).
+# entries of build_registry(); PRIORITY_ORDER names those 50.
 #
-# ROTATION POLICY (stable since r5; each round's window recorded in that
-# round's CORRECTNESS_r0N.json): slot 1 is the flagship; then (a) queries
-# that have never had a driver row (this round's additions), (b) queries
-# whose IMPLEMENTATION or oracle changed this round (comment-only edits
-# don't count), (c) fill with the oldest-evidence rows. Past slot 50:
-# driver-green from an earlier round with unchanged code, plus full
-# parity coverage via tools/parity_check.py.
-#
-# ROUND-15 WINDOW. CORRECTNESS_r14 went 50/50 green; cumulatively all
-# 228 registered queries carry a hash-green driver row. Evidence state
-# entering r15 (newest hash-green driver round -> count, computed from
-# CORRECTNESS_r01..r14): r9 -> 16, r10 -> 36, r11 -> 33, r12 -> 46,
-# r13 -> 47, r14 -> 50; never -> 0. Per the policy:
-#   1. flagship;
-#   2. clause (a) — empty (nothing unchecked);
-#   3. clause (b) — IMPLEMENTATION or oracle changed in round 15 (11;
-#      the r14 policy note undercounted its changes at 7 — llm_tfidf
-#      landed after that window was pinned, so it seats FIRST here per
-#      the r14 verdict item 4): llm_tfidf (one-exchange rewrite r14 +
-#      r15 size-gated df broadcast), llm_dedup_containment (doc-scale
-#      checkpoint, window df, one tokenize), graph_bfs_levels /
-#      graph_pagerank / graph_degree_hist / graph_label_propagation
-#      (shared _edges build: distinct-before-direction-fan-out),
-#      llm_boilerplate_coverage (occurrence-table checkpoint),
-#      llm_lexical_diversity (repartition-by-doc pre-explode, one
-#      exchange), agg_weighted_median (empty-input guard),
-#      dq_referential (one-scan-per-child chained-left-join audit),
-#      agg_approx (late-r15: the exact judge no longer shares a mixed
-#      distinct aggregate with the sketch — the per-distinct-key HLL
-#      partial buffer was 413 longs/key through the exchange; sketch
-#      now builds over the deduped keys, bit-identical estimate,
-#      1.96 -> 0.85 s isolated);
-#   4. clause (c) fill (38 slots): the whole remaining r9-evidence
-#      cohort (16), then the first 22 of the 36 r10-evidence rows,
-#      alphabetical (pivot displaced by the agg_approx seat).
-# R16 QUEUE (clause c fill order, unless displaced by r16 changes):
-# the remaining r10-evidence rows (pivot, project_struct_nested,
-# scan_partition_pruned, skyline_pareto, stream_session,
-# stream_stateful, stream_stream_join, stream_tumble, ts_autocorr,
-# ts_mad_anomaly, ts_ohlc, udf_pandas), then the r11 cohort (33 rows)
-# alphabetical.
-# GRAPH-SUPERSTEP CHANGE (after round 16), clause (b): the edge caches
-# of graph_label_propagation and graph_pagerank follow
-# spark.sql.shuffle.partitions, LPA computes its first round in closed
-# form, and graph_bfs_levels builds its source and level 1 without a
-# join. Those three move to the front of the clause (b) block; the
-# other round-15 rows keep their seats.
-# JOB-FREE READS CHANGE, clause (b): llm_embed_rp builds its projection
-# as SQL text, and events_stream (stream_stateful, stream_dedup,
-# stream_stream_join, stream_static_join) takes the catalog's memoized
-# schema and shared nanos->micros conversion. Those five seat first in
-# clause (b); the last five clause (c) fill rows (llm_shard,
-# llm_sim_ann_ivf, llm_sim_pairs, llm_winnowing, mm_resize_stub) give
-# up their seats so the window stays at 50.
-# ONCE-PER-SESSION DEFAULTS CHANGE, clause (b): the six upsert stream
-# callables (stream_mv_refresh, stream_mv_apply, stream_drift,
-# stream_drift_apply, stream_topk, stream_topk_apply) no longer apply
-# the session defaults themselves; a foreign session gets them on the
-# catalog read of their landing helper. Those six seat first in clause
-# (b); the last six clause (c) fill rows (llm_dedup_fuzzy,
-# llm_dedup_ngram, llm_dedup_prefixfilter, llm_eval_ngram_recall,
-# llm_quality_repetition, llm_sample_reservoir) give up their seats so
-# the window stays at 50.
+# Rotation rule: slot 1 is the flagship; then (a) queries that have
+# never had a driver row; then (b) queries whose implementation or
+# oracle changed since their last driver row (comment-only edits don't
+# count), the most recent change first; then (c) a fill of the queries
+# whose newest hash-green driver row is oldest, alphabetical within one
+# evidence cohort. Each name a change seats in (b) displaces the last
+# (c) row, so the window stays at 50. A query past slot 50 has a
+# driver-green row for its current code, plus the parity coverage of
+# tools/parity_check.py over all registered queries.
 PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
-    # -- 3a. once-per-session defaults (clause b) --
+    # (b) implementation changed, most recent first
     "stream_mv_refresh",
     "stream_mv_apply",
     "stream_drift",
     "stream_drift_apply",
     "stream_topk",
     "stream_topk_apply",
-    # -- 3b. job-free-read implementation changes (clause b) --
     "llm_embed_rp",
     "stream_stateful",
     "stream_dedup",
     "stream_stream_join",
     "stream_static_join",
-    # -- 3c. graph-superstep implementation changes (clause b) --
     "graph_label_propagation",
     "graph_bfs_levels",
     "graph_pagerank",
-    # -- 3d. round-15 implementation changes (clause b) --
     "llm_tfidf",
     "llm_dedup_containment",
     "graph_degree_hist",
@@ -162,7 +105,7 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_weighted_median",
     "dq_referential",
     "agg_approx",
-    # -- 4a. r9-evidence cohort (clause c, oldest evidence; whole set) --
+    # (c) oldest driver evidence, alphabetical within a cohort
     "llm_token_count",
     "mm_binary_stats",
     "mm_feature_extract",
@@ -179,7 +122,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "validate_expectations",
     "win_pattern_match",
     "win_sessionize",
-    # -- 4b. r10-evidence cohort (clause c fill, 11 of 36, alphabetical) --
     "agg_collect",
     "agg_gini",
     "agg_mode",

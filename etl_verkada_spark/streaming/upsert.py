@@ -18,16 +18,37 @@ The ``upsert_merge`` registered query simulates two scheduled runs over
 the orders table and oracle-checks the final converged state; MERGE
 idempotence (applying a batch twice == once) is property-tested in
 tests/test_properties.py.
+
+Three incremental-maintenance families extend the pattern: a
+materialized view (``stream_mv_*``), a drift monitor
+(``stream_drift*``) and a per-series top-K board (``stream_topk*``).
+Each is a :class:`Family`; one replay driver (a ``foreachBatch`` fold,
+:func:`state_fold`) and one apply driver (the last landed chunk over a
+cached prior state) run all three.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import table
 from ..checkpoints import release
+from ..operators.aggregates import (
+    ORACLE_AGG_INCREMENTAL_MERGE,
+    scaled_long,
+    unscale,
+)
 from ..operators.dedup import last_wins
+from ..operators.quality import ORACLE_DQ_DRIFT, drift_pairs, drift_tvd
+from ..operators.scans import _land_dir
 from ..registry import spec
 
 
@@ -59,7 +80,7 @@ def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
     exist yet (the first batch). Any other read failure — corrupt or
     partial files, transient IO — must PROPAGATE: treating it as
     'first batch' would silently discard accumulated state and the
-    stream would re-converge to a wrong answer (ADVICE r5)."""
+    stream would re-converge to a wrong answer."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -158,9 +179,8 @@ def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The oracle performs the SAME two-phase merge the query simulates
 # (run-1 argmax, then merge run-2), not the collapsed one-window
 # shortcut: the collapsed form is value-equivalent but does half the
-# work, which made the bench ratio measure the *query's semantics*
-# (two scheduled runs) against a baseline doing one — r3 graded that
-# 13.9x "weak" when ~2x of it was the work mismatch.
+# work, so a bench ratio against it would price the query's semantics
+# (two scheduled runs) against a baseline doing one.
 ORACLE_UPSERT_MERGE = """
 WITH run1 AS (
   SELECT o_custkey, o_orderkey, o_totalprice, CAST(1 AS INTEGER) AS run_idx
@@ -189,18 +209,51 @@ FROM (
 """
 
 
-#: number of landed event chunks = number of micro-batches the MV
-#: refresh stream folds through (one file per trigger)
-MV_CHUNKS = 4
-MV_DAY_US = 86_400_000_000
+#: part files per landed chunk. A chunk landed as ONE coalesce(1) file
+#: is a single row group, so every downstream read of it — the
+#: micro-batch trigger's scan AND the apply twin's arriving-chunk scan
+#: — is a single task regardless of cores. Landing each chunk as
+#: N_CHUNK_FILES deterministic part files parallelizes both, and the
+#: write itself runs as N parallel tasks instead of one. 8 keeps file
+#: sizes row-group-scale at the test SFs; a production landing sizes
+#: this to arriving-partition bytes / maxPartitionBytes.
+N_CHUNK_FILES = 8
+
+
+@dataclass(frozen=True)
+class Family:
+    """One incremental-maintenance family as data.
+
+    The landing source is ``columns`` of ``table``, split into
+    ``n_chunks`` chunks by the SQL expression ``chunk`` and landed
+    under ``_land_dir(sf_dir, land)``; ``version`` is the landing
+    layout version — bump it when the chunk naming or the state layout
+    changes, so stale fixtures rebuild instead of mis-parsing.
+
+    The fold is ``partial`` (a batch -> mergeable partials), ``merge``
+    (a union of partials -> partials) and ``finish`` (partials -> the
+    output rows). ``merge`` must be associative and commutative over
+    partials, so the replay's trigger grouping (``files_per_trigger``
+    landed files per micro-batch) is free to differ from chunk
+    boundaries without changing the state.
+    """
+
+    land: str
+    table: str
+    columns: tuple[str, ...]
+    chunk: str
+    n_chunks: int
+    version: str
+    files_per_trigger: int
+    partial: Callable[[DataFrame], DataFrame]
+    merge: Callable[[DataFrame], DataFrame]
+    finish: Callable[[DataFrame], DataFrame]
 
 
 def _mv_latest_version(state_dir: str) -> int | None:
     """Highest COMMITTED state version under ``state_dir`` (a ``v{bid}``
     subdirectory with Spark's ``_SUCCESS`` marker), or None. Pure
     driver-side directory listing — no Spark job."""
-    import os
-
     best = None
     try:
         names = os.listdir(state_dir)
@@ -218,56 +271,39 @@ def _mv_latest_version(state_dir: str) -> int | None:
     return best
 
 
-def mv_fold(state_dir: str):
-    """Build the foreachBatch fold for incremental MV maintenance:
-    merge the batch's (event_type, count, scaled-sum) partials into the
+def state_fold(family: Family, state_dir: str):
+    """Build the foreachBatch fold of ``family``'s partials into a
     parquet state table.
 
     State is VERSIONED: fold N writes ``state_dir/v{batch_id}``; the
     current state is the highest committed (``_SUCCESS``-marked)
-    version. This buys three things over the previous overwrite-in-
-    place fold: (1) replay detection (sums are not idempotent and
-    foreachBatch is at-least-once) is a driver-side directory listing
-    instead of a ``max(last_bid)`` Spark job per batch; (2) writing to
-    a fresh directory removes the read-then-overwrite-same-path
-    conflict, so the eager ``localCheckpoint`` job per batch goes away
-    too — together those two jobs were ~40% of the sf1 wall-clock;
-    (3) a fold that dies mid-write leaves no ``_SUCCESS``, so the next
-    replay folds from the last committed version — the overwrite form
-    could destroy state it was still reading from. Superseded versions
-    are pruned after commit (production would vacuum asynchronously).
+    version. This buys three things over overwriting one state
+    directory in place: (1) replay detection — sums and counts are not
+    idempotent and foreachBatch is at-least-once, so a batch_id at or
+    below the latest version is skipped — is a driver-side directory
+    listing instead of a ``max(last_bid)`` Spark job per batch; (2)
+    writing to a fresh directory removes the read-then-overwrite of one
+    path, so no eager ``localCheckpoint`` job per batch is needed to
+    break lineage — together those two jobs were ~40% of the sf1
+    wall-clock of the MV replay; (3) a fold that dies mid-write leaves
+    no ``_SUCCESS``, so the redelivered batch folds from the last
+    committed version and rewrites the torn one (``mode=overwrite``:
+    nothing ever reads a version without its marker). Superseded
+    versions are pruned after commit (production would vacuum
+    asynchronously). The state is metadata-sized (groups or K rows per
+    series), so each version is written as one file.
     """
-    import os
-    import shutil
 
-    from ..operators.aggregates import scaled_long
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         latest = _mv_latest_version(state_dir)
         if latest is not None and batch_id <= latest:
             return  # at-least-once replay: already folded, skip
-        part = batch_df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value")).alias("c"),
-        )
+        part = family.partial(batch_df)
         if latest is not None:
-            state = bspark.read.parquet(
+            state = batch_df.sparkSession.read.parquet(
                 os.path.join(state_dir, f"v{latest}")
             )
-            part = (
-                state.unionByName(part)
-                .groupBy("event_type")
-                .agg(F.sum("n").alias("n"), F.sum("c").alias("c"))
-            )
-        # state cardinality == |event_type| (metadata-sized): one file
-        # avoids 32 near-empty write tasks per fold. A grid-sized MV
-        # (millions of groups) would drop the coalesce and keep the
-        # aggregate's partitioning. mode=overwrite because a fold that
-        # died MID-WRITE leaves an uncommitted (no _SUCCESS) v{bid}
-        # directory behind — the replay must be able to rewrite it, and
-        # overwriting an uncommitted version is safe by construction
-        # (nothing ever reads a version without its _SUCCESS marker).
+            part = family.merge(state.unionByName(part))
         part.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(state_dir, f"v{batch_id}")
         )
@@ -276,24 +312,7 @@ def mv_fold(state_dir: str):
                 os.path.join(state_dir, f"v{latest}"), ignore_errors=True
             )
 
-    return _fold
-
-
-#: landing fixture layout version; bump when the chunk naming scheme
-#: changes so stale fixtures (and the state fixtures derived from
-#: their file identities) rebuild instead of mis-parsing
-MV_LANDING_VERSION = "v3"
-
-#: part files per landed chunk. A chunk landed as ONE coalesce(1) file
-#: is a single row group, so every downstream read of it — the
-#: micro-batch trigger's scan AND the apply twin's arriving-chunk scan
-#: — is a single task regardless of cores (the r11 verdict's
-#: "driver-serial I/O inside a benched query"). Landing each chunk as
-#: N_CHUNK_FILES deterministic part files parallelizes both, and the
-#: write itself runs as N parallel tasks instead of one. 8 keeps file
-#: sizes row-group-scale at the test SFs; a production landing sizes
-#: this to arriving-partition bytes / maxPartitionBytes.
-N_CHUNK_FILES = 8
+    return fold
 
 
 def _ensure_chunk_landing(
@@ -303,12 +322,13 @@ def _ensure_chunk_landing(
     version: str,
 ) -> str:
     """Build (or reuse) a "files arriving" landing fixture: each chunk
-    lands as up to N_CHUNK_FILES parquet parts under DETERMINISTIC
-    names (``chunk_00_p00.parquet`` ...), so lexical order IS landing
-    order — append-mode part files carry UUID names whose sort order is
-    arbitrary, which made the 'arriving chunk' an arbitrary one
-    (ADVICE r9). Each chunk is written to a staging dir and its part
-    files renamed into place.
+    of ``src`` (rows tagged by a ``__chunk`` column) lands as up to
+    N_CHUNK_FILES parquet parts under DETERMINISTIC names
+    (``chunk_00_p00.parquet`` ...), so lexical order IS landing order —
+    append-mode part files carry UUID names whose sort order is
+    arbitrary, which would make the 'arriving chunk' an arbitrary one.
+    Each chunk is written to a staging dir and its part files renamed
+    into place.
 
     The landing is the upstream fixture, not the operator under
     measurement: built once per sf_dir and reused (at sf1 the chunk
@@ -316,12 +336,9 @@ def _ensure_chunk_landing(
     fold being benchmarked). Folds still run from scratch per call.
     Rebuilding the landing INVALIDATES the state fixtures derived from
     its file identities — both state dirs are removed here, and the
-    apply twins additionally record the exact prior-file list in their
-    ``_PRIMED`` markers (ADVICE r11).
+    apply drivers additionally record the exact prior-file list in
+    their ``_PRIMED`` markers.
     """
-    import os
-    import shutil
-
     done = os.path.join(land, "_LANDED")
     try:
         with open(done) as f:
@@ -335,8 +352,6 @@ def _ensure_chunk_landing(
     shutil.rmtree(land + "_state", ignore_errors=True)
     shutil.rmtree(land + "_prior_state", ignore_errors=True)
     os.makedirs(land, exist_ok=True)
-    if "__chunk" not in src.columns:
-        raise ValueError("landing src must carry a __chunk column")
     for c in range(n_chunks):
         stage = f"{land}_stage"
         src.filter(F.col("__chunk") == c).drop("__chunk").repartition(
@@ -356,13 +371,25 @@ def _ensure_chunk_landing(
     return land
 
 
+def _landing(
+    spark: SparkSession, sf_dir: str, family: Family
+) -> tuple[str, StructType]:
+    """The family's landing dir (built on first use) and the schema of
+    its landed rows, which the replay stream reads with."""
+    src = table(spark, sf_dir, family.table).select(
+        *family.columns, F.expr(family.chunk).alias("__chunk")
+    )
+    land = _ensure_chunk_landing(
+        _land_dir(sf_dir, family.land), src, family.n_chunks, family.version
+    )
+    return land, src.drop("__chunk").schema
+
+
 def _chunk_groups(land: str, n_chunks: int) -> list[list[str]]:
     """The landed chunk files grouped by chunk, in landing order,
     validated: a group-count mismatch means a foreign or half-built
     landing — fail with the real story instead of an IndexError
-    downstream (ADVICE r9)."""
-    import os
-
+    downstream."""
     groups: dict[str, list[str]] = {}
     for f in sorted(os.listdir(land)):
         if f.endswith(".parquet") and f.startswith("chunk_"):
@@ -378,8 +405,8 @@ def _chunk_groups(land: str, n_chunks: int) -> list[list[str]]:
 def _primed_marker_ok(primed_path: str, identity: str) -> bool:
     """True when the prime marker exists AND records exactly this
     prior-chunk identity — a marker left over from a previous landing
-    (different file list) must NOT validate the cached state
-    (ADVICE r11: stale ``_prior_state`` + new landing = wrong board)."""
+    (different file list) must NOT validate the cached state, or stale
+    prior state would be merged with a new landing's last chunk."""
     try:
         with open(primed_path) as f:
             return f.read() == identity
@@ -387,84 +414,100 @@ def _primed_marker_ok(primed_path: str, identity: str) -> bool:
         return False
 
 
-def _ensure_mv_landing(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators.scans import _land_dir
-
-    e = table(spark, sf_dir, "events")
-    day = F.expr(f"unix_micros(cast(ts as timestamp)) div {MV_DAY_US}")
-    return _ensure_chunk_landing(
-        _land_dir(sf_dir, "mv_chunks"),
-        e.select(
-            "event_type", "value", (day % MV_CHUNKS).alias("__chunk")
-        ),
-        MV_CHUNKS,
-        MV_LANDING_VERSION,
+def _replay(spark: SparkSession, sf_dir: str, family: Family) -> DataFrame:
+    """Fold every landed chunk through an availableNow ``foreachBatch``
+    stream from empty state; finish the last committed version."""
+    land, schema = _landing(spark, sf_dir, family)
+    state_dir = land + "_state"
+    shutil.rmtree(state_dir, ignore_errors=True)
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", family.files_per_trigger)
+        .parquet(land)
+        .writeStream.foreachBatch(state_fold(family, state_dir))
+        .queryName(f"{family.land}_{uuid.uuid4().hex[:12]}")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
+    final = os.path.join(state_dir, f"v{_mv_latest_version(state_dir)}")
+    return family.finish(spark.read.parquet(final))
+
+
+def _apply(spark: SparkSession, sf_dir: str, family: Family) -> DataFrame:
+    """One delta-only refresh: merge the last landed chunk's partials
+    into the state of every earlier chunk. That prior state is a cached
+    fixture, primed once per landing; its ``_PRIMED`` marker records
+    WHICH prior files it covers, so a rebuilt landing re-primes instead
+    of reusing stale state."""
+    land, _ = _landing(spark, sf_dir, family)
+    *earlier, last = _chunk_groups(land, family.n_chunks)
+    prior = [f for g in earlier for f in g]
+    state_dir = land + "_prior_state"
+    primed = os.path.join(state_dir, "_PRIMED")
+    identity = "\n".join(prior)
+    if not _primed_marker_ok(primed, identity):
+        shutil.rmtree(state_dir, ignore_errors=True)
+        family.partial(
+            spark.read.parquet(*[os.path.join(land, f) for f in prior])
+        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
+        with open(primed, "w") as f:
+            f.write(identity)
+    part = family.partial(
+        spark.read.parquet(*[os.path.join(land, f) for f in last])
+    )
+    state = spark.read.parquet(state_dir)
+    return family.finish(family.merge(state.unionByName(part)))
+
+
+#: landed event chunks of the MV family (one per event day modulo 4)
+MV_CHUNKS = 4
+MV_DAY_US = 86_400_000_000
+
+#: the MV state: (event_type, count, int-cent sum) partials, never
+#: finals, so the fold is a sum
+MV = Family(
+    land="mv_chunks",
+    table="events",
+    columns=("event_type", "value"),
+    chunk=f"(unix_micros(cast(ts as timestamp)) div {MV_DAY_US}) % {MV_CHUNKS}",
+    n_chunks=MV_CHUNKS,
+    version="v3",
+    files_per_trigger=N_CHUNK_FILES,
+    partial=lambda df: df.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(scaled_long("value")).alias("c"),
+    ),
+    merge=lambda df: df.groupBy("event_type").agg(
+        F.sum("n").alias("n"), F.sum("c").alias("c")
+    ),
+    finish=lambda df: df.select(
+        "event_type",
+        F.col("n").alias("n_events"),
+        unscale(F.col("c"), 2).alias("sum_value"),
+    ),
+)
 
 
 def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental materialized-view maintenance — the
     streaming twin of agg_incremental_merge: events arrive as
     micro-batches (one chunk-sized group of landed part files per
-    trigger; the fold is an associative merge, so trigger grouping is
-    free to differ from chunk boundaries without changing the state), a
-    foreachBatch sink folds each batch's (event_type, count, int-cent
-    sum) partials into a parquet state table, and the FINAL state must
-    equal a from-scratch aggregate — the oracle IS the full recompute,
-    so the driver's hash check proves no batch boundary lost or
-    double-counted anything.
+    trigger), a foreachBatch sink folds each batch's (event_type,
+    count, int-cent sum) partials into a parquet state table, and the
+    FINAL state must equal a from-scratch aggregate — the oracle IS the
+    full recompute, so the driver's hash check proves no batch boundary
+    lost or double-counted anything.
 
-    Mergeability discipline: the state stores associative partials
-    (n, c), never finals. A fold (sum) is NOT naturally idempotent the
-    way last-wins MERGE is, and foreachBatch is at-least-once — a
-    replayed batch_id would double-count. State is therefore versioned
-    by batch_id (see ``mv_fold``): a replayed batch at or below the
-    highest committed version is a no-op (ADVICE r5), detection is a
-    driver directory listing (no Spark job), and each fold writes a
-    FRESH version directory — no read-modify-overwrite, so no eager
-    localCheckpoint to break lineage. At sf1 those two per-batch jobs
-    were ~40% of wall-clock (4.64 s -> see SCALE.md §18).
+    The state stores associative partials (n, c), never finals; a sum
+    is not idempotent the way last-wins MERGE is, so a replayed batch
+    is skipped by version (see :func:`state_fold`).
 
     At 100 TB: state is |group| rows (metadata-sized); each refresh
     touches only the arriving partition — the streaming form of "never
     rescan history".
     """
-    import os
-    import shutil
-    import uuid
-
-    from ..operators.aggregates import unscale
-    land = _ensure_mv_landing(spark, sf_dir)
-    state_dir = land + "_state"
-    shutil.rmtree(state_dir, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", N_CHUNK_FILES)
-        .parquet(land)
-    )
-
-    q = (
-        stream.writeStream.foreachBatch(mv_fold(state_dir))
-        .queryName(f"mv_refresh_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final_v = _mv_latest_version(state_dir)
-    return spark.read.parquet(
-        os.path.join(state_dir, f"v{final_v}")
-    ).select(
-        "event_type",
-        F.col("n").alias("n_events"),
-        unscale(F.col("c"), 2).alias("sum_value"),
-    )
-
-
-def _mv_oracle() -> str:
-    from ..operators.aggregates import ORACLE_AGG_INCREMENTAL_MERGE
-
-    return ORACLE_AGG_INCREMENTAL_MERGE
+    return _replay(spark, sf_dir, MV)
 
 
 def stream_mv_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,132 +531,45 @@ def stream_mv_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: this is the number that matters — refresh cost scales
     with the arriving partition, never with history.
     """
-    import os
-    import shutil
-
-    from ..operators.aggregates import scaled_long, unscale
-    land = _ensure_mv_landing(spark, sf_dir)
-    groups = _chunk_groups(land, MV_CHUNKS)
-    prior = [f for g in groups[: MV_CHUNKS - 1] for f in g]
-    last = groups[MV_CHUNKS - 1]
-    state_dir = land + "_prior_state"
-    done = os.path.join(state_dir, "_PRIMED")
-    identity = "\n".join(prior)
-    if not _primed_marker_ok(done, identity):
-        # prime once per sf_dir: fold chunks 0..n-2 into the state
-        # fixture (the "MV current through yesterday" precondition);
-        # the marker records WHICH prior files the state covers, so a
-        # rebuilt landing re-primes instead of reusing stale state
-        shutil.rmtree(state_dir, ignore_errors=True)
-        spark.read.parquet(*[os.path.join(land, f) for f in prior]).groupBy(
-            "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value")).alias("c"),
-        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
-        with open(done, "w") as f:
-            f.write(identity)
-    part = (
-        spark.read.parquet(*[os.path.join(land, f) for f in last])
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value")).alias("c"),
-        )
-    )
-    state = spark.read.parquet(state_dir)
-    merged = (
-        state.unionByName(part)
-        .groupBy("event_type")
-        .agg(F.sum("n").alias("n"), F.sum("c").alias("c"))
-    )
-    return merged.select(
-        "event_type",
-        F.col("n").alias("n_events"),
-        unscale(F.col("c"), 2).alias("sum_value"),
-    )
+    return _apply(spark, sf_dir, MV)
 
 
-#: drift monitor micro-batch chunks (one chunk-sized file group per
-#: trigger; see N_CHUNK_FILES)
+#: drift monitor chunks (order rows by o_orderkey modulo 4)
 DRIFT_CHUNKS = 4
-DRIFT_LANDING_VERSION = "v2"
 
-
-def _ensure_drift_landing(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators.scans import _land_dir
-
-    o = table(spark, sf_dir, "orders")
-    return _ensure_chunk_landing(
-        _land_dir(sf_dir, "drift_chunks"),
-        o.select(
-            "o_orderkey", "o_orderdate", "o_orderstatus",
-            "o_orderpriority", "o_totalprice",
-            (F.col("o_orderkey") % DRIFT_CHUNKS).alias("__chunk"),
-        ),
-        DRIFT_CHUNKS,
-        DRIFT_LANDING_VERSION,
-    )
-
-
-def drift_fold(state_dir: str):
-    """foreachBatch fold for the streaming drift monitor: merge the
-    batch's (feature, category, cnt_ref, cnt_cur) count partials into
-    the parquet state table. Same replay discipline as mv_fold: counts
-    are not idempotent and foreachBatch is at-least-once — state is
-    VERSIONED by batch_id (``v{bid}`` dirs, driver-side listing), so
-    replay detection costs no Spark job and the fresh-directory write
-    needs no lineage-breaking localCheckpoint (those two per-batch jobs
-    were ~40% of sf1 wall-clock in the overwrite-in-place form,
-    SCALE.md §18 — the r12 rewrite brings drift/topk onto the pattern
-    mv_fold already used)."""
-    import os
-    import shutil
-
-    from ..operators.quality import drift_pairs
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        latest = _mv_latest_version(state_dir)
-        if latest is not None and batch_id <= latest:
-            return  # at-least-once replay: already folded, skip
-        part = drift_pairs(batch_df).groupBy("feature", "category").agg(
-            F.sum("is_ref").alias("cnt_ref"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cnt_cur"),
-        )
-        if latest is not None:
-            state = bspark.read.parquet(
-                os.path.join(state_dir, f"v{latest}")
-            )
-            part = (
-                state.unionByName(part)
-                .groupBy("feature", "category")
-                .agg(
-                    F.sum("cnt_ref").alias("cnt_ref"),
-                    F.sum("cnt_cur").alias("cnt_cur"),
-                )
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{batch_id}")
-        )
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(state_dir, f"v{latest}"), ignore_errors=True
-            )
-
-    return _fold
+#: the drift state: (feature, category, cnt_ref, cnt_cur) count
+#: partials; TVD is finished from them once
+DRIFT = Family(
+    land="drift_chunks",
+    table="orders",
+    columns=(
+        "o_orderkey", "o_orderdate", "o_orderstatus",
+        "o_orderpriority", "o_totalprice",
+    ),
+    chunk=f"o_orderkey % {DRIFT_CHUNKS}",
+    n_chunks=DRIFT_CHUNKS,
+    version="v2",
+    files_per_trigger=N_CHUNK_FILES,
+    partial=lambda df: drift_pairs(df).groupBy("feature", "category").agg(
+        F.sum("is_ref").alias("cnt_ref"),
+        F.sum(F.lit(1) - F.col("is_ref")).alias("cnt_cur"),
+    ),
+    merge=lambda df: df.groupBy("feature", "category").agg(
+        F.sum("cnt_ref").alias("cnt_ref"),
+        F.sum("cnt_cur").alias("cnt_cur"),
+    ),
+    finish=drift_tvd,
+)
 
 
 def stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming drift monitor — the streaming twin of ``dq_drift``:
     order rows arrive as micro-batches (one chunk-sized group of landed
-    part files per trigger; the count fold is an associative merge, so
-    trigger grouping is free to differ from chunk boundaries without
-    changing the state), a foreachBatch sink folds each batch's (feature,
-    category) count partials into a parquet state table, and the final
-    TVD computed FROM THE FOLDED STATE must equal the batch audit's
-    from-scratch answer — the oracle IS ``ORACLE_DQ_DRIFT``, so the
-    driver's hash check proves no micro-batch boundary lost or
+    part files per trigger), a foreachBatch sink folds each batch's
+    (feature, category) count partials into a parquet state table, and
+    the final TVD computed FROM THE FOLDED STATE must equal the batch
+    audit's from-scratch answer — the oracle IS ``ORACLE_DQ_DRIFT``, so
+    the driver's hash check proves no micro-batch boundary lost or
     double-counted a category.
 
     This is the production shape of drift monitoring: the reference
@@ -625,205 +581,83 @@ def stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate float error per batch).
 
     At 100 TB: state is |feature x category| rows; per refresh cost is
-    one aggregate over the arriving partition plus a state-table
-    overwrite, exactly like stream_mv_refresh.
+    one aggregate over the arriving partition plus a state-version
+    write, exactly like stream_mv_refresh.
     """
-    import shutil
-    import uuid
-
-    from ..operators.quality import drift_tvd
-    # landing is the "drops arriving" fixture (see stream_mv_refresh):
-    # build once per sf_dir, reuse across calls; the fold is fresh.
-    land = _ensure_drift_landing(spark, sf_dir)
-    state_dir = land + "_state"
-    shutil.rmtree(state_dir, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_orderdate timestamp, o_orderstatus string, "
-            "o_orderpriority string, o_totalprice double"
-        )
-        .option("maxFilesPerTrigger", N_CHUNK_FILES)
-        .parquet(land)
-    )
-    q = (
-        stream.writeStream.foreachBatch(drift_fold(state_dir))
-        .queryName(f"drift_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import os
-
-    final_v = _mv_latest_version(state_dir)
-    counts = spark.read.parquet(
-        os.path.join(state_dir, f"v{final_v}")
-    ).select("feature", "category", "cnt_ref", "cnt_cur")
-    return drift_tvd(counts)
-
-
-def _drift_oracle() -> str:
-    from ..operators.quality import ORACLE_DQ_DRIFT
-
-    return ORACLE_DQ_DRIFT
+    return _replay(spark, sf_dir, DRIFT)
 
 
 def stream_drift_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE incremental drift-monitor refresh step — stream_drift's
     batch-apply twin, completing the replay/steady-state pair the
-    mv_refresh/mv_apply and scd2_build/scd2_apply rows already have
-    (r10 verdict item 2).
+    mv_refresh/mv_apply and scd2_build/scd2_apply rows already have.
 
     stream_drift replays ALL chunks through availableNow micro-batch
-    machinery (DRIFT_CHUNKS triggers, a full state overwrite per
-    trigger) — a replay-stress statement. THIS query answers the
-    production question: counts are current through the last drop
-    (state folded from chunks 0..n-2, a cached parquet fixture primed
-    once per sf_dir), one new drop lands, what does bringing the TVD
-    alert current cost? Work = one aggregate over the arriving chunk +
-    a merge with the metadata-sized (feature, category) state. The
+    machinery (DRIFT_CHUNKS triggers, a state version per trigger) — a
+    replay-stress statement. THIS query answers the production
+    question: counts are current through the last drop (state folded
+    from chunks 0..n-2, a cached parquet fixture primed once per
+    sf_dir), one new drop lands, what does bringing the TVD alert
+    current cost? Work = one aggregate over the arriving chunk + a
+    merge with the metadata-sized (feature, category) state. The
     oracle is dq_drift's from-scratch SQL over ALL orders, so the
     driver's hash check proves the incremental fold loses nothing.
 
     At 100 TB: refresh cost scales with the arriving partition, never
     with the reference window's history.
     """
-    import os
-    import shutil
-
-    from ..operators.quality import drift_pairs, drift_tvd
-    # same landing fixture as stream_drift (build once per sf_dir)
-    land = _ensure_drift_landing(spark, sf_dir)
-    groups = _chunk_groups(land, DRIFT_CHUNKS)
-    prior = [f for g in groups[: DRIFT_CHUNKS - 1] for f in g]
-    last = groups[DRIFT_CHUNKS - 1]
-    state_dir = land + "_prior_state"
-    primed = os.path.join(state_dir, "_PRIMED")
-    identity = "\n".join(prior)
-
-    def chunk_counts(df: DataFrame) -> DataFrame:
-        return drift_pairs(df).groupBy("feature", "category").agg(
-            F.sum("is_ref").alias("cnt_ref"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cnt_cur"),
-        )
-
-    if not _primed_marker_ok(primed, identity):
-        # prime once per sf_dir: fold chunks 0..n-2 into the state
-        # fixture (the "monitor current through yesterday" precondition);
-        # the marker records WHICH prior files the state covers
-        shutil.rmtree(state_dir, ignore_errors=True)
-        chunk_counts(
-            spark.read.parquet(*[os.path.join(land, f) for f in prior])
-        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
-        with open(primed, "w") as f:
-            f.write(identity)
-    part = chunk_counts(
-        spark.read.parquet(*[os.path.join(land, f) for f in last])
-    )
-    state = spark.read.parquet(state_dir).select(
-        "feature", "category", "cnt_ref", "cnt_cur"
-    )
-    merged = (
-        state.unionByName(part)
-        .groupBy("feature", "category")
-        .agg(
-            F.sum("cnt_ref").alias("cnt_ref"),
-            F.sum("cnt_cur").alias("cnt_cur"),
-        )
-    )
-    return drift_tvd(merged)
+    return _apply(spark, sf_dir, DRIFT)
 
 
-#: streaming top-K: chunks landed / K kept per series
+#: streaming top-K: chunks landed (event_id modulo 4) / K kept per series
 TOPK_CHUNKS = 4
 TOPK_K = 5
-TOPK_LANDING_VERSION = "v2"
 
 
-def _ensure_topk_landing(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators.scans import _land_dir
-
-    e = table(spark, sf_dir, "events")
-    return _ensure_chunk_landing(
-        _land_dir(sf_dir, "topk_chunks"),
-        e.select(
-            "event_id", "event_type", "value",
-            (F.col("event_id") % TOPK_CHUNKS).alias("__chunk"),
-        ),
-        TOPK_CHUNKS,
-        TOPK_LANDING_VERSION,
+def _topk_ranked(df: DataFrame) -> DataFrame:
+    """Rank each series by exact cents, event_id tiebreak, and keep the
+    top K with their rank — the semilattice prune
+    ``topK(A ∪ B) = topK(topK(A) ∪ topK(B))``. The state keeps ``rnk``,
+    so finishing is a projection, not a second window."""
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("v_c").desc(), F.col("event_id").desc()
+    )
+    return df.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= TOPK_K
     )
 
 
-def topk_fold(state_dir: str):
-    """foreachBatch fold for the streaming top-K leaderboard: prune the
-    arriving batch to its per-series top-K, union with the K-row state,
-    re-prune, overwrite. Top-K is a SEMILATTICE merge —
-    ``topK(A ∪ B) = topK(topK(A) ∪ topK(B))`` — so the fold is
-    associative and batch-order-independent, and state never exceeds
-    K x |series| rows no matter how much history streamed through.
-    Same at-least-once replay guard as mv_fold/drift_fold (top-K merge
-    is idempotent for REPEATED rows but the guard keeps the discipline
-    uniform and the batch work skippable): state is VERSIONED by
-    batch_id, so replay detection is a driver-side directory listing —
-    no ``max(last_bid)`` Spark job, no localCheckpoint (SCALE.md §18's
-    two-jobs-per-batch tax, removed r12)."""
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    def _prune(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("v_c").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOPK_K)
-            .drop("rn")
-        )
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.aggregates import scaled_long
-
-        bspark = batch_df.sparkSession
-        latest = _mv_latest_version(state_dir)
-        if latest is not None and batch_id <= latest:
-            return  # at-least-once replay: already folded, skip
-        part = _prune(
-            batch_df.select(
-                "event_type", "event_id", scaled_long("value").alias("v_c")
-            )
-        )
-        if latest is not None:
-            state = bspark.read.parquet(
-                os.path.join(state_dir, f"v{latest}")
-            )
-            part = _prune(
-                state.select("event_type", "event_id", "v_c").unionByName(
-                    part
-                )
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{batch_id}")
-        )
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(state_dir, f"v{latest}"), ignore_errors=True
-            )
-
-    return _fold
+#: the top-K state: K rows per series, whatever streamed through. The
+#: replay groups chunk PAIRS per trigger: each micro-batch pays a fixed
+#: offsets-log + listing + planning cost that dominated the replay and
+#: swung 3x between clean runs, and two batches over four chunks still
+#: exercise the multi-batch fold.
+TOPK = Family(
+    land="topk_chunks",
+    table="events",
+    columns=("event_id", "event_type", "value"),
+    chunk=f"event_id % {TOPK_CHUNKS}",
+    n_chunks=TOPK_CHUNKS,
+    version="v3",
+    files_per_trigger=2 * N_CHUNK_FILES,
+    partial=lambda df: _topk_ranked(
+        df.select("event_type", "event_id", scaled_long("value").alias("v_c"))
+    ),
+    merge=_topk_ranked,
+    finish=lambda df: df.select(
+        "event_type", "rnk", "event_id", unscale(F.col("v_c")).alias("value")
+    ),
+)
 
 
 def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-series top-K leaderboard — the continuously
     maintained "largest transactions" board every ops dashboard has.
-    Events arrive as micro-batches (one chunk-sized group of landed
-    part files per trigger; the prune-merge is associative and
-    commutative, so trigger grouping is free to differ from chunk
-    boundaries without changing the state); a
+    Events arrive as micro-batches (landed part files per trigger; the
+    prune-merge is associative and commutative, so trigger grouping is
+    free to differ from chunk boundaries without changing the state); a
     foreachBatch fold keeps only K rows per series as state (the
-    semilattice prune-merge in :func:`topk_fold`); the final
+    semilattice prune-merge of :func:`_topk_ranked`); the final
     leaderboard read FROM STATE must equal the from-scratch ranking
     over all events — the oracle is that one-shot SQL, so the driver's
     hash check proves no batch boundary dropped a contender.
@@ -837,54 +671,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with event_id tiebreak, so the fold and the oracle agree
     bit-for-bit.
     """
-    import shutil
-    import uuid
-
-    from ..operators.aggregates import unscale
-    land = _ensure_topk_landing(spark, sf_dir)
-    state_dir = land + "_state"
-    shutil.rmtree(state_dir, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, event_type string, value double"
-        )
-        # replay in CHUNK-PAIR batches (r14, the r13 verdict's
-        # stream_topk item): the fold is associative/commutative so
-        # trigger grouping is free (docstring above), and each
-        # micro-batch pays a fixed offsets-log + listing + planning
-        # tax that dominated the replay and swung 3x between clean
-        # runs — half the batches, half the machinery, the multi-batch
-        # fold still exercised (2 batches over 4 chunks)
-        .option("maxFilesPerTrigger", 2 * N_CHUNK_FILES)
-        .parquet(land)
-    )
-    q = (
-        stream.writeStream.foreachBatch(topk_fold(state_dir))
-        .queryName(f"topk_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import os
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("v_c").desc(), F.col("event_id").desc()
-    )
-    final_v = _mv_latest_version(state_dir)
-    return (
-        spark.read.parquet(os.path.join(state_dir, f"v{final_v}"))
-        .select("event_type", "event_id", "v_c")
-        .withColumn("rnk", F.row_number().over(w))
-        .select(
-            "event_type",
-            "rnk",
-            "event_id",
-            unscale(F.col("v_c")).alias("value"),
-        )
-    )
+    return _replay(spark, sf_dir, TOPK)
 
 
 def stream_topk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -905,68 +692,7 @@ def stream_topk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: refresh cost scales with the arriving chunk; state
     never grows past K x |series| no matter how much history streamed.
     """
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    from ..operators.aggregates import scaled_long, unscale
-    # same landing fixture as stream_topk (build once per sf_dir)
-    land = _ensure_topk_landing(spark, sf_dir)
-    groups = _chunk_groups(land, TOPK_CHUNKS)
-    prior = [f for g in groups[: TOPK_CHUNKS - 1] for f in g]
-    last = groups[TOPK_CHUNKS - 1]
-    state_dir = land + "_prior_state"
-    primed = os.path.join(state_dir, "_PRIMED")
-    identity = "\n".join(prior)
-
-    def prune(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("v_c").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOPK_K)
-            .drop("rn")
-        )
-
-    def cents(df: DataFrame) -> DataFrame:
-        return df.select(
-            "event_type", "event_id", scaled_long("value").alias("v_c")
-        )
-
-    if not _primed_marker_ok(primed, identity):
-        # prime once per sf_dir: prune chunks 0..n-2 into the K-row
-        # state fixture (the "board current through yesterday" setup);
-        # the marker records WHICH prior files the state covers, so a
-        # rebuilt landing (new file identities) re-primes instead of
-        # pairing stale state with a fresh 'last' chunk (ADVICE r11)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        prune(
-            cents(spark.read.parquet(*[os.path.join(land, f) for f in prior]))
-        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
-        with open(primed, "w") as f:
-            f.write(identity)
-    part = prune(
-        cents(spark.read.parquet(*[os.path.join(land, f) for f in last]))
-    )
-    state = spark.read.parquet(state_dir).select(
-        "event_type", "event_id", "v_c"
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("v_c").desc(), F.col("event_id").desc()
-    )
-    return (
-        state.unionByName(part)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK_K)
-        .select(
-            "event_type",
-            "rnk",
-            "event_id",
-            unscale(F.col("v_c")).alias("value"),
-        )
-    )
+    return _apply(spark, sf_dir, TOPK)
 
 
 ORACLE_STREAM_TOPK = f"""
@@ -989,18 +715,17 @@ WHERE rnk <= {TOPK_K}
 """
 
 
-#: bench-only matched-work twin (r15, the r14 verdict's stream_topk
-#: item): the correctness oracle above is a ONE-SHOT ranking, so the
-#: sf1 ratio priced Spark's multi-batch replay against an engine doing
-#: a single pass — a structural mismatch, annotated since r11. The
-#: chunk assignment is ``event_id % TOPK_CHUNKS`` (deterministic, see
-#: _ensure_topk_landing) and the r14 replay groups chunk PAIRS per
-#: trigger, so DuckDB can fold the IDENTICAL two batches: per-batch
-#: top-K prune, then prune-merge — the same semilattice fold
-#: ``topK(topK(b1) ∪ topK(b2))``, whose result provably equals the
-#: one-shot ranking (that equality is what the correctness row
-#: verifies). Spark's residual streaming-machinery tax (offsets log,
-#: state versioning I/O) stays priced against the twin, deliberately.
+#: bench-only matched-work twin: the correctness oracle above is a
+#: ONE-SHOT ranking, so an sf1 ratio against it would price Spark's
+#: multi-batch replay against an engine doing a single pass. The chunk
+#: assignment is ``event_id % TOPK_CHUNKS`` (deterministic, see TOPK)
+#: and the replay groups chunk PAIRS per trigger, so DuckDB can fold
+#: the IDENTICAL two batches: per-batch top-K prune, then prune-merge —
+#: the same semilattice fold ``topK(topK(b1) ∪ topK(b2))``, whose
+#: result provably equals the one-shot ranking (that equality is what
+#: the correctness row verifies). Spark's residual streaming-machinery
+#: tax (offsets log, state versioning I/O) stays priced against the
+#: twin, deliberately.
 SF1_TWIN_STREAM_TOPK = f"""
 WITH pruned AS (
   SELECT event_type, event_id, v_c, half FROM (
@@ -1039,22 +764,22 @@ QUERIES = {
         doc="MERGE upsert across scheduled runs (PATCH/POST sync), task.ts:228-271",
     ),
     "stream_mv_refresh": spec(
-        stream_mv_refresh, _mv_oracle(), "beyond",
+        stream_mv_refresh, ORACLE_AGG_INCREMENTAL_MERGE, "beyond",
         doc="streaming incremental MV: foreachBatch partial folds == "
             "full recompute (oracle is the rescan)",
     ),
     "stream_mv_apply": spec(
-        stream_mv_apply, _mv_oracle(), "beyond",
+        stream_mv_apply, ORACLE_AGG_INCREMENTAL_MERGE, "beyond",
         doc="one delta-only MV refresh step from cached state == full "
             "recompute (the steady-state incremental cost)",
     ),
     "stream_drift": spec(
-        stream_drift, _drift_oracle(), "beyond",
+        stream_drift, ORACLE_DQ_DRIFT, "beyond",
         doc="streaming drift monitor: micro-batch count folds -> TVD "
             "== batch dq_drift recompute (oracle is dq_drift's SQL)",
     ),
     "stream_drift_apply": spec(
-        stream_drift_apply, _drift_oracle(), "beyond",
+        stream_drift_apply, ORACLE_DQ_DRIFT, "beyond",
         doc="one delta-only drift refresh from cached count state == "
             "full dq_drift recompute (the steady-state incremental cost)",
     ),

@@ -476,33 +476,36 @@ def test_mv_refresh_folds_multiple_microbatches(spark):
     assert out == want
 
 
-def test_mv_fold_skips_replayed_batch(spark, tmp_path):
+@pytest.mark.parametrize("family", ["MV", "TOPK"])
+def test_mv_fold_skips_replayed_batch(spark, tmp_path, family):
     """foreachBatch is at-least-once: re-delivering an already-folded
     batch_id must be a no-op (state versions are keyed by batch_id),
     while the next batch_id folds normally and prunes the superseded
-    version."""
+    version. Run for the MV sum fold and the top-K prune fold (MV
+    ignores event_id; top-K state must hold the 3 events once each)."""
     import os
 
+    from etl_verkada_spark.streaming import upsert
     from etl_verkada_spark.streaming.upsert import (
         _mv_latest_version,
-        mv_fold,
+        state_fold,
     )
 
     state = str(tmp_path / "state")
-    fold = mv_fold(state)
-    b0 = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0)], "event_type string, value double"
-    )
-    b1 = spark.createDataFrame(
-        [("a", 4.0)], "event_type string, value double"
-    )
+    fold = state_fold(getattr(upsert, family), state)
+    ev = "event_id long, event_type string, value double"
+    b0 = spark.createDataFrame([(1, "a", 1.0), (2, "a", 2.0)], ev)
+    b1 = spark.createDataFrame([(3, "a", 4.0)], ev)
     fold(b0, 0)
     fold(b0, 0)  # replay: must not double-count
     fold(b1, 1)
     fold(b1, 1)  # replay of the newest batch too
     assert _mv_latest_version(state) == 1
-    row = spark.read.parquet(os.path.join(state, "v1")).collect()[0]
-    assert (row.event_type, row.n) == ("a", 3)
+    rows = spark.read.parquet(os.path.join(state, "v1")).collect()
+    row = rows[0]
+    n = row.n if family == "MV" else len({r.event_id for r in rows})
+    assert len(rows) == (1 if family == "MV" else 3)
+    assert (row.event_type, n) == ("a", 3)
     assert not os.path.exists(os.path.join(state, "v0")), (
         "superseded version must be pruned after commit"
     )
@@ -577,9 +580,9 @@ def test_stream_drift_apply_equals_batch_audit(spark):
 def test_drift_fold_skips_replayed_batch(spark, tmp_path):
     """At-least-once replay of a drift batch must not double-count any
     (feature, category) cell."""
-    from etl_verkada_spark.streaming.upsert import drift_fold
+    from etl_verkada_spark.streaming.upsert import DRIFT, state_fold
 
-    fold = drift_fold(str(tmp_path / "state"))
+    fold = state_fold(DRIFT, str(tmp_path / "state"))
     schema = (
         "o_orderkey long, o_orderdate timestamp, o_orderstatus string, "
         "o_orderpriority string, o_totalprice double"
@@ -618,12 +621,13 @@ def test_mv_fold_recovers_from_mid_write_crash(spark, tmp_path):
     import os
 
     from etl_verkada_spark.streaming.upsert import (
+        MV,
         _mv_latest_version,
-        mv_fold,
+        state_fold,
     )
 
     state = str(tmp_path / "state")
-    fold = mv_fold(state)
+    fold = state_fold(MV, state)
     b0 = spark.createDataFrame(
         [("a", 1.0), ("a", 2.0)], "event_type string, value double"
     )
@@ -647,7 +651,7 @@ def test_topk_fold_is_batch_order_independent(spark, tmp_path):
     """Top-K is a semilattice merge: folding the same batches in any
     order yields the identical state (the property that makes the
     streaming leaderboard deterministic under micro-batch re-planning)."""
-    from etl_verkada_spark.streaming.upsert import topk_fold
+    from etl_verkada_spark.streaming.upsert import TOPK, state_fold
 
     batches = [
         spark.createDataFrame(
@@ -664,7 +668,7 @@ def test_topk_fold_is_batch_order_independent(spark, tmp_path):
 
     def run(order, name):
         state = str(tmp_path / name)
-        fold = topk_fold(state)
+        fold = state_fold(TOPK, state)
         for bid, b in enumerate(order):
             fold(b, bid)
         v = _mv_latest_version(state)
@@ -683,12 +687,12 @@ def test_topk_fold_state_stays_bounded(spark, tmp_path):
     """State after any number of folds holds at most K rows per series."""
     from collections import Counter
 
-    from etl_verkada_spark.streaming.upsert import TOPK_K, topk_fold
+    from etl_verkada_spark.streaming.upsert import TOPK, TOPK_K, state_fold
 
     from etl_verkada_spark.streaming.upsert import _mv_latest_version
 
     state = str(tmp_path / "state")
-    fold = topk_fold(state)
+    fold = state_fold(TOPK, state)
     for bid in range(3):
         rows = [
             (bid * 1000 + i, "s", float(i % 17)) for i in range(50)
@@ -707,39 +711,67 @@ def test_topk_fold_state_stays_bounded(spark, tmp_path):
     assert per and all(n <= TOPK_K for n in per.values()), per
 
 
-def test_topk_apply_equals_full_ranking(spark):
-    """The delta-only leaderboard refresh must equal the from-scratch
-    ranking (the semilattice prune loses no contender)."""
-    from etl_verkada_spark.streaming.upsert import (
-        TOPK_K,
-        stream_topk,
-        stream_topk_apply,
-    )
+@pytest.mark.parametrize(
+    "replay, apply",
+    [
+        ("stream_topk", "stream_topk_apply"),
+        ("stream_mv_refresh", "stream_mv_apply"),
+    ],
+    ids=["topk", "mv"],
+)
+def test_topk_apply_equals_full_ranking(spark, replay, apply):
+    """The delta-only refresh must equal the full replay (for top-K:
+    the semilattice prune loses no contender)."""
+    from etl_verkada_spark.streaming import upsert
+    from etl_verkada_spark.streaming.upsert import TOPK_K
 
-    full = sorted(map(tuple, stream_topk(spark, SF_SMALL).collect()))
-    delta = sorted(map(tuple, stream_topk_apply(spark, SF_SMALL).collect()))
+    full = sorted(map(tuple, getattr(upsert, replay)(spark, SF_SMALL).collect()))
+    delta = sorted(map(tuple, getattr(upsert, apply)(spark, SF_SMALL).collect()))
     assert full == delta
     assert full
-    per = {}
-    for t, rnk, _, _ in full:
-        per[t] = max(per.get(t, 0), rnk)
-    assert all(v <= TOPK_K for v in per.values())
+    if replay == "stream_topk":
+        per = {}
+        for t, rnk, _, _ in full:
+            per[t] = max(per.get(t, 0), rnk)
+        assert all(v <= TOPK_K for v in per.values())
 
 
-def test_stale_prime_marker_forces_reprime(spark, tmp_path):
-    """ADVICE r11: a _PRIMED marker left over from a PREVIOUS landing
-    (different prior-file list) must NOT validate the cached state —
-    the apply twin must re-prime and still match the full ranking."""
+@pytest.mark.parametrize(
+    "replay, apply, land_name, poison, schema",
+    [
+        (
+            "stream_topk", "stream_topk_apply", "topk_chunks",
+            ("poison", 1, 10**15, 1),
+            "event_type string, event_id long, v_c long, rnk int",
+        ),
+        (
+            "stream_mv_refresh", "stream_mv_apply", "mv_chunks",
+            ("poison", 1, 10**15),
+            "event_type string, n long, c long",
+        ),
+        (
+            "stream_drift", "stream_drift_apply", "drift_chunks",
+            ("poison", "x", 1, 1),
+            "feature string, category string, cnt_ref long, cnt_cur long",
+        ),
+    ],
+    ids=["topk", "mv", "drift"],
+)
+def test_stale_prime_marker_forces_reprime(
+    spark, tmp_path, replay, apply, land_name, poison, schema
+):
+    """A _PRIMED marker left over from a PREVIOUS landing (different
+    prior-file list) must NOT validate the cached state — the apply
+    twin must re-prime and still match the full replay."""
     import os
 
     from etl_verkada_spark.operators.scans import _land_dir
-    from etl_verkada_spark.streaming.upsert import (
-        stream_topk, stream_topk_apply,
-    )
+    from etl_verkada_spark.streaming import upsert
 
+    replay, apply = getattr(upsert, replay), getattr(upsert, apply)
     # build landing + prime once
-    baseline = sorted(map(tuple, stream_topk_apply(spark, SF_SMALL).collect()))
-    land = _land_dir(SF_SMALL, "topk_chunks")
+    baseline = sorted(map(tuple, apply(spark, SF_SMALL).collect()))
+    land = _land_dir(SF_SMALL, land_name)
     primed = os.path.join(land + "_prior_state", "_PRIMED")
     assert os.path.exists(primed)
     # corrupt the marker to simulate a marker from an older landing
@@ -747,36 +779,36 @@ def test_stale_prime_marker_forces_reprime(spark, tmp_path):
         f.write("chunk_99_p00.parquet\nchunk_99_p01.parquet")
     # poison the cached state so ONLY a re-prime can produce the right
     # answer (if the stale marker were trusted, the wrong parquet
-    # below would leak into the leaderboard)
+    # below would leak into the result)
     state_dir = land + "_prior_state"
-    spark.createDataFrame(
-        [("poison", 1, 10**15)], "event_type string, event_id long, v_c long"
-    ).coalesce(1).write.mode("append").parquet(state_dir)
-    again = sorted(map(tuple, stream_topk_apply(spark, SF_SMALL).collect()))
+    spark.createDataFrame([poison], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(state_dir)
+    again = sorted(map(tuple, apply(spark, SF_SMALL).collect()))
     assert again == baseline
     assert not any(r[0] == "poison" for r in again)
     # and the re-written marker now records the real prior-file list
     with open(primed) as f:
         assert "chunk_99" not in f.read()
     # full replay still agrees
-    full = sorted(map(tuple, stream_topk(spark, SF_SMALL).collect()))
+    full = sorted(map(tuple, replay(spark, SF_SMALL).collect()))
     assert full == again
 
 
 def test_drift_and_topk_folds_recover_from_mid_write_crash(spark, tmp_path):
-    """The r12 versioned-state rewrite must keep mv_fold's crash
-    contract on both new folds: a fold that died mid-write leaves an
+    """The shared versioned-state fold keeps its crash contract for
+    the drift and top-K families too: a fold that died mid-write leaves an
     uncommitted v{bid} (no _SUCCESS); the at-least-once redelivery must
     rewrite and commit it."""
     import os
 
     from etl_verkada_spark.streaming.upsert import (
-        _mv_latest_version, drift_fold, topk_fold,
+        DRIFT, TOPK, _mv_latest_version, state_fold,
     )
 
     # drift
     sd = str(tmp_path / "drift")
-    fold = drift_fold(sd)
+    fold = state_fold(DRIFT, sd)
     import datetime as dt
     schema = (
         "o_orderkey long, o_orderdate timestamp, o_orderstatus string, "
@@ -807,7 +839,7 @@ def test_drift_and_topk_folds_recover_from_mid_write_crash(spark, tmp_path):
 
     # topk
     st = str(tmp_path / "topk")
-    tfold = topk_fold(st)
+    tfold = state_fold(TOPK, st)
     ev = "event_id long, event_type string, value double"
     tfold(spark.createDataFrame([(1, "t", 5.0)], ev), 0)
     crashed = os.path.join(st, "v1")

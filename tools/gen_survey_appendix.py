@@ -7,13 +7,15 @@ Run after adding/renaming registered queries:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_verkada_spark.registry import build_registry  # noqa: E402
 
-SURVEY = "/root/repo/SURVEY.md"
+SURVEY = os.path.join(ROOT, "SURVEY.md")
 MARK = "## Appendix A"
 
 

@@ -12,13 +12,14 @@ too.  See etl_verkada_spark/compare.py.  Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_verkada_spark.catalog import TABLES
 from etl_verkada_spark.compare import compare_frames
