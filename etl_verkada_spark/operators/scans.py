@@ -20,11 +20,15 @@ keyset form is the one to use on big tables.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table, table_validated
 from ..registry import spec
+from ..session import _PACKAGE_ROOT
 
 PAGE_SIZE = 50  # reference page size, task.ts:119
 
@@ -202,8 +206,16 @@ LAND_DDL = (
 
 
 def _land_dir(sf_dir: str, fmt: str) -> str:
-    token = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return f"/tmp/spark_graft_land/{fmt}_{token}"
+    """The landing dir of ``fmt`` for ``sf_dir`` under ``/tmp/spark_graft_land``.
+
+    Keyed on the data dir's basename, for reading, and a short hash of its
+    real path and of this checkout's root: two data dirs with one basename,
+    or two checkouts, each get their own landing and state dirs.
+    """
+    name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    where = f"{os.path.realpath(sf_dir)}\0{_PACKAGE_ROOT}"
+    digest = hashlib.sha1(where.encode()).hexdigest()[:10]
+    return f"/tmp/spark_graft_land/{fmt}_{name}-{digest}"
 
 
 def pruned_land_path(sf_dir: str) -> str:
@@ -211,9 +223,6 @@ def pruned_land_path(sf_dir: str) -> str:
     of the source file (mtime+size) so regenerated testdata can never be
     shadowed by a stale landing (ADVICE r2). Shared with the plan-shape
     test so query and test always resolve the same directory."""
-    import hashlib
-    import os
-
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
     return _land_dir(sf_dir, f"events_by_type_{fp}")
@@ -269,21 +278,15 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    import os
-
     path = pruned_land_path(sf_dir)
-    # GC siblings keyed on a STALE fingerprint of the same sf_dir token,
-    # plus the pre-fingerprint legacy dir (regenerated testdata would
-    # otherwise accumulate /tmp copies unboundedly, ADVICE r3)
+    # GC the landings of this sf_dir keyed on a stale fingerprint, or
+    # regenerated testdata would accumulate /tmp copies unboundedly.
     import glob
     import shutil
 
-    token = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    for old in glob.glob(f"/tmp/spark_graft_land/events_by_type_*_{token}"):
-        if old != path:
-            shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(f"/tmp/spark_graft_land/events_by_type_{token}",
-                  ignore_errors=True)
+    for stale in glob.glob(_land_dir(sf_dir, "events_by_type_*")):
+        if stale != path:
+            shutil.rmtree(stale, ignore_errors=True)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         src.write.mode("overwrite").partitionBy("event_type").parquet(path)
     part = spark.read.parquet(path).filter(
@@ -398,7 +401,6 @@ def scan_manifest_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation is free — readers of v1 never see v2's files.
     """
     import json as _json
-    import os
 
     src = table(spark, sf_dir, "orders")
     root = _land_dir(sf_dir, "manifest_log")
@@ -465,8 +467,6 @@ def maintain_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips the rewrite on re-run, so the bench measures the READ-side
     win, not the rewrite.
     """
-    import hashlib
-    import os
     import shutil
 
     src = table(spark, sf_dir, "orders").select(*LAND_COLS)

@@ -1125,6 +1125,20 @@ def test_manifest_scan_snapshot_isolation(spark):
     assert len(keys) == n_committed
 
 
+def test_land_dir_is_keyed_on_the_data_dirs_real_path(tmp_path):
+    """Two data dirs with one basename land apart; one dir always lands
+    in the same place."""
+    from etl_verkada_spark.operators.scans import _land_dir
+
+    a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    a.mkdir(parents=True)
+    b.mkdir(parents=True)
+    assert _land_dir(str(a), "csv") != _land_dir(str(b), "csv")
+    assert _land_dir(str(a), "csv") == _land_dir(str(a), "csv")
+    assert _land_dir(str(a), "csv") == _land_dir(f"{a}/", "csv")
+    assert "/csv_sf-" in _land_dir(str(a), "csv")
+
+
 def test_manifest_log_head_sorts_numerically(spark):
     """manifest_v10 must beat manifest_v2 (lexicographic order would
     pick v2): write a v10 beside the standard v1/v2 and assert the head
