@@ -30,6 +30,7 @@ aborts the run on shape drift.
 from __future__ import annotations
 
 import os
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -123,6 +124,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the full catalog as a dict."""
     return {name: table(spark, sf_dir, name) for name in TABLES}
+
+
+def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run ``text`` on Spark over the catalog tables it names.
+
+    Each table named as a whole word is read through :func:`table` and
+    registered as a temp view under its bare name, replacing any view of
+    that name from an earlier call, at this or another scale. That is
+    safe because ``spark.sql`` resolves views when it analyzes the
+    text: a DataFrame returned earlier keeps the tables it was built on.
+    """
+    for name in TABLES:
+        if re.search(rf"\b{name}\b", text):
+            table(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(text)
 
 
 # ---------------------------------------------------------------------------

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
-from ..catalog import table
+from ..catalog import sql
 from ..registry import spec
 
 
@@ -36,11 +36,10 @@ class BigramUDTF:
 
 def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL table-function expansion: one row per (doc, bigram)."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("udtf_docs")
     spark.udtf.register("bigrams", BigramUDTF)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         SELECT d.doc_id, b.pos, b.ngram
-        FROM udtf_docs d, LATERAL bigrams(d.text) b
+        FROM documents d, LATERAL bigrams(d.text) b
     """)
 
 

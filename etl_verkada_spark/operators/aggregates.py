@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 
 def dec_sum(col: str, scale: str = "decimal(28,2)", alias: str | None = None):
@@ -677,21 +677,9 @@ GROUP BY o_orderpriority
 """
 
 
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beyond-reference: explicit GROUPING SETS (the general form rollup
-    and cube specialize). SQL surface via a temp view; Catalyst expands
-    to a single Expand + hash aggregate — one shuffle for all sets."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("gs_orders")
-    return spark.sql("""
-        SELECT
-          o_orderstatus,
-          o_orderpriority,
-          COUNT(*) AS n_orders
-        FROM gs_orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """)
-
-
+# Explicit GROUPING SETS, the general form ROLLUP and CUBE specialize:
+# Catalyst expands to a single Expand + hash aggregate, one shuffle for
+# all sets.
 ORACLE_AGG_GROUPING_SETS = """
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
 FROM orders
@@ -1622,8 +1610,8 @@ QUERIES = {
         agg_stats, ORACLE_AGG_STATS, "beyond",
         doc="variance/stddev/corr from exact integer moments",
     ),
-    "agg_grouping_sets": spec(
-        agg_grouping_sets, ORACLE_AGG_GROUPING_SETS, "beyond",
+    "agg_grouping_sets": sql_spec(
+        ORACLE_AGG_GROUPING_SETS, "beyond",
         doc="GROUPING SETS via single Expand + hash aggregate",
     ),
     "agg_salted": spec(

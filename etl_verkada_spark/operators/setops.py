@@ -2,31 +2,13 @@
 
 UNION DISTINCT / INTERSECT / EXCEPT each plan as a hash aggregate or
 join over the shuffled key set; partial aggregation keeps the shuffle
-proportional to distinct keys, not rows.
+proportional to distinct keys, not rows. Each query is its oracle's SQL
+text, run by Spark through ``catalog.sql``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..catalog import table
-from ..registry import spec
-
-
-def _cust_keys(spark, sf_dir) -> DataFrame:
-    return table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("key")
-    )
-
-
-def _order_keys(spark, sf_dir) -> DataFrame:
-    return table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("key"))
-
-
-def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION DISTINCT of customer keys and order customer keys."""
-    return _cust_keys(spark, sf_dir).union(_order_keys(spark, sf_dir)).distinct()
+from ..registry import sql_spec
 
 
 ORACLE_SET_UNION = """
@@ -36,11 +18,6 @@ SELECT o_custkey AS key FROM orders
 """
 
 
-def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT: customers that actually placed orders."""
-    return _cust_keys(spark, sf_dir).intersect(_order_keys(spark, sf_dir))
-
-
 ORACLE_SET_INTERSECT = """
 SELECT c_custkey AS key FROM customer
 INTERSECT
@@ -48,16 +25,9 @@ SELECT o_custkey AS key FROM orders
 """
 
 
-def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT: customers with no orders (relational anti-join twin).
-
-    ``subtract`` is SQL EXCEPT (distinct) semantics; ``exceptAll`` would
-    be EXCEPT ALL (bag difference) and disagrees when a key occurs on
-    both sides with different multiplicities.
-    """
-    return _cust_keys(spark, sf_dir).subtract(_order_keys(spark, sf_dir))
-
-
+# Customers with no orders (the relational anti-join's twin). EXCEPT is
+# distinct-set difference; EXCEPT ALL (bag difference, below) disagrees
+# when a key occurs on both sides with different multiplicities.
 ORACLE_SET_EXCEPT = """
 SELECT c_custkey AS key FROM customer
 EXCEPT
@@ -65,17 +35,11 @@ SELECT o_custkey AS key FROM orders
 """
 
 
-def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL: bag difference — each order 'consumes' one occurrence.
-
-    Distinct-set EXCEPT (above) can't express per-occurrence accounting;
-    bag semantics matter whenever multiplicity is data (inventory,
-    retries, quota). Spark plans exceptAll as a counted anti-join
-    (generate + aggregate), one shuffle.
-    """
-    return _order_keys(spark, sf_dir).exceptAll(_cust_keys(spark, sf_dir))
-
-
+# Bag difference: each customer row consumes one occurrence of its key.
+# Distinct-set EXCEPT can't express per-occurrence accounting; bag
+# semantics matter whenever multiplicity is data (inventory, retries,
+# quota). Spark plans EXCEPT ALL as a counted anti-join (generate +
+# aggregate), one shuffle.
 ORACLE_SET_EXCEPT_ALL = """
 SELECT o_custkey AS key FROM orders
 EXCEPT ALL
@@ -83,11 +47,7 @@ SELECT c_custkey AS key FROM customer
 """
 
 
-def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL: bag intersection, min of the two multiplicities."""
-    return _order_keys(spark, sf_dir).intersectAll(_cust_keys(spark, sf_dir))
-
-
+# Bag intersection: each key keeps the smaller of its two multiplicities.
 ORACLE_SET_INTERSECT_ALL = """
 SELECT o_custkey AS key FROM orders
 INTERSECT ALL
@@ -96,21 +56,17 @@ SELECT c_custkey AS key FROM customer
 
 
 QUERIES = {
-    "set_union": spec(
-        set_union, ORACLE_SET_UNION, "beyond", doc="UNION DISTINCT"
+    "set_union": sql_spec(ORACLE_SET_UNION, "beyond", doc="UNION DISTINCT"),
+    "set_intersect": sql_spec(
+        ORACLE_SET_INTERSECT, "beyond", doc="INTERSECT"
     ),
-    "set_intersect": spec(
-        set_intersect, ORACLE_SET_INTERSECT, "beyond", doc="INTERSECT"
-    ),
-    "set_except": spec(
-        set_except, ORACLE_SET_EXCEPT, "beyond", doc="EXCEPT"
-    ),
-    "set_except_all": spec(
-        set_except_all, ORACLE_SET_EXCEPT_ALL, "beyond",
+    "set_except": sql_spec(ORACLE_SET_EXCEPT, "beyond", doc="EXCEPT"),
+    "set_except_all": sql_spec(
+        ORACLE_SET_EXCEPT_ALL, "beyond",
         doc="EXCEPT ALL (bag difference, counted anti-join)",
     ),
-    "set_intersect_all": spec(
-        set_intersect_all, ORACLE_SET_INTERSECT_ALL, "beyond",
+    "set_intersect_all": sql_spec(
+        ORACLE_SET_INTERSECT_ALL, "beyond",
         doc="INTERSECT ALL (bag intersection)",
     ),
 }

@@ -11,9 +11,9 @@ decorrelation is exercised end-to-end:
 * scalar  -> one-row aggregate joined as a broadcast (cross) — computed
   once, not per row.
 
-These run as SQL on temp views (the point is the SQL surface; the
-DataFrame forms live in joins.py). Temp view names are prefixed to avoid
-collisions with other operators sharing the session.
+Except ``subquery_all``, each query is its oracle's SQL text, run by
+Spark through ``catalog.sql`` (the point is the SQL surface; the
+DataFrame forms live in joins.py).
 """
 
 from __future__ import annotations
@@ -22,33 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    vname = f"subq_{name}"
-    table(spark, sf_dir, name).createOrReplaceTempView(vname)
-    return vname
-
-
-def subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with at least one open order (correlated EXISTS).
-
-    Catalyst decorrelates to a left-semi join on c_custkey — verify with
-    .explain(): no per-row subquery execution exists in the plan.
-    """
-    c = _view(spark, sf_dir, "customer")
-    o = _view(spark, sf_dir, "orders")
-    return spark.sql(f"""
-        SELECT c_custkey, c_name
-        FROM {c} c
-        WHERE EXISTS (
-          SELECT 1 FROM {o} o
-          WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O'
-        )
-    """)
-
-
+# Catalyst decorrelates the correlated EXISTS to a left-semi join on
+# c_custkey: no per-row subquery execution exists in the plan.
 ORACLE_SUBQUERY_EXISTS = """
 SELECT c_custkey, c_name
 FROM customer c
@@ -59,17 +37,6 @@ WHERE EXISTS (
 """
 
 
-def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lineitems of large parts (uncorrelated IN -> left-semi join)."""
-    li = _view(spark, sf_dir, "lineitem")
-    p = _view(spark, sf_dir, "part")
-    return spark.sql(f"""
-        SELECT l_orderkey, l_partkey, l_quantity
-        FROM {li}
-        WHERE l_partkey IN (SELECT p_partkey FROM {p} WHERE p_size > 40)
-    """)
-
-
 ORACLE_SUBQUERY_IN = """
 SELECT l_orderkey, l_partkey, l_quantity
 FROM lineitem
@@ -77,21 +44,9 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
 """
 
 
-def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders above half the maximum price (scalar subquery).
-
-    MAX is exact on doubles (no accumulation), so the predicate boundary
-    is bit-identical in both engines — the reason this query uses MAX/2
-    rather than AVG (an order-sensitive double sum).
-    """
-    o = _view(spark, sf_dir, "orders")
-    return spark.sql(f"""
-        SELECT o_orderkey, o_totalprice
-        FROM {o}
-        WHERE o_totalprice > (SELECT MAX(o_totalprice) / 2 FROM {o})
-    """)
-
-
+# MAX is exact on doubles (no accumulation), so the predicate boundary
+# is bit-identical in both engines: the reason this query uses MAX/2
+# rather than AVG (an order-sensitive double sum).
 ORACLE_SUBQUERY_SCALAR = """
 SELECT o_orderkey, o_totalprice
 FROM orders
@@ -99,33 +54,13 @@ WHERE o_totalprice > (SELECT MAX(o_totalprice) / 2 FROM orders)
 """
 
 
-def subquery_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery: top-2 orders PER customer.
-
-    The per-row-subplan operator (Postgres LATERAL / APPLY): for each
-    outer row, the inner SELECT sees that row's columns. Catalyst
-    DECORRELATES it — the plan is a window rank over the join, not an
-    inner query per customer — which is the entire reason the construct
-    survives at 100 TB: the naive per-row execution is O(customers)
-    subplans; the decorrelated form is one join + one window. Total
-    ordering (price desc, orderkey) makes the top-2 deterministic.
-    """
-    from ..catalog import table
-
-    table(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
-    return spark.sql("""
-        SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM lat_customer c, LATERAL (
-          SELECT o_orderkey, o_totalprice
-          FROM lat_orders o
-          WHERE o.o_custkey = c.c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey
-          LIMIT 2
-        ) t
-    """)
-
-
+# The per-row-subplan operator (Postgres LATERAL / APPLY): for each
+# outer row, the inner SELECT sees that row's columns. Catalyst
+# decorrelates it (the plan is a window rank over the join, not an
+# inner query per customer), which is the entire reason the construct
+# survives at 100 TB: the naive per-row execution is O(customers)
+# subplans; the decorrelated form is one join + one window. Total
+# ordering (price desc, orderkey) makes the top-2 deterministic.
 ORACLE_SUBQUERY_LATERAL = """
 SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
 FROM customer c, LATERAL (
@@ -184,41 +119,18 @@ WHERE s_acctbal > ALL (
 """
 
 
-def subquery_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN with a NULL-tainted subquery — the three-valued-logic
-    trap every SQL engine must get right and naive anti-join rewrites
-    get wrong: one NULL in the list makes ``x NOT IN (list)`` UNKNOWN
-    for every x, so the tainted predicate admits ZERO rows, while the
-    null-filtered form is a plain anti join.
-
-    One row pins all three counts side by side: the corpus size, the
-    NULL-tainted NOT IN count (must be 0 — Spark plans this as a
-    null-aware anti join, NAAJ), and the null-filtered NOT IN count
-    (customers with no non-P order — ordinary left-anti). The driver's
-    hash check proves both engines implement the same standard
-    semantics, which is exactly the property a user migrating
-    hand-written SQL onto this engine needs guaranteed.
-
-    At 100 TB: the null-filtered form is a shuffled left-anti join
-    (scales like J4); the tainted form degenerates to a broadcast
-    nested loop BY SEMANTIC NECESSITY (any NULL anywhere decides every
-    row) — the docstring-level advice is what every warehouse gives:
-    write NOT EXISTS, which this engine also ships (subquery_exists).
-    """
-    c = _view(spark, sf_dir, "customer")
-    o = _view(spark, sf_dir, "orders")
-    return spark.sql(f"""
-        SELECT
-          (SELECT COUNT(*) FROM {c}) AS n_customers,
-          (SELECT COUNT(*) FROM {c} WHERE c_custkey NOT IN
-             (SELECT CASE WHEN o_orderstatus = 'P' THEN NULL
-                          ELSE o_custkey END FROM {o})) AS n_tainted,
-          (SELECT COUNT(*) FROM {c} WHERE c_custkey NOT IN
-             (SELECT o_custkey FROM {o} WHERE o_orderstatus <> 'P'))
-            AS n_filtered
-    """)
-
-
+# NOT IN with a NULL-tainted subquery: the three-valued-logic trap every
+# SQL engine must get right and naive anti-join rewrites get wrong. One
+# NULL in the list makes ``x NOT IN (list)`` UNKNOWN for every x, so the
+# tainted predicate admits ZERO rows, while the null-filtered form is a
+# plain anti join. One row pins the corpus size, the tainted count (0:
+# Spark plans a null-aware anti join, NAAJ) and the null-filtered count
+# (customers with no non-P order, an ordinary left-anti).
+#
+# At 100 TB the null-filtered form is a shuffled left-anti join (scales
+# like J4); the tainted form degenerates to a broadcast nested loop BY
+# SEMANTIC NECESSITY (any NULL anywhere decides every row). The advice
+# is what every warehouse gives: write NOT EXISTS (subquery_exists).
 ORACLE_SUBQUERY_NOT_IN = """
 SELECT
   (SELECT COUNT(*) FROM customer) AS n_customers,
@@ -232,20 +144,20 @@ SELECT
 
 
 QUERIES = {
-    "subquery_exists": spec(
-        subquery_exists, ORACLE_SUBQUERY_EXISTS, "beyond",
+    "subquery_exists": sql_spec(
+        ORACLE_SUBQUERY_EXISTS, "beyond",
         doc="correlated EXISTS, decorrelated to left-semi",
     ),
-    "subquery_in": spec(
-        subquery_in, ORACLE_SUBQUERY_IN, "beyond",
+    "subquery_in": sql_spec(
+        ORACLE_SUBQUERY_IN, "beyond",
         doc="IN-subquery -> null-aware left-semi",
     ),
-    "subquery_scalar": spec(
-        subquery_scalar, ORACLE_SUBQUERY_SCALAR, "beyond",
+    "subquery_scalar": sql_spec(
+        ORACLE_SUBQUERY_SCALAR, "beyond",
         doc="scalar subquery computed once (broadcast)",
     ),
-    "subquery_lateral": spec(
-        subquery_lateral, ORACLE_SUBQUERY_LATERAL, "beyond",
+    "subquery_lateral": sql_spec(
+        ORACLE_SUBQUERY_LATERAL, "beyond",
         doc="correlated LATERAL top-N per row, decorrelated by Catalyst",
     ),
     "subquery_all": spec(
@@ -253,8 +165,8 @@ QUERIES = {
         doc="quantified > ALL comparison, manually decorrelated to "
             "max-grid + null-armed left join",
     ),
-    "subquery_not_in": spec(
-        subquery_not_in, ORACLE_SUBQUERY_NOT_IN, "beyond",
+    "subquery_not_in": sql_spec(
+        ORACLE_SUBQUERY_NOT_IN, "beyond",
         doc="NOT IN three-valued-logic trap: NULL-tainted list admits "
             "zero rows (null-aware anti join) vs the filtered anti join",
     ),

@@ -16,24 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
-
-
-def win_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """row_number: latest order per customer (deterministic tie-break)."""
-    o = table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            F.col("o_orderkey").alias("last_orderkey"),
-            "o_totalprice",
-        )
-    )
+from ..registry import spec, sql_spec
 
 
 ORACLE_WIN_ROWNUM = """
@@ -48,19 +31,6 @@ FROM (
 )
 WHERE rn = 1
 """
-
-
-def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank: top-3 orders by price per priority class."""
-    o = table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.withColumn("rnk", F.rank().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rnk")
-    )
 
 
 ORACLE_WIN_RANK = """
@@ -142,40 +112,23 @@ FROM events
 """
 
 
-def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beyond-reference: distribution window functions — ntile /
-    percent_rank / cume_dist over customer balances per segment.
-
-    percent_rank and cume_dist are count ratios ((rank-1)/(n-1), a single
-    double division of exact integers), so they compare bit-identically
-    across engines; the ORDER BY is made total with the key column.
-
-    Parallelism ceiling (r11 verdict item 6, deliberate): the window
-    partitions by ``c_mktsegment`` — 5 values — so the sort runs on at
-    most 5 tasks at ANY scale; that is inherent to exact distribution
-    functions over whole segments, not a plan defect (every engine
-    must totally order each segment somewhere). The scale path when a
-    segment outgrows one task is the two-phase range-partitioned rank
-    in :func:`~..operators.sorts.bucketed_global_rank` — range-split
-    the segment, rank within splits, add broadcast per-split offsets;
-    ntile/percent_rank/cume_dist are then count ratios off that rank
-    and the per-segment counts. At the bench SFs the 5-task form is
-    both faster (no extra exchange) and the shape DuckDB runs, so the
-    ratio compares like-for-like; its sf1 timing spread (the r11
-    'unstable' flag) is scheduling variance on 5 long tasks, priced by
-    the two-run agreement protocol, not plan instability.
-    """
-    c = table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    return c.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
+# percent_rank and cume_dist are count ratios ((rank-1)/(n-1), a single
+# double division of exact integers), so they compare bit-identically
+# across engines; the ORDER BY is made total with the key column.
+#
+# Parallelism ceiling (deliberate): the window partitions by
+# c_mktsegment, 5 values, so the sort runs on at most 5 tasks at ANY
+# scale. That is inherent to exact distribution functions over whole
+# segments, not a plan defect (every engine must totally order each
+# segment somewhere). The scale path when a segment outgrows one task
+# is the two-phase range-partitioned rank in
+# sorts.bucketed_global_rank: range-split the segment, rank within
+# splits, add broadcast per-split offsets; ntile/percent_rank/cume_dist
+# are then count ratios off that rank and the per-segment counts. At
+# the bench SFs the 5-task form is both faster (no extra exchange) and
+# the shape DuckDB runs, so the ratio compares like-for-like; its sf1
+# timing spread is scheduling variance on 5 long tasks, priced by the
+# two-run agreement protocol, not plan instability.
 ORACLE_WIN_NTILE = """
 SELECT
   c_custkey,
@@ -188,29 +141,10 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
 """
 
 
-def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beyond-reference: first_value / last_value / nth_value navigation.
-
-    The frame MUST be the full partition (unbounded both ways) for
-    last_value to mean the partition's last row — the default frame
-    (unbounded preceding .. current row) silently makes last_value ==
-    current row, the classic window footgun both engines share.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_orderkey")
-        .orderBy("l_linenumber", "l_quantity", "l_extendedprice", "l_partkey")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.first_value(F.col("l_quantity")).over(w).alias("first_qty"),
-        F.last_value(F.col("l_quantity")).over(w).alias("last_qty"),
-        F.nth_value(F.col("l_quantity"), 2).over(w).alias("second_qty"),
-    )
-
-
+# The frame MUST be the full partition (unbounded both ways) for
+# LAST_VALUE to mean the partition's last row: the default frame
+# (unbounded preceding .. current row) silently makes LAST_VALUE the
+# current row, the classic window footgun both engines share.
 ORACLE_WIN_FIRST_LAST = """
 SELECT
   l_orderkey,
@@ -676,12 +610,12 @@ GROUP BY epoch_day
 
 
 QUERIES = {
-    "win_rownum": spec(
-        win_rownum, ORACLE_WIN_ROWNUM, "beyond", "reference:J2",
+    "win_rownum": sql_spec(
+        ORACLE_WIN_ROWNUM, "beyond", "reference:J2",
         doc="row_number top-1 per group (the last-wins primitive)",
     ),
-    "win_rank": spec(
-        win_rank, ORACLE_WIN_RANK, "beyond",
+    "win_rank": sql_spec(
+        ORACLE_WIN_RANK, "beyond",
         doc="rank top-N per group",
     ),
     "win_frame": spec(
@@ -692,16 +626,16 @@ QUERIES = {
         win_lag, ORACLE_WIN_LAG, "beyond",
         doc="lag event deltas per user",
     ),
-    "win_ntile": spec(
-        win_ntile, ORACLE_WIN_NTILE, "beyond",
+    "win_ntile": sql_spec(
+        ORACLE_WIN_NTILE, "beyond",
         doc="ntile/percent_rank/cume_dist distribution windows",
     ),
     "win_range_interval": spec(
         win_range_interval, ORACLE_WIN_RANGE_INTERVAL, "beyond",
         doc="time-based RANGE frame: rolling 10-minute sum per user",
     ),
-    "win_first_last": spec(
-        win_first_last, ORACLE_WIN_FIRST_LAST, "beyond",
+    "win_first_last": sql_spec(
+        ORACLE_WIN_FIRST_LAST, "beyond",
         doc="first/last/nth_value navigation over full-partition frames",
     ),
     "win_sessionize": spec(

@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import sql
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -67,6 +69,19 @@ def spec(
     return QuerySpec(fn=fn, oracle=oracle, tags=frozenset(tags), doc=doc)
 
 
+def sql_spec(text: str, *tags: str, doc: str = "") -> QuerySpec:
+    """A spec whose callable runs its oracle ``text`` on Spark through
+    :func:`.catalog.sql`, tagged ``"sql-shared"``: the oracle check is
+    then two engines agreeing on one text, not an independent
+    implementation, so use it only where the callable would restate
+    its oracle."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return sql(spark, sf_dir, text)
+
+    return spec(fn, text, "sql-shared", *tags, doc=doc)
+
+
 # The correctness driver hard-checks only the FIRST 50 insertion-order
 # entries of build_registry(); PRIORITY_ORDER names those 50.
 #
@@ -83,6 +98,22 @@ PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
     # (b) implementation changed, most recent first
+    "set_union",
+    "set_intersect",
+    "set_except",
+    "set_except_all",
+    "set_intersect_all",
+    "win_rownum",
+    "win_rank",
+    "win_ntile",
+    "win_first_last",
+    "subquery_exists",
+    "subquery_in",
+    "subquery_scalar",
+    "subquery_lateral",
+    "subquery_not_in",
+    "agg_grouping_sets",
+    "udtf_bigrams",
     "stream_mv_refresh",
     "stream_mv_apply",
     "stream_drift",
@@ -117,22 +148,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "ts_gapfill",
     "ts_interval_merge",
     "ts_rolling_median",
-    "ts_rollup_hierarchy",
-    "ts_seasonal_baseline",
-    "validate_expectations",
-    "win_pattern_match",
-    "win_sessionize",
-    "agg_collect",
-    "agg_gini",
-    "agg_mode",
-    "agg_salted",
-    "cdc_snapshot_diff",
-    "dq_benford",
-    "fx_math",
-    "geo_geofence_join",
-    "join_bucketed",
-    "join_range",
-    "llm_clean_pipeline",
 )
 
 

@@ -17,6 +17,7 @@ from etl_verkada_spark.operators.joins import join_asof, join_broadcast_left
 from etl_verkada_spark.operators.scans import keyset_pages, validate_json
 from etl_verkada_spark.operators.sorts import topk
 from etl_verkada_spark.catalog import TABLES, table_validated
+from etl_verkada_spark.registry import build_registry
 
 from .conftest import SF_SMALL
 
@@ -216,9 +217,7 @@ def test_range_join_matches_naive_theta(spark):
 # --- distribution windows ----------------------------------------------------
 
 def test_ntile_quartiles_balanced(spark):
-    from etl_verkada_spark.operators.windows import win_ntile
-
-    rows = win_ntile(spark, SF_SMALL).collect()
+    rows = build_registry()["win_ntile"].fn(spark, SF_SMALL).collect()
     by_seg = {}
     for r in rows:
         by_seg.setdefault(r["c_mktsegment"], []).append(r["quartile"])
@@ -230,9 +229,7 @@ def test_ntile_quartiles_balanced(spark):
 # --- physical plans of the round-1 additions ---------------------------------
 
 def test_exists_subquery_decorrelates_to_semi_join(spark):
-    from etl_verkada_spark.operators.subqueries import subquery_exists
-
-    plan = plan_of(subquery_exists(spark, SF_SMALL))
+    plan = plan_of(build_registry()["subquery_exists"].fn(spark, SF_SMALL))
     assert "LeftSemi" in plan, plan  # no per-row subquery execution
 
 
@@ -257,9 +254,7 @@ def test_pivot_is_single_aggregate_pass(spark):
 
 
 def test_grouping_sets_is_one_expand(spark):
-    from etl_verkada_spark.operators.aggregates import agg_grouping_sets
-
-    plan = plan_of(agg_grouping_sets(spark, SF_SMALL))
+    plan = plan_of(build_registry()["agg_grouping_sets"].fn(spark, SF_SMALL))
     assert "Expand" in plan and plan.count("Exchange") == 1, plan
 
 
@@ -2384,9 +2379,7 @@ def test_join_large_plan_broadcasts_pruned_orders(spark):
 def test_not_in_null_trap_counts(spark):
     """The NULL-tainted NOT IN admits zero rows; the filtered form is a
     plain anti join and must be >= 0 with n_customers an upper bound."""
-    from etl_verkada_spark.operators.subqueries import subquery_not_in
-
-    r = subquery_not_in(spark, SF_SMALL).collect()[0]
+    r = build_registry()["subquery_not_in"].fn(spark, SF_SMALL).collect()[0]
     assert r["n_tainted"] == 0
     assert 0 <= r["n_filtered"] <= r["n_customers"]
 
@@ -2631,14 +2624,16 @@ def test_memo_hit_read_equals_inferred_read(spark, name):
 
 def test_events_nanos_ts_read_as_micros(spark, tmp_path):
     """A TIMESTAMP(NANOS) events file reads as long ns (nanosAsLong) and
-    leaves the catalog, memo hit or miss, batch or stream, as a
-    microsecond timestamp_ntz with the same instants."""
+    leaves the catalog, memo hit or miss, batch, SQL or stream, as a
+    microsecond timestamp_ntz with the same instants. A SQL read binds
+    its views at analysis: re-registering ``events`` at another scale
+    leaves an earlier DataFrame on its own file."""
     import datetime as dt
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from etl_verkada_spark.catalog import table
+    from etl_verkada_spark.catalog import sql, table
     from etl_verkada_spark.streaming.stateful import events_stream
 
     ts = [dt.datetime(2024, 1, 1, 0, 0, 0, 123456), dt.datetime(2024, 1, 2)]
@@ -2646,12 +2641,20 @@ def test_events_nanos_ts_read_as_micros(spark, tmp_path):
         pa.table({"user_id": [1, 2], "ts": pa.array(ts, pa.timestamp("ns"))}),
         tmp_path / "events.parquet",
     )
-    for _ in range(2):
-        df = table(spark, str(tmp_path), "events")
+    text = "SELECT ts FROM events"
+    reads = [  # memo miss, then hits
+        table(spark, str(tmp_path), "events"),
+        table(spark, str(tmp_path), "events"),
+        sql(spark, str(tmp_path), text),
+    ]
+    for df in reads:
         assert dict(df.dtypes)["ts"] == "timestamp_ntz"
         assert sorted(r["ts"] for r in df.collect()) == ts
     stream = events_stream(spark, str(tmp_path))
     assert dict(stream.dtypes)["ts"] == "timestamp_ntz"
+
+    assert sql(spark, SF_SMALL, text).count() > 2
+    assert sorted(r["ts"] for r in reads[-1].collect()) == ts
 
 
 def test_conf_set_after_first_read_survives_later_reads(spark):
@@ -2745,7 +2748,6 @@ def test_registry_builds_run_no_jobs(spark):
     named allow-list, each within its measured count."""
     from etl_verkada_spark.catalog import table
     from etl_verkada_spark.checkpoints import release
-    from etl_verkada_spark.registry import build_registry
 
     for name in TABLES:
         table(spark, SF_SMALL, name)
