@@ -26,8 +26,8 @@ Only EAGER (or already-materialized) checkpoints may be released:
 localCheckpoint TRUNCATES lineage, so unpersisting blocks that a
 not-yet-materialized lazy checkpoint still needs would make that plan
 unrecomputable (job failure, not a recompute). ``checkpoint_replacing``
-therefore only auto-releases when the new checkpoint is eager; lazy
-loops release manually after their next materialization point.
+therefore always checkpoints eagerly; lazy loops release manually after
+their next materialization point.
 """
 
 from __future__ import annotations
@@ -65,20 +65,15 @@ def release(df: DataFrame | None) -> bool:
 
 
 def checkpoint_replacing(
-    df: DataFrame,
-    replacing: DataFrame | None = None,
-    eager: bool = True,
+    df: DataFrame, replacing: DataFrame | None = None
 ) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + release of the checkpoint it
+    """``df.localCheckpoint(eager=True)`` + release of the checkpoint it
     supersedes.
 
-    The release happens AFTER the new checkpoint materializes (eager
-    path), at which point the old blocks are provably unreferenced by
-    it. With ``eager=False`` the new plan may still need the old
-    blocks at first materialization, so ``replacing`` is NOT released
-    — callers of lazy loops release manually past their next action.
+    The release happens AFTER the new checkpoint materializes, at which
+    point the old blocks are provably unreferenced by it.
     """
-    out = df.localCheckpoint(eager=eager)
-    if eager and replacing is not None:
+    out = df.localCheckpoint(eager=True)
+    if replacing is not None:
         release(replacing)
     return out

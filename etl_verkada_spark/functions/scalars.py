@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 
 def fx_string(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,25 +80,9 @@ FROM orders
 """
 
 
-def fx_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5/F6: arithmetic, rounding, IEEE-exact math + rounded ln."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        # exact decimal product (price has 2 true decimals), no rounding —
-        # ROUND(double, 2) would hit .5 boundaries where engines disagree
-        (F.col("l_extendedprice").cast("decimal(18,2)") * F.lit("0.9").cast("decimal(2,1)"))
-        .cast("double")
-        .alias("discounted"),
-        F.abs(F.col("l_discount") - 0.05).alias("disc_dev"),
-        F.floor("l_quantity").cast("long").alias("qty_floor"),
-        F.ceil("l_quantity").cast("long").alias("qty_ceil"),
-        F.sqrt("l_extendedprice").alias("price_sqrt"),
-        F.round(F.log(F.col("l_quantity") + 1.0), 6).alias("qty_ln6"),
-    )
-
-
+# The discounted price is an exact decimal product (price has 2 true
+# decimals), unrounded: ROUND(double, 2) would hit .5 boundaries where
+# engines disagree.
 ORACLE_FX_MATH = """
 SELECT
   l_orderkey,
@@ -261,24 +245,8 @@ FROM documents
 """
 
 
-def fx_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beyond-reference: conditional/null family — coalesce, nullif,
-    least/greatest, nvl2-style branch. The null-propagation contract is
-    the part worth pinning cross-engine."""
-    o = table(spark, sf_dir, "orders")
-    clerk_bonus = F.nullif(F.col("o_totalprice"), F.lit(0.0))
-    return o.select(
-        "o_orderkey",
-        F.coalesce(
-            F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")),
-            F.lit(-1.0),
-        ).alias("final_price"),
-        F.least(F.col("o_orderkey"), F.col("o_custkey")).alias("min_key"),
-        F.greatest(F.col("o_orderkey"), F.col("o_custkey")).alias("max_key"),
-        F.isnull(clerk_bonus).alias("zero_price"),
-    )
-
-
+# The null-propagation contract of the conditional family is the part
+# worth pinning cross-engine.
 ORACLE_FX_COND = """
 SELECT
   o_orderkey,
@@ -369,8 +337,8 @@ QUERIES = {
         fx_date, ORACLE_FX_DATE, "reference:F9",
         doc="time extraction/truncation/day arithmetic, task.ts:51,55",
     ),
-    "fx_math": spec(
-        fx_math, ORACLE_FX_MATH, "reference:F5", "reference:F6",
+    "fx_math": sql_spec(
+        ORACLE_FX_MATH, "reference:F5", "reference:F6",
         doc="arithmetic/rounding/IEEE math, task.ts:126-127",
     ),
     "fx_array": spec(
@@ -389,8 +357,8 @@ QUERIES = {
         fx_regex, ORACLE_FX_REGEX, "beyond",
         doc="regex extract/replace/match/split (RE2-compatible subset)",
     ),
-    "fx_cond": spec(
-        fx_cond, ORACLE_FX_COND, "beyond",
+    "fx_cond": sql_spec(
+        ORACLE_FX_COND, "beyond",
         doc="conditional/null family: coalesce/nullif/least/greatest",
     ),
     "fx_hash": spec(

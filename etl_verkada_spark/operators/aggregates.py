@@ -71,23 +71,9 @@ def unscale(sum_long: F.Column, ndec: int = 2) -> F.Column:
     return (sum_long.cast("decimal(38,0)") / F.lit(10 ** ndec)).cast("double")
 
 
-def agg_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: COUNT consumed by control flow (pagination bound, task.ts:127)."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.filter(F.col("l_discount") > F.lit(0.02)).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-
-
 ORACLE_AGG_COUNT = """
 SELECT COUNT(*) AS cnt FROM lineitem WHERE l_discount > 0.02
 """
-
-
-def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: distinct-set accumulation (the Set<string> at task.ts:198,214)."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.select("l_returnflag", "l_linestatus").distinct()
 
 
 ORACLE_AGG_DISTINCT = """
@@ -95,15 +81,8 @@ SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
 """
 
 
-def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 (count form): COUNT(DISTINCT) per group — expands to a two-phase
-    aggregate in Spark (distinct shuffle then count), exact."""
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_custkey").alias("n_custs")
-    )
-
-
+# COUNT(DISTINCT) per group expands to a two-phase aggregate in Spark
+# (distinct shuffle then count), exact.
 ORACLE_AGG_COUNT_DISTINCT = """
 SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_custs
 FROM orders GROUP BY o_orderstatus
@@ -595,40 +574,12 @@ GROUP BY l_returnflag
 """
 
 
-def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beyond-reference: MODE (most frequent value) with a DETERMINISTIC
-    tie-break.
-
-    Native mode() is unusable cross-engine (ties resolve arbitrarily,
-    differently per engine and per partitioning), so the operator is
-    spelled as what mode actually is: count per (group, value), then
-    rank by (count desc, value) and keep rank 1. Two hash aggregates +
-    a window over the tiny count table — the raw data is reduced before
-    any sort, so at 100 TB the window sees |groups x values| rows, not
-    the corpus.
-    """
-    o = table(spark, sf_dir, "orders")
-    counts = o.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    from pyspark.sql import Window as W
-
-    rn = F.row_number().over(
-        W.partitionBy("o_orderstatus").orderBy(
-            F.col("cnt").desc(), F.col("o_orderpriority")
-        )
-    )
-    return (
-        counts.withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("mode_priority"),
-            F.col("cnt").alias("n_rows"),
-        )
-    )
-
-
+# MODE with a DETERMINISTIC tie-break. Native mode() is unusable
+# cross-engine (ties resolve arbitrarily, differently per engine and per
+# partitioning), so the operator is spelled as what mode actually is:
+# count per (group, value), then rank by (count desc, value) and keep
+# rank 1. The raw data is reduced by the hash aggregate before any sort,
+# so at 100 TB the window sees |groups x values| rows, not the corpus.
 ORACLE_AGG_MODE = """
 SELECT o_orderstatus, mode_priority, n_rows FROM (
   SELECT
@@ -840,26 +791,11 @@ FROM ex JOIN est USING (k)
 """
 
 
-def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional (FILTER-clause) aggregation: one pass computing
-    differently-predicated aggregates side by side — the replacement
-    for N filtered subqueries re-scanning the table N times. Spark
-    spells it count_if / sum(CASE); SQL spells it FILTER (WHERE ...) —
-    both compile to conditional accumulation inside ONE hash aggregate
-    (a single scan, a single exchange), which is the whole point at
-    scale.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.expr("count_if(l_discount > 0.05)").alias("n_discounted"),
-        F.sum(
-            F.when(F.col("l_quantity") > 25, scaled_long("l_extendedprice"))
-        ).alias("hi_qty_revenue_c"),
-        F.expr("count_if(l_linestatus = 'O')").alias("n_open"),
-    )
-
-
+# Conditional (FILTER-clause) aggregation: differently-predicated
+# aggregates side by side in one pass, the replacement for N filtered
+# subqueries re-scanning the table N times. Each compiles to conditional
+# accumulation inside ONE hash aggregate (a single scan, a single
+# exchange), which is the whole point at scale.
 ORACLE_AGG_FILTERED = """
 SELECT
   l_returnflag,
@@ -1578,16 +1514,16 @@ FROM m
 
 
 QUERIES = {
-    "agg_count": spec(
-        agg_count, ORACLE_AGG_COUNT, "reference:A1",
+    "agg_count": sql_spec(
+        ORACLE_AGG_COUNT, "reference:A1",
         doc="COUNT as control flow, task.ts:127",
     ),
-    "agg_distinct": spec(
-        agg_distinct, ORACLE_AGG_DISTINCT, "reference:A2",
+    "agg_distinct": sql_spec(
+        ORACLE_AGG_DISTINCT, "reference:A2",
         doc="distinct-set accumulation, task.ts:198,214",
     ),
-    "agg_count_distinct": spec(
-        agg_count_distinct, ORACLE_AGG_COUNT_DISTINCT, "reference:A2",
+    "agg_count_distinct": sql_spec(
+        ORACLE_AGG_COUNT_DISTINCT, "reference:A2",
         doc="exact COUNT(DISTINCT) per group",
     ),
     "agg_groupby": spec(
@@ -1626,8 +1562,8 @@ QUERIES = {
         agg_approx_percentile, ORACLE_AGG_APPROX_PERCENTILE, "beyond",
         doc="sketch percentile, oracle-checked on its rank-error bound",
     ),
-    "agg_mode": spec(
-        agg_mode, ORACLE_AGG_MODE, "beyond",
+    "agg_mode": sql_spec(
+        ORACLE_AGG_MODE, "beyond",
         doc="MODE with deterministic tie-break (count rank over groups)",
     ),
     "agg_weighted_median": spec(
@@ -1663,8 +1599,8 @@ QUERIES = {
         doc="incremental MV maintenance: history partials + delta == "
             "full recompute (oracle is the rescan)",
     ),
-    "agg_filtered": spec(
-        agg_filtered, ORACLE_AGG_FILTERED, "beyond",
+    "agg_filtered": sql_spec(
+        ORACLE_AGG_FILTERED, "beyond",
         doc="FILTER-clause aggregates: N predicates, one scan, one agg",
     ),
     "agg_gini": spec(

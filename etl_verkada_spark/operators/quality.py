@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 #: (name, child table, child FK col, parent table, parent key col)
 FK_RELATIONSHIPS = (
@@ -39,13 +39,13 @@ FK_RELATIONSHIPS = (
     ("events->customer", "events", "user_id", "customer", "c_custkey"),
 )
 
-#: (name, table, primary-key col)
+#: (table, primary-key col)
 PRIMARY_KEYS = (
-    ("customer.c_custkey", "customer", "c_custkey"),
-    ("orders.o_orderkey", "orders", "o_orderkey"),
-    ("events.event_id", "events", "event_id"),
-    ("documents.doc_id", "documents", "doc_id"),
-    ("embeddings.vec_id", "embeddings", "vec_id"),
+    ("customer", "c_custkey"),
+    ("orders", "o_orderkey"),
+    ("events", "event_id"),
+    ("documents", "doc_id"),
+    ("embeddings", "vec_id"),
 )
 
 
@@ -138,64 +138,18 @@ SELECT 'events->customer',
 """
 
 
-def dq_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Primary-key uniqueness audit: rows vs distinct keys per declared
-    key; ``n_dup_rows`` is the excess (rows beyond the first per key).
-    NULL keys are counted separately — COUNT(DISTINCT) drops them, and
-    an audit must not."""
-    rows = []
-    for name, t, key in PRIMARY_KEYS:
-        df = table(spark, sf_dir, t)
-        rows.append(
-            df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct(key).alias("n_keys"),
-                F.count(F.when(F.col(key).isNull(), 1)).alias("n_nulls"),
-            ).select(
-                F.lit(name).alias("key"),
-                "n_rows",
-                "n_keys",
-                (
-                    F.col("n_rows") - F.col("n_keys") - F.col("n_nulls")
-                ).alias("n_dup_rows"),
-                "n_nulls",
-            )
-        )
-    return reduce(DataFrame.unionByName, rows)
-
-
-ORACLE_DQ_UNIQUENESS = """
-SELECT 'customer.c_custkey' AS key, COUNT(*) AS n_rows,
-       COUNT(DISTINCT c_custkey) AS n_keys,
-       COUNT(*) - COUNT(DISTINCT c_custkey)
-         - COUNT(CASE WHEN c_custkey IS NULL THEN 1 END) AS n_dup_rows,
-       COUNT(CASE WHEN c_custkey IS NULL THEN 1 END) AS n_nulls
-FROM customer
-UNION ALL
-SELECT 'orders.o_orderkey', COUNT(*), COUNT(DISTINCT o_orderkey),
-       COUNT(*) - COUNT(DISTINCT o_orderkey)
-         - COUNT(CASE WHEN o_orderkey IS NULL THEN 1 END),
-       COUNT(CASE WHEN o_orderkey IS NULL THEN 1 END)
-FROM orders
-UNION ALL
-SELECT 'events.event_id', COUNT(*), COUNT(DISTINCT event_id),
-       COUNT(*) - COUNT(DISTINCT event_id)
-         - COUNT(CASE WHEN event_id IS NULL THEN 1 END),
-       COUNT(CASE WHEN event_id IS NULL THEN 1 END)
-FROM events
-UNION ALL
-SELECT 'documents.doc_id', COUNT(*), COUNT(DISTINCT doc_id),
-       COUNT(*) - COUNT(DISTINCT doc_id)
-         - COUNT(CASE WHEN doc_id IS NULL THEN 1 END),
-       COUNT(CASE WHEN doc_id IS NULL THEN 1 END)
-FROM documents
-UNION ALL
-SELECT 'embeddings.vec_id', COUNT(*), COUNT(DISTINCT vec_id),
-       COUNT(*) - COUNT(DISTINCT vec_id)
-         - COUNT(CASE WHEN vec_id IS NULL THEN 1 END),
-       COUNT(CASE WHEN vec_id IS NULL THEN 1 END)
-FROM embeddings
-"""
+# Primary-key uniqueness audit: rows vs distinct keys per declared key;
+# n_dup_rows is the excess (rows beyond the first per key). NULL keys
+# are counted separately: COUNT(DISTINCT) drops them, and an audit must
+# not.
+ORACLE_DQ_UNIQUENESS = "\nUNION ALL\n".join(
+    f"""SELECT '{tbl}.{key}' AS key, COUNT(*) AS n_rows,
+  COUNT(DISTINCT {key}) AS n_keys,
+  COUNT(*) - COUNT(DISTINCT {key})
+    - COUNT(CASE WHEN {key} IS NULL THEN 1 END) AS n_dup_rows,
+  COUNT(CASE WHEN {key} IS NULL THEN 1 END) AS n_nulls FROM {tbl}"""
+    for tbl, key in PRIMARY_KEYS
+)
 
 
 #: (table, column) pairs the completeness/cardinality profile covers.
@@ -485,8 +439,8 @@ QUERIES = {
         dq_referential, ORACLE_DQ_REFERENTIAL, "beyond",
         doc="orphan-FK audit: anti-join cardinality per relationship",
     ),
-    "dq_uniqueness": spec(
-        dq_uniqueness, ORACLE_DQ_UNIQUENESS, "beyond",
+    "dq_uniqueness": sql_spec(
+        ORACLE_DQ_UNIQUENESS, "beyond",
         doc="primary-key uniqueness audit (rows vs distinct vs nulls)",
     ),
     "dq_profile": spec(

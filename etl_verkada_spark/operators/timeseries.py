@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 from .aggregates import scaled_long, unscale
 
 BUCKET_US = 10 * 60 * 1_000_000  # 10-minute grid
@@ -467,57 +467,17 @@ GROUP BY e.window_end_day
 EWMA_TAPS = 8
 
 
-def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially weighted moving average of purchase values per
-    user — the smoothing primitive behind trend baselines and spend
-    scores.
-
-    The textbook EWMA is a recurrence (not expressible as a frame
-    aggregate), but with dyadic decay and a fixed tap count it unrolls
-    into 8 LAG terms with integer weights 128..1 — pure window codegen,
-    ONE shuffle (hash by user), no recursion, no UDF. All arithmetic is
-    BIGINT cents (scaled_long), so the weighted numerator and the
-    weight denominator are exact on both engines; the final ratio is a
-    single IEEE division of two exact integers — bit-identical, same
-    discipline as llm_bigram_lm's p_cond. Partial leading windows keep
-    only the weights whose taps exist (den adapts), matching pandas'
-    ewm(adjust=True) semantics.
-
-    At 100 TB this is one hash exchange on user_id + one sort — the
-    same minimal plan as win_lag; taps never cross partitions.
-    """
-    e = table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cents = scaled_long("value")
-    num = sum(
-        (
-            F.coalesce(F.lag(cents, j).over(w), F.lit(0))
-            * F.lit(1 << (EWMA_TAPS - 1 - j))
-        )
-        for j in range(EWMA_TAPS)
-    )
-    den = sum(
-        F.when(
-            F.lag(cents, j).over(w).isNotNull(),
-            F.lit(1 << (EWMA_TAPS - 1 - j)),
-        ).otherwise(F.lit(0))
-        for j in range(EWMA_TAPS)
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        num.alias("ewma_num_c"),
-        den.alias("ewma_den"),
-        (
-            num.cast("double") / (den * F.lit(100)).cast("double")
-        ).alias("ewma"),
-    )
-
-
+# Exponentially weighted moving average of purchase values per user.
+# The textbook EWMA is a recurrence (not expressible as a frame
+# aggregate), but with dyadic decay and a fixed tap count it unrolls
+# into 8 LAG terms with integer weights 128..1: pure window codegen, ONE
+# shuffle (hash by user), no recursion, no UDF. All arithmetic is BIGINT
+# cents, so the weighted numerator and the weight denominator are exact
+# on both engines; the final ratio is a single IEEE division of two
+# exact integers, bit-identical. Partial leading windows keep only the
+# weights whose taps exist (den adapts), matching pandas'
+# ewm(adjust=True) semantics. At 100 TB this is one hash exchange on
+# user_id + one sort, the same minimal plan as win_lag.
 def _ewma_oracle() -> str:
     taps = EWMA_TAPS
     num = " + ".join(
@@ -552,51 +512,18 @@ ZSCORE_FRAME = 16
 ZSCORE_MIN_N = 8
 
 
-def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly gate: flag events whose value deviates
-    from the user's trailing 16-event baseline by more than 1.5
-    standard deviations — the self-calibrating outlier filter (data
-    quality, fraud triage) that needs no global model.
-
-    Exactness: |x - mean| > z*sigma is algebraically cleared of both
-    divisions and the square root before evaluation —
-        4*(n*x - s)^2 > 9*(n*q - s^2)   (z = 3/2)
-    with n, s (sum of cents), q (sum of squared cents) from one window
-    frame pass. Every term is BIGINT (bounded by 16 * 49002^2 * 16 <<
-    2^63), so the predicate is exact integer comparison on both
-    engines — no float variance, no sqrt, no rounding mode. The 1.5
-    threshold matters: values here are bounded/uniform-ish, where a
-    2-sigma gate would be vacuously empty (uniform's max deviation is
-    sqrt(3) sigma ~ 1.73).
-
-    One hash exchange on user_id + one sort; the frame aggregates are
-    computed in a single window pass. At 100 TB identical plan shape to
-    win_frame — the filter afterwards prunes output, not input.
-    """
-    e = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(ZSCORE_FRAME - 1), 0)
-    )
-    cents = scaled_long("value")
-    base = e.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        cents.alias("c"),
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(cents).over(w).alias("s"),
-        F.sum(cents * cents).over(w).alias("q"),
-    )
-    dev = F.col("n") * F.col("c") - F.col("s")
-    var_n2 = F.col("n") * F.col("q") - F.col("s") * F.col("s")
-    return base.filter(
-        (F.col("n") >= ZSCORE_MIN_N) & (4 * dev * dev > 9 * var_n2)
-    ).select("event_id", "user_id", "ts", "value", "n", "s", "q")
-
-
+# Rolling z-score anomaly gate: flag events whose value deviates from
+# the user's trailing 16-event baseline by more than 1.5 standard
+# deviations. |x - mean| > z*sigma is cleared of both divisions and the
+# square root before evaluation:
+#     4*(n*x - s)^2 > 9*(n*q - s^2)   (z = 3/2)
+# with n, s (sum of cents), q (sum of squared cents) from one window
+# frame pass. Every term is BIGINT (bounded by 16 * 49002^2 * 16 <<
+# 2^63), so the predicate is an exact integer comparison on both
+# engines. The 1.5 threshold matters: values here are bounded and
+# uniform-ish, where a 2-sigma gate would be vacuously empty (uniform's
+# max deviation is sqrt(3) sigma ~ 1.73). One hash exchange on user_id
+# + one sort, the plan shape of win_frame.
 ORACLE_TS_ANOMALY_ZSCORE = f"""
 WITH e AS (
   SELECT event_id, user_id, ts, value,
@@ -1433,76 +1360,20 @@ WHERE 2 * dev.d2 > {MAD_MULT} * mad.mad4
 """
 
 
-def ts_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series winsorized mean: clip values at the exact p05/p95
-    before averaging — the robust-mean every metrics pipeline wants
-    when a sensor glitch or a whale order would drag the plain mean
-    (trimmed/winsorized stats are the standard alternative to median
-    when the magnitude, not just the rank, matters).
-
-    Two-scan construction, every exchange CELL-sized (the
-    agg_weighted_median discipline):
-
-    1. scan 1 collapses rows to the per-(series, cent-value) histogram
-       — value has 2 decimals and is bounded, so the cell count is
-       bounded by the value domain, not the row count; a cumulative
-       window over the cells finds the exact thresholds with the
-       PERCENTILE_DISC lower convention (smallest v with cum/n >= p,
-       decided by the integer predicate ``20*cum >= n`` / ``>= 19*n``
-       — no float percentile);
-    2. scan 2 re-reads the rows, clips against the broadcast per-series
-       thresholds, and one mergeable aggregate emits the winsorized
-       mean plus clip counts.
-
-    Exactness: thresholds and the clipped sum are BIGINT cents; the
-    mean divides the decimal-unscaled sum by the count in ONE double
-    division, same expression shape as the oracle, so the engines agree
-    bit-for-bit. At 100 TB both scans are bandwidth; nothing row-scale
-    is ever exchanged or sorted.
-    """
-    e = table(spark, sf_dir, "events")
-    rows = e.select("event_type", scaled_long("value").alias("v_c"))
-    cells = rows.groupBy("event_type", "v_c").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("event_type").orderBy("v_c")
-    cum = cells.select(
-        "event_type",
-        "v_c",
-        F.sum("cnt").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ).alias("cum"),
-        F.sum("cnt").over(
-            w.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
-    )
-    th = cum.groupBy("event_type").agg(
-        F.min(F.when(20 * F.col("cum") >= F.col("n"), F.col("v_c"))).alias(
-            "lo"
-        ),
-        F.min(
-            F.when(20 * F.col("cum") >= 19 * F.col("n"), F.col("v_c"))
-        ).alias("hi"),
-    )
-    clipped = rows.join(F.broadcast(th), "event_type").select(
-        "event_type",
-        "v_c",
-        "lo",
-        "hi",
-        F.least(F.greatest("v_c", "lo"), "hi").alias("v_w"),
-    )
-    return clipped.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        unscale(F.min("lo")).alias("p05"),
-        unscale(F.min("hi")).alias("p95"),
-        F.sum((F.col("v_c") < F.col("lo")).cast("long")).alias("n_clip_lo"),
-        F.sum((F.col("v_c") > F.col("hi")).cast("long")).alias("n_clip_hi"),
-        (unscale(F.sum("v_w")) / F.count(F.lit(1))).alias("wins_mean"),
-    )
-
-
+# Per-series winsorized mean: clip values at the exact p05/p95 before
+# averaging. Two scans, every exchange CELL-sized (the
+# agg_weighted_median discipline): scan 1 collapses rows to the
+# per-(series, cent-value) histogram, bounded by the value domain, not
+# the row count, and a cumulative window over the cells finds the
+# thresholds with the PERCENTILE_DISC lower convention (smallest v with
+# cum/n >= p, decided by the integer predicates 20*cum >= n and
+# >= 19*n); scan 2 re-reads the rows, clips against the broadcast
+# per-series thresholds, and one mergeable aggregate emits the mean and
+# the clip counts. Thresholds and the clipped sum are BIGINT cents and
+# the mean is ONE double division. Nothing row-scale is ever exchanged
+# or sorted. The hint pins the broadcast to th: without it the sf0.1
+# plan broadcast the row-scale events side instead. DuckDB reads the
+# hint as a comment.
 ORACLE_TS_WINSORIZE = """
 WITH rows_c AS (
   SELECT event_type,
@@ -1528,7 +1399,7 @@ th AS (
   FROM cum GROUP BY event_type
 ),
 clipped AS (
-  SELECT r.event_type, r.v_c, t.lo, t.hi,
+  SELECT /*+ BROADCAST(t) */ r.event_type, r.v_c, t.lo, t.hi,
          LEAST(GREATEST(r.v_c, t.lo), t.hi) AS v_w
   FROM rows_c r JOIN th t USING (event_type)
 )
@@ -1839,12 +1710,12 @@ QUERIES = {
         ts_rolling_dau, ORACLE_TS_ROLLING_DAU, "beyond",
         doc="exact rolling 7-day distinct users (bounded day-explode)",
     ),
-    "ts_ewma": spec(
-        ts_ewma, ORACLE_TS_EWMA, "beyond",
+    "ts_ewma": sql_spec(
+        ORACLE_TS_EWMA, "beyond",
         doc="dyadic-decay EWMA unrolled to 8 integer-weighted lags",
     ),
-    "ts_anomaly_zscore": spec(
-        ts_anomaly_zscore, ORACLE_TS_ANOMALY_ZSCORE, "beyond",
+    "ts_anomaly_zscore": sql_spec(
+        ORACLE_TS_ANOMALY_ZSCORE, "beyond",
         doc="rolling z-score outlier gate, sqrt-free integer predicate",
     ),
     "ts_streaks": spec(
@@ -1889,8 +1760,8 @@ QUERIES = {
         doc="binary-segmentation optimal split per series (exact "
             "integer prefix sums, IEEE-identical objective)",
     ),
-    "ts_winsorize": spec(
-        ts_winsorize, ORACLE_TS_WINSORIZE, "beyond",
+    "ts_winsorize": sql_spec(
+        ORACLE_TS_WINSORIZE, "beyond",
         doc="exact p05/p95 winsorized mean per series (two scans, "
             "cell-sized histogram thresholds, no row-scale exchange)",
     ),

@@ -98,6 +98,17 @@ PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
     # (b) implementation changed, most recent first
+    "agg_count",
+    "agg_distinct",
+    "agg_count_distinct",
+    "agg_filtered",
+    "agg_mode",
+    "dq_uniqueness",
+    "fx_cond",
+    "fx_math",
+    "ts_ewma",
+    "ts_anomaly_zscore",
+    "ts_winsorize",
     "set_union",
     "set_intersect",
     "set_except",
@@ -136,18 +147,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_weighted_median",
     "dq_referential",
     "agg_approx",
-    # (c) oldest driver evidence, alphabetical within a cohort
-    "llm_token_count",
-    "mm_binary_stats",
-    "mm_feature_extract",
-    "scan_csv_land",
-    "scd2_apply",
-    "sort_topn_per_key",
-    "subquery_all",
-    "ts_cusum",
-    "ts_gapfill",
-    "ts_interval_merge",
-    "ts_rolling_median",
 )
 
 

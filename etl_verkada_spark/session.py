@@ -133,6 +133,8 @@ def get_spark(app_name: str = "etl-verkada-spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
+        # no console progress bar: its \r lines glue onto tool output
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

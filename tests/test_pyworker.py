@@ -45,6 +45,7 @@ def test_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
 def test_get_spark_workers_skip_unchanged_zip_rereads(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == "etl_verkada_spark.pyworker"
+    assert conf.get("spark.ui.showConsoleProgress") == "false"
     # The daemon must import from any working directory.
     assert spark.sparkContext.environment["PYTHONPATH"] == session._PACKAGE_ROOT
 

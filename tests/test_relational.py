@@ -631,15 +631,12 @@ def test_histogram_partitions_the_table(spark):
 def test_dq_audits_clean_on_testdata(spark):
     """The generated testdata is referentially clean with unique keys —
     the audits must report exactly that (zero false positives)."""
-    from etl_verkada_spark.operators.quality import (
-        dq_referential,
-        dq_uniqueness,
-    )
+    from etl_verkada_spark.operators.quality import dq_referential
 
     for r in dq_referential(spark, SF_SMALL).collect():
         assert r["n_orphans"] == 0, r
         assert r["n_rows"] > 0, r
-    for r in dq_uniqueness(spark, SF_SMALL).collect():
+    for r in build_registry()["dq_uniqueness"].fn(spark, SF_SMALL).collect():
         assert r["n_dup_rows"] == 0 and r["n_nulls"] == 0, r
         assert r["n_rows"] == r["n_keys"], r
 
@@ -933,9 +930,7 @@ def test_ewma_one_window_pass(spark):
     """All 16 lag terms share one (partition, order) spec, so the plan
     is ONE exchange + ONE sort + ONE Window operator — per-tap windows
     would multiply the sort cost by the tap count."""
-    from etl_verkada_spark.operators.timeseries import ts_ewma
-
-    tree = plan_tree(ts_ewma(spark, SF_SMALL))
+    tree = plan_tree(build_registry()["ts_ewma"].fn(spark, SF_SMALL))
     assert tree.count("Window") == 1, tree
     assert tree.count("Sort") == 1, tree
 
@@ -943,9 +938,7 @@ def test_ewma_one_window_pass(spark):
 def test_anomaly_zscore_one_window_pass(spark):
     """n/s/q share one frame spec -> one Window operator; the z-gate is
     a Filter AFTER the window, never a second pass."""
-    from etl_verkada_spark.operators.timeseries import ts_anomaly_zscore
-
-    tree = plan_tree(ts_anomaly_zscore(spark, SF_SMALL))
+    tree = plan_tree(build_registry()["ts_anomaly_zscore"].fn(spark, SF_SMALL))
     assert tree.count("Window") == 1, tree
     assert tree.count("Sort") == 1, tree
 
@@ -1032,9 +1025,7 @@ def test_ewma_matches_pandas_ewm(spark):
     value range per point)."""
     import pandas as pd
 
-    from etl_verkada_spark.operators.timeseries import ts_ewma
-
-    out = ts_ewma(spark, SF_SMALL).toPandas()
+    out = build_registry()["ts_ewma"].fn(spark, SF_SMALL).toPandas()
     checked = 0
     for _, g in out.groupby("user_id"):
         g = g.sort_values(["ts", "event_id"])
@@ -2232,14 +2223,12 @@ def test_winsorize_matches_python_recompute(spark):
     PERCENTILE_DISC lower convention on exact cents."""
     from collections import defaultdict
 
-    from etl_verkada_spark.operators.timeseries import ts_winsorize
-
     got = {
         r["event_type"]: (
             r["n"], r["p05"], r["p95"], r["n_clip_lo"], r["n_clip_hi"],
             round(r["wins_mean"], 9),
         )
-        for r in ts_winsorize(spark, SF_SMALL).collect()
+        for r in build_registry()["ts_winsorize"].fn(spark, SF_SMALL).collect()
     }
     rows = (
         table_validated(spark, SF_SMALL, "events")
