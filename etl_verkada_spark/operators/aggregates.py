@@ -14,9 +14,10 @@ exact-sum / count in double, never AVG(double).
 
 Two exact-sum strategies:
 
-* ``dec_sum`` — SUM(CAST(x AS DECIMAL(28,s))). Always safe, but Spark's
-  >18-digit decimals leave the compact-long representation and aggregate
-  through BigDecimal (~4x slower than a long sum in the hash-agg loop).
+* ``SUM(CAST(x AS DECIMAL(28,s)))`` — the oracles' form. Always safe,
+  but Spark's >18-digit decimals leave the compact-long representation
+  and aggregate through BigDecimal (~4x slower than a long sum in the
+  hash-agg loop).
 * ``scaled_long``/``unscale`` — the fast path used by the hot queries:
   values with <= s true decimals become exact integers at scale 10^s,
   SUM(LONG) runs entirely in whole-stage codegen, and one decimal
@@ -25,8 +26,9 @@ Two exact-sum strategies:
   Overflow bound: sum of |x|*10^s must stay under 2^63 — at scale 6 and
   ~1e5 magnitudes that is ~10^7 rows *per group* per the TPC-H column
   profile, fine through sf100; a 100 TB deployment either switches to
-  ``dec_sum`` or pre-aggregates per partition before the final long sum
-  (partial sums can't overflow a partition's bound).
+  ``SUM(CAST(x AS DECIMAL(28,s)))`` or pre-aggregates per partition
+  before the final long sum (partial sums can't overflow a partition's
+  bound).
 """
 
 from __future__ import annotations
@@ -36,12 +38,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import spec, sql_spec
-
-
-def dec_sum(col: str, scale: str = "decimal(28,2)", alias: str | None = None):
-    """Order-insensitive SUM of a double column via decimal."""
-    c = F.sum(F.col(col).cast(scale)).cast("double")
-    return c.alias(alias) if alias else c
 
 
 def scaled_long(col, ndec: int = 2) -> F.Column:

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
-from ..registry import spec
+from ..catalog import sql, table
+from ..registry import spec, sql_spec
 
 
 def _scd2_intervals(ev: DataFrame, weighted: bool = False) -> DataFrame:
@@ -252,55 +252,23 @@ def _snapshots(spark: SparkSession, sf_dir: str):
     return old, new
 
 
-def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed diff of two snapshots -> (op, key, new values).
-
-    One full-outer join on the primary key; the op is decided by key
-    presence and column comparison. Comparison on +1.0-perturbed
-    doubles is exact (integer-valued deltas). Unchanged rows are
-    dropped — the changeset is the output, so its size is the churn,
-    not the table. At 100 TB both snapshots shuffle once on the key;
-    with both stored bucketed on the key (join_bucketed's layout) the
-    diff is exchange-free.
-
-    Rewrites tried and REJECTED (round 7, same-session sf1 A/B,
-    min-of-5): tag-union + single-exchange groupBy(key) diff — both
-    the max(when(side, struct)) form (SortAggregate, 1.19-1.29 s) and
-    the scalar max(when)+min/max(side) form (HashAggregate,
-    1.10-1.22 s) lose to this full-outer SMJ (0.89-1.00 s). Halving
-    the exchanges does not pay for building a |keys|-sized hash/sort
-    agg state: the SMJ streams both sorted sides with O(1) state,
-    and nearly-unique keys make partial aggregation pure overhead.
-    """
-    old, new = _snapshots(spark, sf_dir)
-    o = old.alias("o")
-    n = new.alias("n")
-    joined = o.join(
-        n, F.col("o.o_orderkey") == F.col("n.o_orderkey"), "full_outer"
-    )
-    op = (
-        F.when(F.col("o.o_orderkey").isNull(), F.lit("insert"))
-        .when(F.col("n.o_orderkey").isNull(), F.lit("delete"))
-        .when(
-            (F.col("o.o_orderstatus") != F.col("n.o_orderstatus"))
-            | (F.col("o.o_totalprice") != F.col("n.o_totalprice")),
-            F.lit("update"),
-        )
-    )
-    return (
-        joined.select(
-            op.alias("op"),
-            F.coalesce(F.col("n.o_orderkey"), F.col("o.o_orderkey")).alias(
-                "o_orderkey"
-            ),
-            F.col("n.o_orderstatus").alias("new_status"),
-            F.col("n.o_totalprice").alias("new_totalprice"),
-        )
-        .filter(F.col("op").isNotNull())
-    )
-
-
-ORACLE_CDC_SNAPSHOT_DIFF = """
+# Keyed diff of two snapshots -> (op, key, new values). One full-outer
+# join on the primary key; the op is decided by key presence and column
+# comparison. Comparison on +1.0-perturbed doubles is exact
+# (integer-valued deltas). Unchanged rows are dropped: the changeset is
+# the output, so its size is the churn, not the table. At 100 TB both
+# snapshots shuffle once on the key; with both stored bucketed on the
+# key (join_bucketed's layout) the diff is exchange-free.
+#
+# The full-outer sort-merge join beats a tag-union + single-exchange
+# groupBy(key) diff (sf1, one session, min of 5): 0.89-1.00 s against
+# 1.19-1.29 s for the max(when(side, struct)) form (SortAggregate) and
+# 1.10-1.22 s for the scalar max(when) + min/max(side) form
+# (HashAggregate). Halving the exchanges does not pay for building a
+# |keys|-sized hash/sort agg state: the SMJ streams both sorted sides
+# with O(1) state, and nearly-unique keys make partial aggregation pure
+# overhead.
+ORACLE_CDC_SNAPSHOT_DIFF = f"""
 WITH base AS (
   SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
 ),
@@ -308,12 +276,12 @@ old AS (
   SELECT
     o_orderkey,
     o_orderstatus,
-    CASE WHEN o_orderkey % 89 = 0 THEN o_totalprice + 1.0
+    CASE WHEN o_orderkey % {CDC_UPD_MOD} = 0 THEN o_totalprice + 1.0
          ELSE o_totalprice END AS o_totalprice
-  FROM base WHERE o_orderkey % 97 <> 0
+  FROM base WHERE o_orderkey % {CDC_INS_MOD} <> 0
 ),
 new AS (
-  SELECT * FROM base WHERE o_orderkey % 101 <> 0
+  SELECT * FROM base WHERE o_orderkey % {CDC_DEL_MOD} <> 0
 )
 SELECT op, o_orderkey, new_status, new_totalprice FROM (
   SELECT
@@ -353,7 +321,7 @@ def cdc_merge_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakehouse table formats execute.
     """
     old, _ = _snapshots(spark, sf_dir)
-    ops = cdc_snapshot_diff(spark, sf_dir)
+    ops = sql(spark, sf_dir, ORACLE_CDC_SNAPSHOT_DIFF)
     upserts = ops.filter(F.col("op") != "delete").select(
         "o_orderkey",
         F.col("new_status").alias("o_orderstatus"),
@@ -376,8 +344,8 @@ QUERIES = {
         scd2_build, ORACLE_SCD2_BUILD, "beyond",
         doc="SCD type-2 validity intervals (gaps-and-islands, one sort)",
     ),
-    "cdc_snapshot_diff": spec(
-        cdc_snapshot_diff, ORACLE_CDC_SNAPSHOT_DIFF, "beyond",
+    "cdc_snapshot_diff": sql_spec(
+        ORACLE_CDC_SNAPSHOT_DIFF, "beyond",
         doc="keyed snapshot diff -> insert/update/delete changeset",
     ),
     "scd2_apply": spec(

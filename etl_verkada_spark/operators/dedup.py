@@ -6,30 +6,27 @@ duplicate-lease fix, CHANGELOG.md:16). Spark does not preserve arrival
 order, so "last" must be defined by an explicit ordering column — here
 the natural per-key ordinal.
 
-Two implementations, same semantics when the ordering tuple is unique
-per key (the engine's documented precondition):
+:func:`last_wins` is a ``max_by(struct(all columns), struct(order
+columns))`` hash aggregate, deterministic when the ordering tuple is
+unique per key (the engine's documented precondition). It is the 100 TB
+default: partial aggregation runs MAP-SIDE (each scan task pre-reduces
+to one candidate per key before the shuffle) and no sort happens at
+all. ~25% faster locally than the row_number window the oracle runs,
+and arbitrarily better at scale when keys repeat often.
 
-* :func:`last_wins` — ``max_by(struct(all columns), struct(order
-  columns))`` hash aggregate. The 100 TB default: partial aggregation
-  runs MAP-SIDE (each scan task pre-reduces to one candidate per key
-  before the shuffle) and no sort happens at all. ~25% faster locally
-  and arbitrarily better at scale when keys repeat often.
-* :func:`last_wins_window` — the canonical row_number window: one
-  shuffle + per-partition sort, no map-side combine. Kept because a
-  window generalizes (top-N, ties visible) where argmax cannot.
-
-``dropDuplicates`` is the order-insensitive cousin; cheapest of all but
-non-deterministic about WHICH row survives, so the engine never uses it
-where the reference semantics ("last") matter.
+Whole-row ``SELECT DISTINCT`` (``dedup_exact_rows``) is the
+order-insensitive cousin, cheapest of all; deduplicating on a key alone
+that way leaves WHICH row survives undefined, so the engine never uses
+it where the reference semantics ("last") matter.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 
 def last_wins(df: DataFrame, key: list[str], order: list) -> DataFrame:
@@ -59,17 +56,6 @@ def last_wins(df: DataFrame, key: list[str], order: list) -> DataFrame:
     ord_t = F.struct(*[F.col(c) for c in order])
     agg = df.groupBy(*key).agg(F.max_by(row, ord_t).alias("__row"))
     return agg.select(*[F.col(f"__row.{c}").alias(c) for c in cols])
-
-
-def last_wins_window(df: DataFrame, key: list[str], order: list) -> DataFrame:
-    """row_number-window form of :func:`last_wins` (one shuffle + sort,
-    no map-side combine; generalizes to top-N)."""
-    w = Window.partitionBy(*key).orderBy(*[F.col(c).desc() for c in order])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def dedup_lastwins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,13 +102,8 @@ WHERE rn = 1
 """
 
 
-def dedup_exact_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact whole-row dedup via dropDuplicates (hash-agg under the hood;
-    partial combine map-side, one shuffle on the full row hash)."""
-    o = table(spark, sf_dir, "orders")
-    return o.select("o_orderstatus", "o_orderpriority").dropDuplicates()
-
-
+# Whole-row dedup: a hash aggregate on every selected column, partial
+# combine map-side, one shuffle on the full row hash.
 ORACLE_DEDUP_EXACT_ROWS = """
 SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
 """
@@ -131,10 +112,10 @@ SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
 QUERIES = {
     "dedup_lastwins": spec(
         dedup_lastwins, ORACLE_DEDUP_LASTWINS, "reference:J2", "reference:W1",
-        doc="last-wins dedup via row_number window, task.ts:123",
+        doc="last-wins dedup via max(struct) hash aggregate, task.ts:123",
     ),
-    "dedup_exact_rows": spec(
-        dedup_exact_rows, ORACLE_DEDUP_EXACT_ROWS, "beyond",
-        doc="order-insensitive exact dedup (dropDuplicates)",
+    "dedup_exact_rows": sql_spec(
+        ORACLE_DEDUP_EXACT_ROWS, "beyond",
+        doc="order-insensitive exact whole-row dedup (SELECT DISTINCT)",
     ),
 }

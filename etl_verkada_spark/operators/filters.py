@@ -1,9 +1,10 @@
 """Filters and predicates (reference P2/P3/P4, SURVEY.md §2.2).
 
-All predicates are expressed as Column expressions so Catalyst pushes
-them into the parquet scan (check ``PushedFilters`` in
-``.explain("formatted")``) — the scale path: at 100 TB a filter that does
-not reach the scan reads the whole table.
+Every predicate here reaches the parquet scan (check ``PushedFilters``
+in ``.explain("formatted")``): the scale path, because at 100 TB a
+filter that does not reach the scan reads the whole table. P2 and P3
+run their oracle text on Spark (``sql_spec``); P4's JSON guard is a
+Column expression.
 """
 
 from __future__ import annotations
@@ -12,23 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 
-def filter_conj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2: conjunctive filter — equality AND not-null.
-
-    Reference: ``lease.layer === layer.id && lease.source_id``
-    (task.ts:122) applied before the join build, i.e. O1 early filtering.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_returnflag") == F.lit("A"))
-        & (F.col("l_discount") > F.lit(0.02))
-        & F.col("l_partkey").isNotNull()
-    ).select("l_orderkey", "l_linenumber", "l_returnflag", "l_discount")
-
-
+# P2: conjunctive filter, equality AND not-null. Reference:
+# ``lease.layer === layer.id && lease.source_id`` (task.ts:122) applied
+# before the join build, i.e. O1 early filtering.
 ORACLE_FILTER_CONJ = """
 SELECT l_orderkey, l_linenumber, l_returnflag, l_discount
 FROM lineitem
@@ -36,21 +26,11 @@ WHERE l_returnflag = 'A' AND l_discount > 0.02 AND l_partkey IS NOT NULL
 """
 
 
-def filter_isin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3: disjunctive membership — the ACL gate.
-
-    Reference: ``accessibleSites.includes(site_id) ||
-    accessibleCameras.includes(camera_id)`` (task.ts:209-212). Small
-    literal lists use ``isin`` (compiled to an In predicate, pushed to the
-    scan); large ACLs become the semi-join form in joins.join_semi.
-    """
-    c = table(spark, sf_dir, "customer")
-    return c.filter(
-        F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")
-        | F.col("c_nationkey").isin(1, 2, 3)
-    ).select("c_custkey", "c_mktsegment", "c_nationkey")
-
-
+# P3: disjunctive membership, the ACL gate. Reference:
+# ``accessibleSites.includes(site_id) ||
+# accessibleCameras.includes(camera_id)`` (task.ts:209-212). Small
+# literal lists compile to In predicates pushed to the scan; large ACLs
+# take the semi-join form of join_semi.
 ORACLE_FILTER_ISIN = """
 SELECT c_custkey, c_mktsegment, c_nationkey
 FROM customer
@@ -81,12 +61,12 @@ WHERE props->>'$.k' IS NOT NULL AND CAST(props->>'$.k' AS INTEGER) >= 50
 
 
 QUERIES = {
-    "filter_conj": spec(
-        filter_conj, ORACLE_FILTER_CONJ, "reference:P2", "reference:O1",
+    "filter_conj": sql_spec(
+        ORACLE_FILTER_CONJ, "reference:P2", "reference:O1",
         doc="equality + not-null conjunctive filter, task.ts:122",
     ),
-    "filter_isin": spec(
-        filter_isin, ORACLE_FILTER_ISIN, "reference:P3",
+    "filter_isin": sql_spec(
+        ORACLE_FILTER_ISIN, "reference:P3",
         doc="disjunctive IN-list membership gate, task.ts:209-212",
     ),
     "filter_nullsafe": spec(

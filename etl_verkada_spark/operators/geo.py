@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 from .aggregates import scaled_long, unscale
 
 GEO_CELL_DEG = 5  # 5-degree cells
@@ -224,56 +224,18 @@ SELECT c_custkey, b.s AS s_suppkey, b.d2 AS d2_e8 FROM best
 _FENCE_PAD_E4 = 10_000  # 1 degree
 
 
-def geo_geofence_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Containment join: cameras (customers) inside per-nation
-    geofences — the "which cameras are covered by site S's zone"
-    lookup behind the reference's region-scoped feature pulls.
-
-    Fences are built by aggregation (each nation's supplier bounding
-    box, padded 1 degree), NOT read from a table — the fence set is an
-    AGGREGATE of the small dimension, so it is provably tiny and the
-    containment join is a broadcast nested-loop with a range predicate:
-    the 100-TB camera side never shuffles and never fans out. A camera
-    can sit in several overlapping fences (inner join semantics, one
-    row per (camera, fence) hit), which is why the output aggregates
-    per fence. Coordinates are the shared e-4-degree integers
-    (geo_density's scaling), so containment is exact in both engines.
-    """
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    fences = (
-        s.select(
-            F.col("s_nationkey").alias("fence_id"),
-            (F.col("s_nationkey").cast("long") * 10_000).alias("lat_e4"),
-            scaled_long("s_acctbal").alias("lon_e4"),
-        )
-        .groupBy("fence_id")
-        .agg(
-            (F.min("lat_e4") - _FENCE_PAD_E4).alias("lat_lo"),
-            (F.max("lat_e4") + _FENCE_PAD_E4).alias("lat_hi"),
-            (F.min("lon_e4") - _FENCE_PAD_E4).alias("lon_lo"),
-            (F.max("lon_e4") + _FENCE_PAD_E4).alias("lon_hi"),
-        )
-    )
-    cams = c.select(
-        "c_custkey",
-        (F.col("c_nationkey").cast("long") * 10_000).alias("lat_e4"),
-        scaled_long("c_acctbal").alias("lon_e4"),
-    )
-    hits = cams.join(
-        F.broadcast(fences),
-        (F.col("lat_e4") >= F.col("lat_lo"))
-        & (F.col("lat_e4") <= F.col("lat_hi"))
-        & (F.col("lon_e4") >= F.col("lon_lo"))
-        & (F.col("lon_e4") <= F.col("lon_hi")),
-    )
-    return hits.groupBy("fence_id").agg(
-        F.count(F.lit(1)).alias("n_cameras"),
-        F.min("c_custkey").alias("min_custkey"),
-        F.sum("lon_e4").alias("sum_lon_e4"),
-    )
-
-
+# Containment join: cameras (customers) inside per-nation geofences, the
+# "which cameras are covered by site S's zone" lookup behind the
+# reference's region-scoped feature pulls. Fences are built by
+# aggregation (each nation's supplier bounding box, padded 1 degree),
+# NOT read from a table: the fence set is an AGGREGATE of the small
+# dimension, so it is provably tiny, and the BROADCAST hint makes the
+# containment join a broadcast nested-loop with a range predicate: the
+# 100-TB camera side never shuffles and never fans out. A camera can
+# sit in several overlapping fences (inner join semantics, one row per
+# (camera, fence) hit), which is why the output aggregates per fence.
+# Coordinates are the shared e-4-degree integers (geo_density's
+# scaling), so containment is exact in both engines.
 ORACLE_GEO_GEOFENCE = f"""
 WITH fences AS (
   SELECT
@@ -293,7 +255,7 @@ cams AS (
     CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS lon_e4
   FROM customer
 )
-SELECT
+SELECT /*+ BROADCAST(fences) */
   fence_id,
   COUNT(*) AS n_cameras,
   MIN(c_custkey) AS min_custkey,
@@ -502,8 +464,8 @@ QUERIES = {
         geo_knn, ORACLE_GEO_KNN, "beyond",
         doc="radius-bounded nearest-site join via 3x3 grid blocking",
     ),
-    "geo_geofence_join": spec(
-        geo_geofence_join, ORACLE_GEO_GEOFENCE, "beyond",
+    "geo_geofence_join": sql_spec(
+        ORACLE_GEO_GEOFENCE, "beyond",
         doc="point-in-fence containment join (aggregated broadcast "
             "fences, exact integer bounds)",
     ),

@@ -4,12 +4,12 @@ Scale strategy per join:
 
 * ``join_broadcast_left`` — the reference's build-side hash map
   (task.ts:114-125, probed at :228) IS a broadcast hash join: the lease
-  set is small (one per camera at most), so broadcast it explicitly and
-  never shuffle the big probe side. At 100 TB the probe side streams
-  through scan->join->project in one stage, zero exchange.
+  set is small (one per camera at most), so a ``BROADCAST`` hint pins
+  it and the big probe side never shuffles. At 100 TB the probe side
+  streams through scan->join->project in one stage, zero exchange.
 * ``join_semi`` / ``join_anti`` — ACL membership (task.ts:209-212) as
-  left-semi/left-anti. Spark rewrites IN/EXISTS subqueries the same way;
-  broadcast the tiny ACL side.
+  IN / NOT EXISTS subqueries, which Spark plans as left-semi/left-anti
+  joins; the hint inside each subquery broadcasts the tiny ACL side.
 * ``join_sortmerge`` — large x large (lineitem x orders) where broadcast
   is impossible; hinted merge join; with both sides bucketed by the key
   on disk this becomes a zero-shuffle join (see SCALE.md).
@@ -24,34 +24,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 
 
-def join_broadcast_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: broadcast hash left-outer equi-join, build side pre-filtered.
-
-    Reference: build `Map<source_id, lease>` from the filtered lease scan
-    (O1, task.ts:122-123), probe by camera_id (task.ts:228); misses keep
-    the camera (left outer) and route to the POST arm of the upsert.
-    """
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer")
-    build = customer.filter(F.col("c_acctbal") > F.lit(0)).select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    joined = orders.join(
-        F.broadcast(build), orders.o_custkey == build.c_custkey, "left"
-    )
-    return joined.select(
-        "o_orderkey",
-        "o_custkey",
-        F.col("c_name").alias("cust_name"),
-        F.col("c_custkey").isNotNull().alias("matched"),
-    )
-
-
+# J1: broadcast hash left-outer equi-join, build side pre-filtered.
+# Reference: build `Map<source_id, lease>` from the filtered lease scan
+# (O1, task.ts:122-123), probe by camera_id (task.ts:228); misses keep
+# the camera (left outer) and route to the POST arm of the upsert.
 ORACLE_JOIN_BROADCAST_LEFT = """
-SELECT
+SELECT /*+ BROADCAST(c) */
   o.o_orderkey,
   o.o_custkey,
   c.c_name AS cust_name,
@@ -63,55 +44,30 @@ LEFT JOIN (
 """
 
 
-def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3: left-semi join — the ACL membership gate at scale.
-
-    Reference: only cameras whose site/camera id appears in the ACL lists
-    proceed (task.ts:209-212). Semi-join returns each left row at most
-    once — exactly `.includes()` semantics.
-    """
-    orders = table(spark, sf_dir, "orders")
-    acl = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == F.lit("BUILDING"))
-        .select("c_custkey")
-    )
-    return orders.join(
-        F.broadcast(acl), orders.o_custkey == acl.c_custkey, "left_semi"
-    ).select("o_orderkey", "o_custkey", "o_orderstatus")
-
-
+# J3: left-semi join, the ACL membership gate at scale. Reference: only
+# cameras whose site/camera id appears in the ACL lists proceed
+# (task.ts:209-212); a semi join returns each left row at most once,
+# exactly `.includes()` semantics. The hint sits inside the subquery:
+# one on the outer SELECT does not reach an IN subquery.
 ORACLE_JOIN_SEMI = """
 SELECT o_orderkey, o_custkey, o_orderstatus
 FROM orders
 WHERE o_custkey IN (
-  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+  SELECT /*+ BROADCAST(customer) */ c_custkey
+  FROM customer WHERE c_mktsegment = 'BUILDING'
 )
 """
 
 
-def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: left-anti join — the complement of the ACL gate.
-
-    Reference: cameras failing the membership check silently skip the
-    lease call (the else-path of task.ts:209-273).
-    """
-    orders = table(spark, sf_dir, "orders")
-    acl = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == F.lit("BUILDING"))
-        .select("c_custkey")
-    )
-    return orders.join(
-        F.broadcast(acl), orders.o_custkey == acl.c_custkey, "left_anti"
-    ).select("o_orderkey", "o_custkey", "o_orderstatus")
-
-
+# J4: left-anti join, the complement of the ACL gate. Reference: cameras
+# failing the membership check silently skip the lease call (the
+# else-path of task.ts:209-273). The hint sits inside the subquery, as
+# in J3.
 ORACLE_JOIN_ANTI = """
 SELECT o_orderkey, o_custkey, o_orderstatus
 FROM orders o
 WHERE NOT EXISTS (
-  SELECT 1 FROM customer c
+  SELECT /*+ BROADCAST(c) */ 1 FROM customer c
   WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = o.o_custkey
 )
 """
@@ -850,17 +806,17 @@ GROUP BY 1, 2
 
 
 QUERIES = {
-    "join_broadcast_left": spec(
-        join_broadcast_left, ORACLE_JOIN_BROADCAST_LEFT,
+    "join_broadcast_left": sql_spec(
+        ORACLE_JOIN_BROADCAST_LEFT,
         "reference:J1", "reference:O2",
         doc="broadcast hash left-outer join (build-side map), task.ts:114-125,228",
     ),
-    "join_semi": spec(
-        join_semi, ORACLE_JOIN_SEMI, "reference:J3",
+    "join_semi": sql_spec(
+        ORACLE_JOIN_SEMI, "reference:J3",
         doc="left-semi ACL membership join, task.ts:209-212",
     ),
-    "join_anti": spec(
-        join_anti, ORACLE_JOIN_ANTI, "reference:J4",
+    "join_anti": sql_spec(
+        ORACLE_JOIN_ANTI, "reference:J4",
         doc="left-anti complement of the ACL gate, task.ts:209-273",
     ),
     "join_sortmerge": spec(

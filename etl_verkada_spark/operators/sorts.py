@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import spec
+from ..registry import spec, sql_spec
 from .aggregates import scaled_long
 
 #: buckets for the distributed global-rank plan. On a real cluster this
@@ -155,17 +155,8 @@ FROM customer
 """
 
 
-def topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k: orderBy().limit(k) -> TakeOrderedAndProject (heap per
-    partition, no global sort)."""
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
+# Top-k: ORDER BY + LIMIT compiles to TakeOrderedAndProject (a heap per
+# partition, no global sort).
 ORACLE_TOPK = """
 SELECT o_orderkey, o_totalprice
 FROM orders
@@ -174,17 +165,7 @@ LIMIT 10
 """
 
 
-def limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L1: the reference's page-size LIMIT (50/page, task.ts:119)."""
-    c = table(spark, sf_dir, "customer")
-    return (
-        c.select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-        .offset(5)
-        .limit(20)
-    )
-
-
+# L1: the reference's page-size LIMIT (50/page, task.ts:119).
 ORACLE_LIMIT_OFFSET = """
 SELECT c_custkey, c_name FROM customer ORDER BY c_custkey LIMIT 20 OFFSET 5
 """
@@ -194,36 +175,17 @@ SELECT c_custkey, c_name FROM customer ORDER BY c_custkey LIMIT 20 OFFSET 5
 TOPN_PER_KEY = 5
 
 
-def sort_topn_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-N rows per key — "keep the 5 longest documents per
-    (lang, source)", the standard curation shape for per-source caps in
-    training-data pipelines (and the grouped cousin of ``topk``).
-
-    Expressed as a rank-filtered window, which Spark compiles to
-    WindowGroupLimit: each map task keeps only N rows per key BEFORE
-    the shuffle (Spark 3.5+ rank-limit pushdown), so the exchange
-    carries at most N*keys*partitions rows instead of the table —
-    the grouped analogue of TakeOrderedAndProject's per-partition
-    heap. Verified in the plan (tests/test_relational.py): a
-    ``WindowGroupLimit`` node appears below the Exchange. The ordering
-    is total ((n_chars DESC, doc_id) — doc_id is unique), so the kept
-    set is deterministic.
-
-    At 100 TB: no global sort, no skew trap — a hot key still sends
-    only N rows per map task. Contrast with groupBy+collect_list+
-    slice, which shuffles every row of the hot key to one reducer.
-    """
-    d = table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang", "source").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    return (
-        d.select("doc_id", "lang", "source", "n_chars")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOPN_PER_KEY)
-    )
-
-
+# Top-N rows per key: "keep the 5 longest documents per (lang, source)",
+# the standard curation shape for per-source caps in training-data
+# pipelines (the grouped cousin of topk). The rank filter compiles to
+# WindowGroupLimit on both sides of the exchange (Spark 3.5+ rank-limit
+# pushdown): each map task keeps only N rows per key BEFORE the
+# shuffle, so the exchange carries at most N*keys*partitions rows, not
+# the table (asserted in tests/test_relational.py). At 100 TB there is
+# no global sort and no skew trap: a hot key still sends only N rows
+# per map task, where groupBy + collect_list + slice would shuffle
+# every row of the hot key to one reducer. (n_chars DESC, doc_id) is a
+# total order (doc_id is unique), so the kept set is deterministic.
 ORACLE_SORT_TOPN_PER_KEY = f"""
 SELECT doc_id, lang, source, n_chars, rn FROM (
   SELECT
@@ -350,16 +312,16 @@ QUERIES = {
         sort_orderby, ORACLE_SORT_ORDERBY, "beyond",
         doc="global sort with null placement + position",
     ),
-    "topk": spec(
-        topk, ORACLE_TOPK, "beyond",
+    "topk": sql_spec(
+        ORACLE_TOPK, "beyond",
         doc="top-k via TakeOrderedAndProject",
     ),
-    "limit_offset": spec(
-        limit_offset, ORACLE_LIMIT_OFFSET, "reference:L1",
+    "limit_offset": sql_spec(
+        ORACLE_LIMIT_OFFSET, "reference:L1",
         doc="page-size limit/offset, task.ts:119",
     ),
-    "sort_topn_per_key": spec(
-        sort_topn_per_key, ORACLE_SORT_TOPN_PER_KEY, "beyond",
+    "sort_topn_per_key": sql_spec(
+        ORACLE_SORT_TOPN_PER_KEY, "beyond",
         doc="top-N per key via WindowGroupLimit (map-side rank pushdown)",
     ),
     "skyline_pareto": spec(

@@ -1172,10 +1172,10 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     r then follows the agg_stats discipline exactly: all six moments
     accumulate as EXACT BIGINTs (hourly totals in cents stay ~2.7e7 at
     sf1, so per-row products <= ~7e14 and 720-row sums <= ~5e17 — long
-    safe; a 100 TB deployment widens to dec_sum as aggregates.py
-    documents), then the textbook formula runs in DOUBLE on those
-    exact moments with the identical expression in both engines —
-    every IEEE step (cast, multiply, subtract, sqrt, divide) is
+    safe; a 100 TB deployment widens to SUM(CAST(x AS DECIMAL(28,s)))
+    as aggregates.py documents), then the textbook formula runs in
+    DOUBLE on those exact moments with the identical expression in both
+    engines — every IEEE step (cast, multiply, subtract, sqrt, divide) is
     correctly rounded on identical inputs, so r is bit-identical.
     Zero-variance series are excluded (r undefined).
     """

@@ -336,30 +336,14 @@ HAVING SUM(conv) > 0
 """
 
 
-def win_relrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative-position windows: percent_rank + cume_dist of every
-    order's price within its priority class — the normalized-score
-    shape (price percentile vs peers) scoring/binning pipelines use.
-
-    Both functions are ratios of two window-computed integers
-    ((rank-1)/(n-1), peers<=x / n) evaluated in ONE IEEE division, so
-    the doubles are bit-identical across engines. The o_orderkey
-    tie-break makes ranks unique and the output fully deterministic.
-    One shuffle on the partition key + one sort — the win_rownum plan.
-    """
-    o = table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        "o_totalprice", "o_orderkey"
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        "o_totalprice",
-        F.percent_rank().over(w).alias("price_prank"),
-        F.cume_dist().over(w).alias("price_cume"),
-    )
-
-
+# Relative-position windows: percent_rank + cume_dist of every order's
+# price within its priority class, the normalized-score shape (price
+# percentile vs peers) scoring/binning pipelines use. Both are ratios of
+# two window-computed integers ((rank-1)/(n-1), peers<=x / n) evaluated
+# in ONE IEEE division, so the doubles are bit-identical across engines.
+# The o_orderkey tie-break makes ranks unique and the output fully
+# deterministic. One shuffle on the partition key + one sort, the
+# win_rownum plan.
 ORACLE_WIN_RELRANK = """
 SELECT
   o_orderkey,
@@ -651,8 +635,8 @@ QUERIES = {
         win_funnel, ORACLE_WIN_FUNNEL, "beyond",
         doc="funnel conversion detection (lag transition flags, one sort)",
     ),
-    "win_relrank": spec(
-        win_relrank, ORACLE_WIN_RELRANK, "beyond",
+    "win_relrank": sql_spec(
+        ORACLE_WIN_RELRANK, "beyond",
         doc="percent_rank + cume_dist price percentile within priority",
     ),
     "win_running_distinct": spec(

@@ -91,13 +91,27 @@ def sql_spec(text: str, *tags: str, doc: str = "") -> QuerySpec:
 # count), the most recent change first; then (c) a fill of the queries
 # whose newest hash-green driver row is oldest, alphabetical within one
 # evidence cohort. Each name a change seats in (b) displaces the last
-# (c) row, so the window stays at 50. A query past slot 50 has a
+# (c) row; when (c) is empty, it displaces the oldest (b) row. Either
+# way the window stays at 50. A query past slot 50 has a
 # driver-green row for its current code, plus the parity coverage of
 # tools/parity_check.py over all registered queries.
 PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
     # (b) implementation changed, most recent first
+    "filter_conj",
+    "filter_isin",
+    "join_broadcast_left",
+    "join_semi",
+    "join_anti",
+    "topk",
+    "limit_offset",
+    "sort_topn_per_key",
+    "dedup_exact_rows",
+    "win_relrank",
+    "cdc_snapshot_diff",
+    "geo_geofence_join",
+    "cdc_merge_ops",
     "agg_count",
     "agg_distinct",
     "agg_count_distinct",
@@ -134,19 +148,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "llm_embed_rp",
     "stream_stateful",
     "stream_dedup",
-    "stream_stream_join",
-    "stream_static_join",
-    "graph_label_propagation",
-    "graph_bfs_levels",
-    "graph_pagerank",
-    "llm_tfidf",
-    "llm_dedup_containment",
-    "graph_degree_hist",
-    "llm_boilerplate_coverage",
-    "llm_lexical_diversity",
-    "agg_weighted_median",
-    "dq_referential",
-    "agg_approx",
 )
 
 

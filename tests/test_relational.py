@@ -12,10 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_verkada_spark.operators.dedup import last_wins
-from etl_verkada_spark.operators.filters import filter_conj
-from etl_verkada_spark.operators.joins import join_asof, join_broadcast_left
+from etl_verkada_spark.operators.joins import join_asof
 from etl_verkada_spark.operators.scans import keyset_pages, validate_json
-from etl_verkada_spark.operators.sorts import topk
 from etl_verkada_spark.catalog import TABLES, table_validated
 from etl_verkada_spark.registry import build_registry
 
@@ -34,20 +32,42 @@ def formatted_plan(df) -> str:
 
 # --- physical plan assertions ------------------------------------------------
 
-def test_broadcast_join_is_broadcast(spark):
-    plan = plan_of(join_broadcast_left(spark, SF_SMALL))
-    assert "BroadcastHashJoin" in plan, plan
+@pytest.mark.parametrize(
+    "name, join",
+    [
+        ("join_broadcast_left", "BroadcastHashJoin"),
+        ("join_semi", "BroadcastHashJoin"),
+        ("join_anti", "BroadcastHashJoin"),
+        ("geo_geofence_join", "BroadcastNestedLoopJoin"),
+    ],
+)
+def test_hinted_join_broadcasts_without_auto_broadcast(spark, name, join):
+    """The small side must broadcast because the query says so, not
+    because the test tables sit under the auto-broadcast threshold: with
+    that threshold off, an unhinted plan is a SortMergeJoin (or, for the
+    range-predicate geofence, a CartesianProduct), a shuffle of the big
+    side that breaks the 100-TB story."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        tree = plan_tree(build_registry()[name].fn(spark, SF_SMALL))
+    finally:
+        spark.conf.set(key, saved)
+    assert join in tree, tree
+    assert "SortMergeJoin" not in tree, tree
+    assert "CartesianProduct" not in tree, tree
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    plan = formatted_plan(filter_conj(spark, SF_SMALL))
+    plan = formatted_plan(build_registry()["filter_conj"].fn(spark, SF_SMALL))
     assert "PushedFilters: [" in plan
     # the equality predicate must actually be pushed, not just declared
     assert "EqualTo(l_returnflag,A)" in plan.replace(" ", "")
 
 
 def test_column_pruning(spark):
-    plan = formatted_plan(filter_conj(spark, SF_SMALL))
+    plan = formatted_plan(build_registry()["filter_conj"].fn(spark, SF_SMALL))
     scan_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     # projection uses 4 cols + filter col; the 11-col table must be pruned
     assert "l_extendedprice" not in scan_schema
@@ -55,7 +75,8 @@ def test_column_pruning(spark):
 
 
 def test_topk_is_take_ordered(spark):
-    assert "TakeOrderedAndProject" in plan_of(topk(spark, SF_SMALL))
+    df = build_registry()["topk"].fn(spark, SF_SMALL)
+    assert "TakeOrderedAndProject" in plan_of(df)
 
 
 # --- scans -------------------------------------------------------------------
@@ -767,11 +788,10 @@ def test_cdc_diff_classifies_exactly(spark):
         CDC_DEL_MOD,
         CDC_INS_MOD,
         CDC_UPD_MOD,
-        cdc_snapshot_diff,
     )
     from etl_verkada_spark.catalog import table
 
-    rows = cdc_snapshot_diff(spark, SF_SMALL).collect()
+    rows = build_registry()["cdc_snapshot_diff"].fn(spark, SF_SMALL).collect()
     by_op = {}
     for r in rows:
         by_op.setdefault(r["op"], set()).add(r["o_orderkey"])
@@ -1084,9 +1104,7 @@ def test_schema_evolution_nullfills_old_generation(spark):
 def test_relrank_single_window_pass(spark):
     """percent_rank and cume_dist share one (partition, order) spec ->
     ONE exchange + ONE sort + ONE Window operator."""
-    from etl_verkada_spark.operators.windows import win_relrank
-
-    tree = plan_tree(win_relrank(spark, SF_SMALL))
+    tree = plan_tree(build_registry()["win_relrank"].fn(spark, SF_SMALL))
     assert tree.count("Window") == 1, tree
     assert tree.count("Sort") == 1, tree
 
@@ -1299,12 +1317,9 @@ def test_topn_per_key_pushes_group_limit_below_exchange(spark):
     on BOTH sides of the exchange (Spark 3.5+ rank-limit pushdown): the
     map-side partial keeps N rows per key before the shuffle, so a hot
     key ships N rows per task, never the whole group."""
-    from etl_verkada_spark.operators.sorts import (
-        TOPN_PER_KEY,
-        sort_topn_per_key,
-    )
+    from etl_verkada_spark.operators.sorts import TOPN_PER_KEY
 
-    df = sort_topn_per_key(spark, SF_SMALL)
+    df = build_registry()["sort_topn_per_key"].fn(spark, SF_SMALL)
     plan = plan_of(df)
     assert plan.count("WindowGroupLimit") == 2, plan[:1500]
     assert "Partial" in plan.split("WindowGroupLimit")[2][:200] or (
@@ -1603,17 +1618,6 @@ def test_skyline_is_pareto_frontier(spark):
                 and (qp < r["price_c"] or qs > r["size"])
             )
             assert not dominated, (r, qp, qs)
-
-
-def test_geofence_join_broadcasts_fences(spark):
-    """The range-predicate containment join must be a broadcast
-    nested-loop with the AGGREGATED fence table on the build side —
-    a shuffle or cartesian here breaks the 100-TB story."""
-    from etl_verkada_spark.operators.geo import geo_geofence_join
-
-    tree = plan_tree(geo_geofence_join(spark, SF_SMALL))
-    assert "BroadcastNestedLoopJoin" in tree, tree
-    assert "CartesianProduct" not in tree, tree
 
 
 def test_interval_overlap_is_equi_join_on_band(spark):
