@@ -1,4 +1,4 @@
-"""localCheckpoint lifecycle helpers (r12 verdict item 4).
+"""localCheckpoint lifecycle helpers.
 
 ``DataFrame.localCheckpoint`` materializes the plan into persisted RDD
 blocks (MEMORY_AND_DISK) that live until the backing RDD is
