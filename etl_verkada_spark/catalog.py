@@ -15,11 +15,14 @@ All queries go through :func:`table` so that
   parquet without a schema starts a one-task inference job on every
   call, so :func:`_file_schema` infers each file's schema once and
   every read passes it in. The memo key is the session (held weakly,
-  so a stopped session's entries are freed) plus the file's path,
-  length and modification time. Only the schema is kept: the data is
-  re-read on every action. A rewrite in place that keeps both length
-  and mtime is not detected, the same staleness as Spark's own
-  file-status cache.
+  so a stopped session's entries are freed) plus the file's version:
+  its path, length and modification time. Only the schema is kept: the
+  data is re-read on every action. A rewrite in place that keeps both
+  length and mtime is not detected, the same staleness as Spark's own
+  file-status cache;
+* :func:`sql` registers a table's temp view only when the session's
+  view is stale: bound to another file version, or no longer the view
+  :func:`sql` registered.
 
 Schema-on-read validation (reference S3, ``task.ts:104-106,155-158``) is
 exposed via :func:`table_validated`, which applies an expected schema with
@@ -33,6 +36,7 @@ import os
 import re
 import weakref
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,37 +64,44 @@ def _path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: session -> {(path, length, mtime): inferred schema}. Sessions are
-#: held weakly so a stopped session's entries go with it; keying on the
-#: session keeps inference confs such as ``nanosAsLong`` per session.
+#: A file's version: its path, length and modification time.
+Version = tuple[str, int, int]
+
+#: session -> {file version: inferred schema}. Sessions are held weakly
+#: so a stopped session's entries go with it; keying on the session
+#: keeps inference confs such as ``nanosAsLong`` per session.
 _SCHEMAS: weakref.WeakKeyDictionary[
-    SparkSession, dict[tuple[str, int, int], T.StructType]
+    SparkSession, dict[Version, T.StructType]
 ] = weakref.WeakKeyDictionary()
 
 
-def _file_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The parquet schema Spark infers for ``path``, memoized in
-    ``_SCHEMAS``. The ``FileStatus`` comes from the path's own Hadoop
-    ``FileSystem``: about a millisecond, and it works for any URI the
-    reader accepts (for a directory, the directory's own status).
+def _file_version(spark: SparkSession, path: str) -> Version:
+    """``path``'s version, from the path's own Hadoop ``FileSystem``:
+    about a millisecond, and it works for any URI the reader accepts
+    (for a directory, the directory's own status).
 
-    Every read passes through here, so this is where a session built
-    elsewhere gets its defaults: before inference, because ``events``
-    must be inferred with ``nanosAsLong`` set."""
+    Every read starts here, so this is where a session built elsewhere
+    gets its defaults: before inference, because ``events`` must be
+    inferred with ``nanosAsLong`` set."""
     ensure_session_defaults(spark)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(
         jpath
     )
-    key = (path, status.getLen(), status.getModificationTime())
+    return path, status.getLen(), status.getModificationTime()
+
+
+def _file_schema(spark: SparkSession, version: Version) -> T.StructType:
+    """The parquet schema Spark infers for the file at ``version``,
+    memoized in ``_SCHEMAS``."""
     memo = _SCHEMAS.setdefault(spark, {})
-    if key not in memo:
-        memo[key] = spark.read.parquet(path).schema
-    return memo[key]
+    if version not in memo:
+        memo[version] = spark.read.parquet(version[0]).schema
+    return memo[version]
 
 
-def _read(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(_file_schema(spark, path)).parquet(path)
+def _read(spark: SparkSession, version: Version) -> DataFrame:
+    return spark.read.schema(_file_schema(spark, version)).parquet(version[0])
 
 
 def _micros_ts(df: DataFrame) -> DataFrame:
@@ -107,18 +118,22 @@ def _micros_ts(df: DataFrame) -> DataFrame:
     )
 
 
+def _table_at(spark: SparkSession, version: Version, name: str) -> DataFrame:
+    df = _read(spark, version)
+    return _micros_ts(df) if name == "events" else df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing engine-specific quirks.
 
     Runs no Spark job when this session has already read the file at
     its current length and mtime: the schema comes from the memo of
-    :func:`_file_schema` (keyed on the weakly held session, path,
-    length and mtime). The first read runs Spark's one-task schema
+    :func:`_file_schema` (keyed on the weakly held session and the
+    file's version). The first read runs Spark's one-task schema
     inference. An in-place rewrite that keeps length and mtime is not
     detected, as with Spark's file-status cache.
     """
-    df = _read(spark, _path(sf_dir, name))
-    return _micros_ts(df) if name == "events" else df
+    return _table_at(spark, _file_version(spark, _path(sf_dir, name)), name)
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -126,18 +141,49 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
+#: session -> (its JVM ``SessionCatalog``, {bare table name: (the file
+#: version its view reads, the view as :func:`sql` registered it)}),
+#: held weakly like ``_SCHEMAS``.
+_VIEWS: weakref.WeakKeyDictionary[
+    SparkSession, tuple[JavaObject, dict[str, tuple[Version, JavaObject]]]
+] = weakref.WeakKeyDictionary()
+
+
 def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     """Run ``text`` on Spark over the catalog tables it names.
 
-    Each table named as a whole word is read through :func:`table` and
-    registered as a temp view under its bare name, replacing any view of
-    that name from an earlier call, at this or another scale. That is
-    safe because ``spark.sql`` resolves views when it analyzes the
-    text: a DataFrame returned earlier keeps the tables it was built on.
+    This function owns the session's temp views named like a catalog
+    table (``orders``, ``events``, ...). Each table named in ``text`` as
+    a whole word gets a view under its bare name, read through
+    :func:`table`. The view is registered again only when it is stale:
+
+    * the file it would read now (``sf_dir``'s file, at its current
+      length and mtime) is not the one the view reads, as after a
+      switch to another scale or a rewrite of the file;
+    * or the session's view of that name is no longer the one this
+      function registered: someone else replaced or dropped it. That
+      check costs two Py4J round trips per table.
+
+    Otherwise the view is reused, and a repeat call costs the file
+    version, that check and ``spark.sql``. Re-registering is safe
+    because ``spark.sql`` resolves views when it analyzes the text: a
+    DataFrame returned earlier keeps the tables it was built on.
     """
+    if spark not in _VIEWS:
+        _VIEWS[spark] = (spark._jsparkSession.sessionState().catalog(), {})
+    session_catalog, bound = _VIEWS[spark]
     for name in TABLES:
-        if re.search(rf"\b{name}\b", text):
-            table(spark, sf_dir, name).createOrReplaceTempView(name)
+        if not re.search(rf"\b{name}\b", text):
+            continue
+        version = _file_version(spark, _path(sf_dir, name))
+        view = bound.get(name)
+        if (
+            view is None
+            or view[0] != version
+            or not view[1].equals(session_catalog.getTempView(name))
+        ):
+            _table_at(spark, version, name).createOrReplaceTempView(name)
+            bound[name] = (version, session_catalog.getTempView(name))
     return spark.sql(text)
 
 
@@ -170,7 +216,7 @@ def table_validated(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     v1.17.0 fix for optional/null tolerance on the last page maps to
     marking fields nullable here.
     """
-    df = _read(spark, _path(sf_dir, name))
+    df = _read(spark, _file_version(spark, _path(sf_dir, name)))
     expected = EXPECTED_SCHEMAS.get(name)
     if expected is not None:
         have = {f.name: f.dataType for f in df.schema.fields}

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..catalog import table
+from ..catalog import sql, table
 from ..registry import spec, sql_spec
 
 
@@ -162,7 +162,12 @@ def udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched form, ~10-100x faster, used only where JVM builtins
     can't express the logic (here they could — the point is the harness).
     """
-    li = table(spark, sf_dir, "lineitem")
+    li = sql(
+        spark,
+        sf_dir,
+        "SELECT l_orderkey, l_linenumber, l_extendedprice, l_discount"
+        " FROM lineitem",
+    )
     return li.select(
         "l_orderkey",
         "l_linenumber",

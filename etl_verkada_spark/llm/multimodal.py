@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import sql, table
 from ..registry import spec
 
 FRAME_SCHEMA = (
@@ -430,16 +430,18 @@ WHERE doc_id % 3 IN (0, 1)
 
 
 def mm_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked metadata/payload stats (no Python involved)."""
-    docs = table(spark, sf_dir, "documents")
-    payload = with_binary_payload(docs)
-    return payload.select(
-        "doc_id",
-        F.octet_length("payload").alias("n_bytes"),
-        F.col("meta.mime").alias("mime"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-    )
+    """Oracle-checked metadata/payload stats (no Python involved): the
+    columns ``with_binary_payload`` derives, as one SQL text."""
+    return sql(spark, sf_dir, """
+SELECT
+  doc_id,
+  octet_length(encode(text, 'utf-8')) AS n_bytes,
+  element_at(array('image/jpeg', 'image/png', 'audio/wav'),
+             CAST(doc_id % 3 + 1 AS INT)) AS mime,
+  CAST(640 + (doc_id % 4) * 160 AS INT) AS width,
+  CAST(360 + (doc_id % 4) * 90 AS INT) AS height
+FROM documents
+""")
 
 
 ORACLE_MM_BINARY_STATS = """
@@ -490,10 +492,14 @@ def extract_features(payloads: DataFrame) -> DataFrame:
     return payloads.mapInPandas(featurize, FEATURE_SCHEMA)
 
 
+#: The binary payload the feature extractors read: the documents' utf-8
+#: bytes (``with_binary_payload`` without the metadata they never read).
+PAYLOADS = "SELECT doc_id, encode(text, 'utf-8') AS payload FROM documents"
+
+
 def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode+featurize over every payload (oracle-checked)."""
-    docs = table(spark, sf_dir, "documents")
-    return extract_features(with_binary_payload(docs))
+    return extract_features(sql(spark, sf_dir, PAYLOADS))
 
 
 def extract_features_arrow(payloads: DataFrame) -> DataFrame:
@@ -527,8 +533,7 @@ def extract_features_arrow(payloads: DataFrame) -> DataFrame:
 def mm_feature_extract_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-native decode+featurize twin (same oracle as the pandas
     form — identical results, different Python boundary)."""
-    docs = table(spark, sf_dir, "documents")
-    return extract_features_arrow(with_binary_payload(docs))
+    return extract_features_arrow(sql(spark, sf_dir, PAYLOADS))
 
 
 ORACLE_MM_FEATURE_EXTRACT = """

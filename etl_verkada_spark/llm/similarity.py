@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..catalog import table
+from ..catalog import sql, table
 from ..checkpoints import checkpoint_replacing
 from ..registry import spec
 
@@ -133,12 +133,11 @@ def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch with no per-row object materialization (the pandas_udf
     ``np.vstack`` over an object Series was both slower and bimodal at
     sf1: 0.67-3.35 s across runs vs 0.63-0.78 s for this kernel,
-    identical top-k). Rounding stays JVM-side (F.round HALF_UP — numpy
+    identical top-k). Rounding stays JVM-side (SQL round, HALF_UP — numpy
     rounds half-even). The plan is scan -> kernel -> TakeOrdered, no
     shuffle; ordering is total (rounded sim desc, vec_id) so top-k is
     deterministic.
     """
-    e = table(spark, sf_dir, "embeddings")
     qvec = _fetch_query_vec(sf_dir)
     q = np.array(qvec, dtype=np.float64)
     qn = _qnorm(qvec)
@@ -163,14 +162,16 @@ def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["vec_id", "label", "sim_raw"],
             )
 
-    label_type = dict(e.dtypes)["label"]
-    scored = (
-        e.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "label", "embedding")
-        .mapInArrow(kernel, f"vec_id long, label {label_type}, sim_raw double")
+    e = sql(
+        spark,
+        sf_dir,
+        "SELECT vec_id, label, embedding FROM embeddings"
+        f" WHERE vec_id <> {QUERY_VEC_ID}",
     )
+    label_type = dict(e.dtypes)["label"]
     return (
-        scored.select("vec_id", "label", F.round("sim_raw", 4).alias("sim"))
+        e.mapInArrow(kernel, f"vec_id long, label {label_type}, sim_raw double")
+        .selectExpr("vec_id", "label", "round(sim_raw, 4) AS sim")
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(TOP_K)
     )
@@ -748,32 +749,35 @@ def _rp_signs() -> list[list[int]]:
     ]
 
 
+#: Corpus-scale int8 quantization as two CTEs, ``g`` (the global max)
+#: and ``q`` (vec_id, q): ONE global scale (127 / max|x| over the whole
+#: corpus) so quantized values are comparable ACROSS vectors — the
+#: precondition for distances on the int domain (llm_embed_quantize's
+#: per-vector scale maximizes per-vector precision instead; the two are
+#: deliberate siblings). Float32 -> double widening, one max-aggregate
+#: broadcast back, floor(x*scale + 0.5) sign-safe rounding — every step
+#: IEEE-identical in both engines, so the BIGINT q vectors match
+#: exactly. Spark SQL reads ``127.0`` and ``0.5`` as DECIMAL, hence the
+#: DOUBLE casts: the oracle's sequence is double arithmetic.
+GLOBAL_Q_CTES = """
+g AS (
+  SELECT MAX(array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE)))))
+    AS gmax
+  FROM embeddings
+),
+q AS (
+  SELECT /*+ BROADCAST(g) */ vec_id,
+         transform(embedding, x -> CAST(floor(
+           CAST(x AS DOUBLE) * (CAST(127.0 AS DOUBLE) / g.gmax)
+           + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS q
+  FROM embeddings CROSS JOIN g
+)"""
+
+
 def _global_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-scale int8 quantization: ONE global scale (127 /
-    max|x| over the whole corpus) so quantized values are comparable
-    ACROSS vectors — the precondition for distances on the int domain
-    (llm_embed_quantize's per-vector scale maximizes per-vector
-    precision instead; the two are deliberate siblings). Float32 ->
-    double widening, one max-aggregate broadcast back via crossJoin,
-    floor(x*scale + 0.5) sign-safe rounding — every step IEEE-identical
-    in both engines, so the BIGINT q vectors match exactly.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    xd = F.transform("embedding", lambda x: x.cast("double"))
-    amax = F.array_max(F.transform(xd, F.abs))
-    gmax = e.select(amax.alias("amax")).agg(
-        F.max("amax").alias("gmax")
-    )
-    scale = F.lit(127.0) / F.col("gmax")
-    return (
-        e.crossJoin(F.broadcast(gmax))
-        .select(
-            "vec_id",
-            F.transform(
-                xd, lambda x: F.floor(x * scale + F.lit(0.5)).cast("bigint")
-            ).alias("q"),
-        )
-    )
+    """(vec_id, q): every embedding on the global int8 grid
+    (``GLOBAL_Q_CTES``)."""
+    return sql(spark, sf_dir, f"WITH {GLOBAL_Q_CTES} SELECT vec_id, q FROM q")
 
 
 def llm_embed_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,22 +791,20 @@ def llm_embed_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the scalar gmax broadcast, no UDF, and integer-exact
     in both engines (sums bounded by 64*127). The projection matrix is
     seeded Python inlined into both plans, like the LSH oracle's
-    hyperplanes. The projection is built as SQL text: one string per
-    output dim is parsed once, where the same Column built call by call
-    costs ~520 Py4J round trips.
+    hyperplanes. The whole query is one SQL text, parsed once.
 
     At 100 TB: map-only over the embedding scan; output is 8 BIGINTs a
     row — the shape later stages (LSH banding on signs, coarse k-means)
     consume without touching the original vectors again.
     """
-    return _global_q(spark, sf_dir).selectExpr(
-        "vec_id",
-        *(
-            f"aggregate(zip_with(q, array({', '.join(map(str, signs))}),"
-            f" (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            f" AS rp_{j}"
-            for j, signs in enumerate(_rp_signs())
-        ),
+    dims = ",\n  ".join(
+        f"aggregate(zip_with(q, array({', '.join(map(str, signs))}),"
+        f" (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+        f" AS rp_{j}"
+        for j, signs in enumerate(_rp_signs())
+    )
+    return sql(
+        spark, sf_dir, f"WITH {GLOBAL_Q_CTES}\nSELECT vec_id,\n  {dims}\nFROM q"
     )
 
 
@@ -864,38 +866,30 @@ def llm_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference, fold of squares — BIGINT-exact (bounded 64 * 254^2),
     no sqrt. Argmin is min(struct(dist2, centroid_id)): lexicographic
     struct ordering gives the deterministic tie-break a float argmin
-    cannot. The K centroid vectors ride a broadcast crossJoin; one
-    groupBy(vec_id) collapses the K candidates.
+    cannot. The K centroid vectors ride a broadcast cross join; one
+    GROUP BY vec_id collapses the K candidates.
 
     At 100 TB: K centroids always broadcast (they are the small model
     state); the scan is the only data pass; the full Lloyd's iteration
     is this plan + a centroid-mean aggregate, repeated — the iterative
     discipline of graph_pagerank (localCheckpoint per step) applies.
     """
-    q = _global_q(spark, sf_dir)
-    cents = (
-        q.orderBy("vec_id")
-        .limit(KMEANS_K)
-        .select(
-            F.col("vec_id").alias("centroid_id"), F.col("q").alias("cq")
-        )
-    )
-    dist2 = F.aggregate(
-        F.zip_with(F.col("q"), F.col("cq"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = q.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "centroid_id", dist2.alias("dist2_q")
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.min(F.struct("dist2_q", "centroid_id")).alias("b")
-    )
-    return best.select(
-        "vec_id",
-        F.col("b.centroid_id").alias("centroid_id"),
-        F.col("b.dist2_q").alias("dist2_q"),
-    )
+    return sql(spark, sf_dir, f"""
+WITH {GLOBAL_Q_CTES},
+cents AS (
+  SELECT vec_id AS centroid_id, q AS cq FROM q ORDER BY vec_id LIMIT {KMEANS_K}
+),
+best AS (
+  SELECT /*+ BROADCAST(c) */ q.vec_id,
+         min(named_struct(
+           'dist2_q', aggregate(zip_with(q.q, c.cq, (a, b) -> (a - b) * (a - b)),
+                                CAST(0 AS BIGINT), (acc, x) -> acc + x),
+           'centroid_id', c.centroid_id)) AS b
+  FROM q CROSS JOIN cents c
+  GROUP BY q.vec_id
+)
+SELECT vec_id, b.centroid_id AS centroid_id, b.dist2_q AS dist2_q FROM best
+""")
 
 
 #: Lloyd's iterations for the trained variant

@@ -99,6 +99,15 @@ PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
     # (b) implementation changed, most recent first
+    "llm_kmeans_assign",
+    "llm_embed_rp",
+    "mm_binary_stats",
+    "mm_feature_extract",
+    "mm_feature_extract_arrow",
+    "llm_sim_search",
+    "udf_pandas",
+    "llm_kmeans_train",
+    "llm_sim_ann_pq",
     "filter_conj",
     "filter_isin",
     "join_broadcast_left",
@@ -139,15 +148,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "subquery_not_in",
     "agg_grouping_sets",
     "udtf_bigrams",
-    "stream_mv_refresh",
-    "stream_mv_apply",
-    "stream_drift",
-    "stream_drift_apply",
-    "stream_topk",
-    "stream_topk_apply",
-    "llm_embed_rp",
-    "stream_stateful",
-    "stream_dedup",
 )
 
 

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import _file_schema, _micros_ts, _path
+from ..catalog import _file_schema, _file_version, _micros_ts, _path
 from ..operators.aggregates import unscale
 from ..registry import spec
 
@@ -59,7 +59,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nanos->micros conversion are catalog.table's, so the stream
     runs no inference job once the session has read the events file."""
     stream = (
-        spark.readStream.schema(_file_schema(spark, _path(sf_dir, "events")))
+        spark.readStream.schema(
+            _file_schema(spark, _file_version(spark, _path(sf_dir, "events")))
+        )
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
