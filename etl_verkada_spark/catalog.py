@@ -22,7 +22,10 @@ All queries go through :func:`table` so that
   file-status cache;
 * :func:`sql` registers a table's temp view only when the session's
   view is stale: bound to another file version, or no longer the view
-  :func:`sql` registered.
+  :func:`sql` registered;
+* :func:`landing` decides when a fixture built from the tables (landed
+  once, then reused across calls) is still current: it is keyed on the
+  versions of the files it was built from.
 
 Schema-on-read validation (reference S3, ``task.ts:104-106,155-158``) is
 exposed via :func:`table_validated`, which applies an expected schema with
@@ -32,16 +35,19 @@ aborts the run on shape drift.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 import weakref
+from collections.abc import Callable, Sequence
 
 from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .session import ensure_session_defaults
+from .session import _PACKAGE_ROOT, ensure_session_defaults
 
 #: Every table the driver generates (TESTDATA.md).
 TABLES = (
@@ -185,6 +191,50 @@ def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
             _table_at(spark, version, name).createOrReplaceTempView(name)
             bound[name] = (version, session_catalog.getTempView(name))
     return spark.sql(text)
+
+
+def land_dir(sf_dir: str, name: str) -> str:
+    """The landing dir of ``name`` for ``sf_dir`` under ``/tmp/spark_graft_land``.
+
+    Keyed on the data dir's basename, for reading, and a short hash of its
+    real path and of this checkout's root: two data dirs with one basename,
+    or two checkouts, each get their own landing.
+    """
+    base = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    where = f"{os.path.realpath(sf_dir)}\0{_PACKAGE_ROOT}"
+    digest = hashlib.sha1(where.encode()).hexdigest()[:10]
+    return f"/tmp/spark_graft_land/{name}_{base}-{digest}"
+
+
+def landing(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    sources: Sequence[str],
+    build: Callable[[str], None],
+    *params: object,
+) -> str:
+    """The path of fixture ``name``, built by ``build(path)`` from the
+    tables ``sources`` of ``sf_dir`` and reused while they are unchanged.
+
+    The path is ``land_dir(sf_dir, name)/<version>``, where the version
+    hashes each source file's length and mtime and ``params``, the
+    values the build bakes in. A build is complete once its ``_LANDED``
+    marker is written; without one, the whole ``land_dir`` is removed
+    first, which drops older versions and builds that died part-way.
+    Spark's readers skip ``_``-prefixed names, so state derived from the
+    fixture can live inside it (``path/_state``) and goes with it.
+    """
+    key = [_file_version(spark, _path(sf_dir, t))[1:] for t in sources]
+    version = hashlib.sha1(repr((key, params)).encode()).hexdigest()[:12]
+    root = land_dir(sf_dir, name)
+    path = os.path.join(root, version)
+    marker = os.path.join(path, "_LANDED")
+    if not os.path.exists(marker):
+        shutil.rmtree(root, ignore_errors=True)
+        build(path)
+        open(marker, "w").close()
+    return path
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import sql, table
+from ..catalog import landing, sql, table
 from ..registry import spec, sql_spec
 
 
@@ -145,10 +145,10 @@ def scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     as agg_incremental_merge / stream_mv_refresh, applied to the
     warehouse's core dimension-history op).
 
-    Mechanics: history = the MATERIALIZED interval table (landed once
-    per sf_dir as a parquet fixture — the upstream state a real
-    warehouse would hold; the fold itself runs from it every call,
-    mirroring stream_mv_refresh's landing discipline); delta = events
+    Mechanics: history = the MATERIALIZED interval table (a parquet
+    fixture from :func:`~..catalog.landing`, rebuilt when events or the
+    split change — the upstream state a real warehouse would hold; the
+    fold itself runs from it every call); delta = events
     at/after SCD2_SPLIT_US (event time is a clean split, so every
     delta event sorts after every history event). Users absent from
     the delta pass their intervals through UNTOUCHED. For touched
@@ -165,10 +165,6 @@ def scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortcut loses nothing; the bench row (sf1) is the incremental-
     vs-recompute crossover measured.
     """
-    import os
-
-    from .scans import _land_dir
-
     e = table(spark, sf_dir, "events")
     ev = e.select(
         "user_id",
@@ -176,17 +172,13 @@ def scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
         "event_id",
     )
-    land = _land_dir(sf_dir, "scd2_hist")
-    done = os.path.join(land, "_LANDED")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(land, ignore_errors=True)
-        _scd2_intervals(
+    land = landing(
+        spark, sf_dir, "scd2_hist", ["events"],
+        lambda path: _scd2_intervals(
             ev.filter(F.col("us") < SCD2_SPLIT_US)
-        ).write.mode("overwrite").parquet(land)
-        with open(done, "w") as f:
-            f.write("ok")
+        ).write.parquet(path),
+        SCD2_SPLIT_US,
+    )
     hist = spark.read.parquet(land).select(
         "user_id", "run_id", "state", "valid_from", "valid_to", "n_events"
     )

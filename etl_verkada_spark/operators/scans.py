@@ -20,15 +20,13 @@ keyset form is the one to use on big tables.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table, table_validated
+from ..catalog import land_dir, landing, table, table_validated
 from ..registry import spec
-from ..session import _PACKAGE_ROOT
 
 PAGE_SIZE = 50  # reference page size, task.ts:119
 
@@ -185,7 +183,7 @@ ORACLE_VALIDATE_EXPECTATIONS = """
 SELECT
   COUNT(*) AS n_rows,
   -- CAST: DuckDB SUM over integers is HUGEINT -> pandas float64; Spark
-  -- emits int64 and the driver's hash is dtype-sensitive (r2 hash FAIL)
+  -- emits int64 and the driver's hash is dtype-sensitive
   CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
     AS n_null_cust,
   COUNT(*) - COUNT(DISTINCT o_orderkey) AS n_dup_orderkey,
@@ -205,40 +203,17 @@ LAND_DDL = (
 )
 
 
-def _land_dir(sf_dir: str, fmt: str) -> str:
-    """The landing dir of ``fmt`` for ``sf_dir`` under ``/tmp/spark_graft_land``.
-
-    Keyed on the data dir's basename, for reading, and a short hash of its
-    real path and of this checkout's root: two data dirs with one basename,
-    or two checkouts, each get their own landing and state dirs.
-    """
-    name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    where = f"{os.path.realpath(sf_dir)}\0{_PACKAGE_ROOT}"
-    digest = hashlib.sha1(where.encode()).hexdigest()[:10]
-    return f"/tmp/spark_graft_land/{fmt}_{name}-{digest}"
-
-
-def pruned_land_path(sf_dir: str) -> str:
-    """The partitioned-events landing dir, keyed on a content fingerprint
-    of the source file (mtime+size) so regenerated testdata can never be
-    shadowed by a stale landing (ADVICE r2). Shared with the plan-shape
-    test so query and test always resolve the same directory."""
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    return _land_dir(sf_dir, f"events_by_type_{fp}")
-
-
 def _land_then_read(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     """Write the orders projection out as CSV/JSON lines, then read it
     back with a DECLARED schema in FAILFAST mode — the land-then-read
-    pattern SCALE.md prescribes for sequential sources (drain the API to
+    pattern for sequential sources (drain the API to
     object storage once; analytics scan the landed files in parallel).
     The read side is the operator under test: schema-on-read text
     formats with strict validation, partition-parallel file splits, and
     lossless round-trip of longs/strings/doubles (Spark writes doubles
     as shortest-roundtrip decimal strings, so read(write(x)) == x)."""
     src = table(spark, sf_dir, "orders").select(*LAND_COLS)
-    path = _land_dir(sf_dir, fmt)
+    path = land_dir(sf_dir, fmt)
     writer = src.write.mode("overwrite")
     if fmt == "csv":
         writer.option("header", True).csv(path)
@@ -278,17 +253,10 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    path = pruned_land_path(sf_dir)
-    # GC the landings of this sf_dir keyed on a stale fingerprint, or
-    # regenerated testdata would accumulate /tmp copies unboundedly.
-    import glob
-    import shutil
-
-    for stale in glob.glob(_land_dir(sf_dir, "events_by_type_*")):
-        if stale != path:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        src.write.mode("overwrite").partitionBy("event_type").parquet(path)
+    path = landing(
+        spark, sf_dir, "events_by_type", ["events"],
+        lambda p: src.write.partitionBy("event_type").parquet(p),
+    )
     part = spark.read.parquet(path).filter(
         F.col("event_type") == "purchase"
     )
@@ -352,7 +320,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-level null-fill — no data rewrite, no shuffle, scan-only.
     """
     src = table(spark, sf_dir, "orders")
-    path = _land_dir(sf_dir, "schema_evo")
+    path = land_dir(sf_dir, "schema_evo")
     gen1 = src.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -403,7 +371,7 @@ def scan_manifest_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     src = table(spark, sf_dir, "orders")
-    root = _land_dir(sf_dir, "manifest_log")
+    root = land_dir(sf_dir, "manifest_log")
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     for s in range(3):
         src.filter(F.col("o_orderkey") % 3 == s).select(*cols).coalesce(
@@ -419,7 +387,7 @@ def scan_manifest_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # log replay: highest committed version wins (driver-side metadata).
     # NUMERIC version sort — lexicographic filename order would put
-    # manifest_v10 before manifest_v2 (ADVICE r5)
+    # manifest_v10 before manifest_v2
     import re as _re
 
     def _vnum(fname: str) -> int:
@@ -462,41 +430,27 @@ def maintain_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle is the same SELECT as the other landings), and the
     file-count contract is asserted in tests/test_relational.py.
 
-    Both layouts are fingerprint-keyed on the source (stale copies
-    GC'd like scan_partition_pruned's) and idempotent: a _DONE marker
-    skips the rewrite on re-run, so the bench measures the READ-side
-    win, not the rewrite.
+    Both layouts are one :func:`~..catalog.landing` of orders, built
+    once and reused while orders and the two file counts are unchanged,
+    so the bench measures the READ-side win, not the rewrite.
     """
-    import shutil
-
     src = table(spark, sf_dir, "orders").select(*LAND_COLS)
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    fp = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:"
-        f"{COMPACT_SMALL_FILES}:{COMPACT_TARGET_FILES}".encode()
-    ).hexdigest()[:12]
-    base = _land_dir(sf_dir, "compact")
-    if os.path.isdir(base):
-        for old in os.listdir(base):
-            if old != fp:
-                shutil.rmtree(os.path.join(base, old), ignore_errors=True)
-    frag_dir = os.path.join(base, fp, "fragmented")
-    compact_dir = os.path.join(base, fp, "compacted")
-    done = os.path.join(base, fp, "_DONE")
-    if not os.path.exists(done):
-        src.repartition(COMPACT_SMALL_FILES).write.mode(
-            "overwrite"
-        ).parquet(frag_dir)
+
+    def build(path: str) -> None:
+        frag_dir = os.path.join(path, "fragmented")
+        src.repartition(COMPACT_SMALL_FILES).write.parquet(frag_dir)
         (
             spark.read.schema(LAND_DDL)
             .parquet(frag_dir)
             .coalesce(COMPACT_TARGET_FILES)
-            .write.mode("overwrite")
-            .parquet(compact_dir)
+            .write.parquet(os.path.join(path, "compacted"))
         )
-        with open(done, "w") as f:
-            f.write("ok")
-    return spark.read.schema(LAND_DDL).parquet(compact_dir)
+
+    path = landing(
+        spark, sf_dir, "compact", ["orders"], build,
+        COMPACT_SMALL_FILES, COMPACT_TARGET_FILES,
+    )
+    return spark.read.schema(LAND_DDL).parquet(os.path.join(path, "compacted"))
 
 
 #: column surface served by the REST fixture server and declared by the
@@ -538,7 +492,7 @@ def _rest_scan(spark: SparkSession, sf_dir: str, fmt: str,
         .collect()
     ]
     server, port, _stats = make_server(items)
-    land = _land_dir(sf_dir, f"rest_{fmt}")
+    land = land_dir(sf_dir, f"rest_{fmt}")
     try:
         register(spark)
         reader = (

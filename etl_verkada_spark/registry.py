@@ -28,8 +28,13 @@ Conventions (BASELINE.md / driver contract):
   reads of a cell-sized table that parameterize the plan
   (agg_weighted_median's median-bucket pick, ts_lttb's cell table), or
   files landed and read back (scan_*_land, maintain_*, the upsert
-  streams). Such a plan is frozen against the source as read at build
-  time: rebuild via the registry callable after any data change
+  streams). A fixture that a callable lands once and then reuses
+  (scd2_apply, maintain_compact, scan_partition_pruned and the
+  stream_mv_*, stream_drift* and stream_topk* families) is a
+  ``catalog.landing``, keyed on the length and mtime of each source
+  file, so a rebuild after a data change reads the new data. A
+  DataFrame already built stays frozen against the source as read at
+  build time: rebuild via the registry callable after any data change
   instead of caching the DataFrame.
 """
 
@@ -99,6 +104,15 @@ PRIORITY_ORDER: tuple[str, ...] = (
     # flagship
     "flagship_flat",
     # (b) implementation changed, most recent first
+    "scd2_apply",
+    "stream_mv_refresh",
+    "stream_mv_apply",
+    "stream_drift",
+    "stream_drift_apply",
+    "stream_topk",
+    "stream_topk_apply",
+    "maintain_compact",
+    "scan_partition_pruned",
     "llm_kmeans_assign",
     "llm_embed_rp",
     "mm_binary_stats",
@@ -139,15 +153,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "set_intersect_all",
     "win_rownum",
     "win_rank",
-    "win_ntile",
-    "win_first_last",
-    "subquery_exists",
-    "subquery_in",
-    "subquery_scalar",
-    "subquery_lateral",
-    "subquery_not_in",
-    "agg_grouping_sets",
-    "udtf_bigrams",
 )
 
 

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..catalog import table
+from ..catalog import landing, table
 from ..checkpoints import release
 from ..operators.aggregates import (
     ORACLE_AGG_INCREMENTAL_MERGE,
@@ -48,7 +48,6 @@ from ..operators.aggregates import (
 )
 from ..operators.dedup import last_wins
 from ..operators.quality import ORACLE_DQ_DRIFT, drift_pairs, drift_tvd
-from ..operators.scans import _land_dir
 from ..registry import spec
 
 
@@ -225,10 +224,10 @@ class Family:
     """One incremental-maintenance family as data.
 
     The landing source is ``columns`` of ``table``, split into
-    ``n_chunks`` chunks by the SQL expression ``chunk`` and landed
-    under ``_land_dir(sf_dir, land)``; ``version`` is the landing
-    layout version — bump it when the chunk naming or the state layout
-    changes, so stale fixtures rebuild instead of mis-parsing.
+    ``n_chunks`` chunks by the SQL expression ``chunk`` and landed as
+    the :func:`~..catalog.landing` named ``land``; ``version`` is the
+    landing layout version — bump it when the chunk naming or the state
+    layout changes, so stale fixtures rebuild instead of mis-parsing.
 
     The fold is ``partial`` (a batch -> mergeable partials), ``merge``
     (a union of partials -> partials) and ``finish`` (partials -> the
@@ -315,45 +314,24 @@ def state_fold(family: Family, state_dir: str):
     return fold
 
 
-def _ensure_chunk_landing(
-    land: str,
-    src: DataFrame,
-    n_chunks: int,
-    version: str,
-) -> str:
-    """Build (or reuse) a "files arriving" landing fixture: each chunk
-    of ``src`` (rows tagged by a ``__chunk`` column) lands as up to
-    N_CHUNK_FILES parquet parts under DETERMINISTIC names
-    (``chunk_00_p00.parquet`` ...), so lexical order IS landing order —
-    append-mode part files carry UUID names whose sort order is
-    arbitrary, which would make the 'arriving chunk' an arbitrary one.
-    Each chunk is written to a staging dir and its part files renamed
-    into place.
+def _land_chunks(src: DataFrame, n_chunks: int, land: str) -> None:
+    """Land a "files arriving" fixture: each chunk of ``src`` (rows
+    tagged by a ``__chunk`` column) lands as up to N_CHUNK_FILES
+    parquet parts under DETERMINISTIC names (``chunk_00_p00.parquet``
+    ...), so lexical order IS landing order — append-mode part files
+    carry UUID names whose sort order is arbitrary, which would make
+    the 'arriving chunk' an arbitrary one. Each chunk is written to a
+    staging dir and its part files renamed into place.
 
     The landing is the upstream fixture, not the operator under
-    measurement: built once per sf_dir and reused (at sf1 the chunk
-    re-scans + writes were 90%+ of the measured time, drowning the
-    fold being benchmarked). Folds still run from scratch per call.
-    Rebuilding the landing INVALIDATES the state fixtures derived from
-    its file identities — both state dirs are removed here, and the
-    apply drivers additionally record the exact prior-file list in
-    their ``_PRIMED`` markers.
+    measurement, so it is built once per source version and reused (at
+    sf1 the chunk re-scans and writes were 90%+ of the measured time,
+    drowning the fold being benchmarked). Folds still run from scratch
+    per call, and their state lives inside the landing, so a rebuilt
+    landing never meets state derived from an older one.
     """
-    done = os.path.join(land, "_LANDED")
-    try:
-        with open(done) as f:
-            if f.read().strip() == version:
-                return land
-    except OSError:
-        pass
-    shutil.rmtree(land, ignore_errors=True)
-    # state fixtures keyed to the old landing's file identities are
-    # invalid the moment the landing rebuilds
-    shutil.rmtree(land + "_state", ignore_errors=True)
-    shutil.rmtree(land + "_prior_state", ignore_errors=True)
-    os.makedirs(land, exist_ok=True)
+    stage = os.path.join(land, "_stage")
     for c in range(n_chunks):
-        stage = f"{land}_stage"
         src.filter(F.col("__chunk") == c).drop("__chunk").repartition(
             N_CHUNK_FILES
         ).write.mode("overwrite").parquet(stage)
@@ -365,10 +343,7 @@ def _ensure_chunk_landing(
                 os.path.join(stage, part),
                 os.path.join(land, f"chunk_{c:02d}_p{i:02d}.parquet"),
             )
-        shutil.rmtree(stage, ignore_errors=True)
-    with open(done, "w") as f:
-        f.write(version)
-    return land
+    shutil.rmtree(stage)
 
 
 def _landing(
@@ -379,8 +354,10 @@ def _landing(
     src = table(spark, sf_dir, family.table).select(
         *family.columns, F.expr(family.chunk).alias("__chunk")
     )
-    land = _ensure_chunk_landing(
-        _land_dir(sf_dir, family.land), src, family.n_chunks, family.version
+    land = landing(
+        spark, sf_dir, family.land, [family.table],
+        lambda path: _land_chunks(src, family.n_chunks, path),
+        family.version,
     )
     return land, src.drop("__chunk").schema
 
@@ -402,23 +379,11 @@ def _chunk_groups(land: str, n_chunks: int) -> list[list[str]]:
     return [groups[k] for k in sorted(groups)]
 
 
-def _primed_marker_ok(primed_path: str, identity: str) -> bool:
-    """True when the prime marker exists AND records exactly this
-    prior-chunk identity — a marker left over from a previous landing
-    (different file list) must NOT validate the cached state, or stale
-    prior state would be merged with a new landing's last chunk."""
-    try:
-        with open(primed_path) as f:
-            return f.read() == identity
-    except OSError:
-        return False
-
-
 def _replay(spark: SparkSession, sf_dir: str, family: Family) -> DataFrame:
     """Fold every landed chunk through an availableNow ``foreachBatch``
     stream from empty state; finish the last committed version."""
     land, schema = _landing(spark, sf_dir, family)
-    state_dir = land + "_state"
+    state_dir = os.path.join(land, "_state")
     shutil.rmtree(state_dir, ignore_errors=True)
     (
         spark.readStream.schema(schema)
@@ -437,22 +402,18 @@ def _replay(spark: SparkSession, sf_dir: str, family: Family) -> DataFrame:
 def _apply(spark: SparkSession, sf_dir: str, family: Family) -> DataFrame:
     """One delta-only refresh: merge the last landed chunk's partials
     into the state of every earlier chunk. That prior state is a cached
-    fixture, primed once per landing; its ``_PRIMED`` marker records
-    WHICH prior files it covers, so a rebuilt landing re-primes instead
-    of reusing stale state."""
+    fixture inside the landing, primed once: its location names the
+    landing version, so a rebuilt landing starts without it, and
+    Spark's ``_SUCCESS`` marks a complete prime."""
     land, _ = _landing(spark, sf_dir, family)
     *earlier, last = _chunk_groups(land, family.n_chunks)
-    prior = [f for g in earlier for f in g]
-    state_dir = land + "_prior_state"
-    primed = os.path.join(state_dir, "_PRIMED")
-    identity = "\n".join(prior)
-    if not _primed_marker_ok(primed, identity):
-        shutil.rmtree(state_dir, ignore_errors=True)
+    state_dir = os.path.join(land, "_prior_state")
+    if not os.path.exists(os.path.join(state_dir, "_SUCCESS")):
         family.partial(
-            spark.read.parquet(*[os.path.join(land, f) for f in prior])
+            spark.read.parquet(
+                *[os.path.join(land, f) for g in earlier for f in g]
+            )
         ).coalesce(1).write.mode("overwrite").parquet(state_dir)
-        with open(primed, "w") as f:
-            f.write(identity)
     part = family.partial(
         spark.read.parquet(*[os.path.join(land, f) for f in last])
     )

@@ -401,13 +401,14 @@ def test_partition_pruning_reads_only_selected_partition(spark):
     resolve at the DIRECTORY level (PartitionFilters), leaving no
     pushed/post-scan data filter on event_type, and the scan's input
     files must all come from the selected partition's directory."""
-    from etl_verkada_spark.operators.scans import (
-        pruned_land_path,
-        scan_partition_pruned,
-    )
+    import os
+
+    from etl_verkada_spark.operators.scans import scan_partition_pruned
 
     sf = "/root/testdata/sf0.001"
     df = scan_partition_pruned(spark, sf)
+    # <landing>/event_type=<value>/<part file>
+    land = os.path.dirname(os.path.dirname(df.inputFiles()[0]))
     df.write.mode("overwrite").format("noop").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the predicate is a PartitionFilter (directory-level)...
@@ -420,7 +421,7 @@ def test_partition_pruning_reads_only_selected_partition(spark):
     # input_file_name() reflects post-pruning files
     read_files = {
         r["f"]
-        for r in spark.read.parquet(pruned_land_path(sf))
+        for r in spark.read.parquet(land)
         .filter("event_type = 'purchase'")
         .select(F.input_file_name().alias("f"))
         .distinct()
@@ -1132,15 +1133,69 @@ def test_manifest_scan_snapshot_isolation(spark):
 def test_land_dir_is_keyed_on_the_data_dirs_real_path(tmp_path):
     """Two data dirs with one basename land apart; one dir always lands
     in the same place."""
-    from etl_verkada_spark.operators.scans import _land_dir
+    from etl_verkada_spark.catalog import land_dir
 
     a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
     a.mkdir(parents=True)
     b.mkdir(parents=True)
-    assert _land_dir(str(a), "csv") != _land_dir(str(b), "csv")
-    assert _land_dir(str(a), "csv") == _land_dir(str(a), "csv")
-    assert _land_dir(str(a), "csv") == _land_dir(f"{a}/", "csv")
-    assert "/csv_sf-" in _land_dir(str(a), "csv")
+    assert land_dir(str(a), "csv") != land_dir(str(b), "csv")
+    assert land_dir(str(a), "csv") == land_dir(str(a), "csv")
+    assert land_dir(str(a), "csv") == land_dir(f"{a}/", "csv")
+    assert "/csv_sf-" in land_dir(str(a), "csv")
+
+
+#: one registered callable per land-once fixture, with its landing name
+LANDINGS = {
+    "scd2_apply": "scd2_hist",
+    "stream_mv_apply": "mv_chunks",
+    "stream_drift_apply": "drift_chunks",
+    "stream_topk_apply": "topk_chunks",
+    "maintain_compact": "compact",
+    "scan_partition_pruned": "events_by_type",
+}
+
+
+def test_landings_rebuild_after_source_rewrite_in_place(spark, tmp_path):
+    """A landed fixture follows its source files: after events and
+    orders are overwritten in place with a larger scale's files, every
+    land-once callable still matches its oracle over the new data."""
+    import os
+    import shutil
+
+    import duckdb
+
+    from etl_verkada_spark.catalog import land_dir
+    from etl_verkada_spark.compare import compare_frames
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{SF_SMALL}/{t}.parquet", sf / f"{t}.parquet")
+    registry = build_registry()
+
+    def check(phase):
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        problems = {
+            name: compare_frames(
+                registry[name].fn(spark, str(sf)).toPandas(),
+                con.execute(registry[name].oracle).df(),
+            )
+            for name in LANDINGS
+        }
+        con.close()
+        assert not any(problems.values()), (phase, problems)
+
+    larger = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+    try:
+        check("before")
+        for t in ("events", "orders"):
+            shutil.copyfile(f"{larger}/{t}.parquet", sf / f"{t}.parquet")
+        check("after the rewrite")
+    finally:
+        for land in LANDINGS.values():
+            shutil.rmtree(land_dir(str(sf), land), ignore_errors=True)
 
 
 def test_manifest_log_head_sorts_numerically(spark):
@@ -1150,12 +1205,11 @@ def test_manifest_log_head_sorts_numerically(spark):
     import json
     import os
 
-    from etl_verkada_spark.operators.scans import (
-        _land_dir, scan_manifest_log,
-    )
+    from etl_verkada_spark.catalog import land_dir
+    from etl_verkada_spark.operators.scans import scan_manifest_log
 
     scan_manifest_log(spark, SF_SMALL).count()  # lay down the log
-    root = _land_dir(SF_SMALL, "manifest_log")
+    root = land_dir(SF_SMALL, "manifest_log")
     with open(f"{root}/_log/manifest_v10.json", "w") as f:
         json.dump({"version": 10, "files": [f"{root}/slice=2"]}, f)
     try:

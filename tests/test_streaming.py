@@ -437,9 +437,8 @@ def test_mv_refresh_folds_multiple_microbatches(spark):
 
     from pyspark.sql import functions as F
 
-    from etl_verkada_spark.catalog import table as cat_table
+    from etl_verkada_spark.catalog import land_dir, table as cat_table
     from etl_verkada_spark.operators.aggregates import scaled_long, unscale
-    from etl_verkada_spark.operators.scans import _land_dir
     from etl_verkada_spark.streaming.upsert import (
         MV_CHUNKS, stream_mv_refresh,
     )
@@ -453,7 +452,7 @@ def test_mv_refresh_folds_multiple_microbatches(spark):
     # multi-file chunks: each chunk group must hold >1 part file so the
     # per-trigger scan parallelizes (r12, SCALE.md §27a — a regression
     # to coalesce(1) single-file chunks would fail here)
-    files = glob.glob(_land_dir(SF_SMALL, "mv_chunks") + "/chunk_*.parquet")
+    files = glob.glob(land_dir(SF_SMALL, "mv_chunks") + "/*/chunk_*.parquet")
     assert len(files) >= MV_CHUNKS
     import os
     from collections import Counter
@@ -536,7 +535,7 @@ def test_stream_drift_equals_batch_audit(spark):
     import glob
 
     from etl_verkada_spark.operators.quality import dq_drift
-    from etl_verkada_spark.operators.scans import _land_dir
+    from etl_verkada_spark.catalog import land_dir
     from etl_verkada_spark.streaming.upsert import DRIFT_CHUNKS, stream_drift
     from .conftest import SF_SMALL
 
@@ -546,7 +545,7 @@ def test_stream_drift_equals_batch_audit(spark):
     }
     # deterministic multi-file chunks: chunk_NN_pNN.parquet (r12)
     files = glob.glob(
-        _land_dir(SF_SMALL, "drift_chunks") + "/chunk_*.parquet"
+        land_dir(SF_SMALL, "drift_chunks") + "/*/chunk_*.parquet"
     )
     assert len(files) >= DRIFT_CHUNKS
     want = {
@@ -734,65 +733,6 @@ def test_topk_apply_equals_full_ranking(spark, replay, apply):
         for t, rnk, _, _ in full:
             per[t] = max(per.get(t, 0), rnk)
         assert all(v <= TOPK_K for v in per.values())
-
-
-@pytest.mark.parametrize(
-    "replay, apply, land_name, poison, schema",
-    [
-        (
-            "stream_topk", "stream_topk_apply", "topk_chunks",
-            ("poison", 1, 10**15, 1),
-            "event_type string, event_id long, v_c long, rnk int",
-        ),
-        (
-            "stream_mv_refresh", "stream_mv_apply", "mv_chunks",
-            ("poison", 1, 10**15),
-            "event_type string, n long, c long",
-        ),
-        (
-            "stream_drift", "stream_drift_apply", "drift_chunks",
-            ("poison", "x", 1, 1),
-            "feature string, category string, cnt_ref long, cnt_cur long",
-        ),
-    ],
-    ids=["topk", "mv", "drift"],
-)
-def test_stale_prime_marker_forces_reprime(
-    spark, tmp_path, replay, apply, land_name, poison, schema
-):
-    """A _PRIMED marker left over from a PREVIOUS landing (different
-    prior-file list) must NOT validate the cached state — the apply
-    twin must re-prime and still match the full replay."""
-    import os
-
-    from etl_verkada_spark.operators.scans import _land_dir
-    from etl_verkada_spark.streaming import upsert
-
-    replay, apply = getattr(upsert, replay), getattr(upsert, apply)
-    # build landing + prime once
-    baseline = sorted(map(tuple, apply(spark, SF_SMALL).collect()))
-    land = _land_dir(SF_SMALL, land_name)
-    primed = os.path.join(land + "_prior_state", "_PRIMED")
-    assert os.path.exists(primed)
-    # corrupt the marker to simulate a marker from an older landing
-    with open(primed, "w") as f:
-        f.write("chunk_99_p00.parquet\nchunk_99_p01.parquet")
-    # poison the cached state so ONLY a re-prime can produce the right
-    # answer (if the stale marker were trusted, the wrong parquet
-    # below would leak into the result)
-    state_dir = land + "_prior_state"
-    spark.createDataFrame([poison], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(state_dir)
-    again = sorted(map(tuple, apply(spark, SF_SMALL).collect()))
-    assert again == baseline
-    assert not any(r[0] == "poison" for r in again)
-    # and the re-written marker now records the real prior-file list
-    with open(primed) as f:
-        assert "chunk_99" not in f.read()
-    # full replay still agrees
-    full = sorted(map(tuple, replay(spark, SF_SMALL).collect()))
-    assert full == again
 
 
 def test_drift_and_topk_folds_recover_from_mid_write_crash(spark, tmp_path):
